@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 /** Scale bench for the embedding/ANN tier: args = sfDir [runs].
   *
@@ -16,8 +15,7 @@ object AnnScaleBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val runs = if (args.length > 1) args(1).toInt else 3
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32).getOrCreate()
+    val spark = graft.jobs.JobSession.create("graft ann scale bench")
     val vecs = graft.sources.Tables.embeddings(spark, sfDir)
       .repartition(32).localCheckpoint(true)
     println(s"corpus rows=${vecs.count()} sfDir=$sfDir runs=$runs")

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.jobs.JobSession
+
 /** Per-round benchmark main. Runs every catalog query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line for the driver.
   *
@@ -72,6 +74,18 @@ object Bench {
   def rDs(v: Double): String =
     if (v < 0) "-1" else math.round(v * 10).toString
 
+  /** Overridden runs self-identify (ADVICE r16): a bench run produced under
+    * `SPARK_GRAFT_EXTRA_CONF` carries the overrides [[JobSession]] applied,
+    * so an A/B number can never be mistaken for (or passed off as) a
+    * clean-session result. Empty when unset — the driver's line is
+    * byte-identical to prior rounds'. */
+  private def extraConfField: String =
+    if (JobSession.extraConf.isEmpty) ""
+    else {
+      val v = JobSession.extraConf.map { case (k, v) => s"$k=$v" }.mkString(",")
+      s""","extra_conf":"${v.replace("\"", "'")}""""
+    }
+
   /** The driver-tail JSON line, extracted from main so the char budget is
     * SPEC-PINNED at simulated future catalog sizes instead of discovered
     * the round a step bursts (BenchLineSpec pins 200 queries inside the
@@ -128,16 +142,7 @@ object Bench {
           if (calStart >= 0 && calEnd >= 0)
             s""","cal_start":${r2(calStart)},"cal_end":${r2(calEnd)}"""
           else ""
-        // overridden runs self-identify (ADVICE r16): a bench run produced
-        // under SPARK_GRAFT_EXTRA_CONF carries the overrides in its line,
-        // so an A/B number can never be mistaken for (or passed off as) a
-        // clean-session result. Absent when unset — the driver's line is
-        // byte-identical to prior rounds'.
-        val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF")
-          .filter(_.nonEmpty)
-          .map(v => s""","extra_conf":"${v.replace("\"", "'")}"""")
-          .getOrElse("")
-        s""","store_cold_builds":$coldBuilds$load$cal$extra"""
+        s""","store_cold_builds":$coldBuilds$load$cal$extraConfField"""
       }
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","cpu_total":${r1(cpuTotal)}$prov,"$queriesField":$qs$errField,"sf":"$sfName"}"""
     }
@@ -177,40 +182,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ContextCleaner frees broadcast/shuffle state only after a driver GC
-      // collects the weak references; the default periodicGC interval (30 min)
-      // exceeds the whole bench, so 52 queries x 3 runs of broadcasts pile up
-      // until the heaviest query hits memory churn (r4: q49 grew 10->20->42 s
-      // across its own runs; stable at ~5 s in isolation).
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      // the SQL status store retains metrics for every execution (default
-      // 1000) even with the UI off — ~69 queries x 3 runs x subqueries keeps
-      // thousands of execution graphs on the driver heap by the late
-      // alphabet (r5: q46/q49 ran 2x their isolated time in the full bench)
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .getOrCreate()
-    // local A/B experimentation hook (round-16): optional comma-separated
-    // k=v conf overrides, applied to the RUNTIME conf only. Unset (the
-    // driver's path) this is a no-op and the session above is bit-identical
-    // to every prior round's; set, it lets a conf hypothesis ride the
-    // bench's own warmup + median-of-N methodology instead of a noisy
-    // single-shot probe. Values must not contain commas.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(',').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) => spark.conf.set(k.trim, v.trim)
-        case _ => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_EXTRA_CONF entry '$kv' is not key=value")
-      }
-    })
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = JobSession.create("graft bench")
+    val cpus = spark.sparkContext.defaultParallelism
     // Untimed warmup: initialize codegen, the vectorized parquet reader, and
     // shuffle machinery so the first timed query measures the query, not JVM
     // startup (round-1 q01 carried ~5 s of warmup).
@@ -222,8 +195,8 @@ object Bench {
     // epoch calibration, start side: one untimed run compiles the probe's
     // codegen so both recorded values are steady-state and comparable
     val calStart = try {
-      calibrationWall(spark, cpus.toInt)
-      calibrationMedian(spark, cpus.toInt)
+      calibrationWall(spark, cpus)
+      calibrationMedian(spark, cpus)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] calibration probe failed: $e"); -1.0 }
     // load-insensitive cost accounting: task CPU time per query, summed by
@@ -248,7 +221,7 @@ object Bench {
       .map { case (name, fn) =>
       // execution shape {jobs, stages} captured on the FIRST run only: the
       // counts are plan-determined and identical across runs, and the
-      // listener drain (~300 ms) happens outside the timed region
+      // listener drain happens outside the timed region
       var shape: Option[Instrument.Counts] = None
       val samples = (1 to runs).flatMap { runIdx =>
         // operators that cache internally (e.g. GridNearestJoin) must not
@@ -264,14 +237,14 @@ object Bench {
         System.gc()
         Thread.sleep(250)
         def timedRun(): Option[(Double, Double)] = {
-          // the prior run's settle() + the 250 ms sleep above drained the
-          // listener bus, so a plain read is the run's true CPU baseline
-          val c0 = cpu.value
+          // drained before t0: the run's true CPU baseline, also after a
+          // failed run that never reached its settle()
+          val c0 = cpu.settle()
           val t0 = System.nanoTime()
           try {
             fn(spark, sfDir).write.format("noop").mode("overwrite").save()
             val wall = (System.nanoTime() - t0) / 1e9
-            // settle AFTER wall is captured: the bounded bus drain charges
+            // settle AFTER wall is captured: the bus drain charges
             // nothing to the timed region
             Some((wall, (cpu.settle() - c0) / 1e9))
           } catch { case e: Throwable =>
@@ -304,7 +277,7 @@ object Bench {
     }
     // epoch calibration, end side: same probe, codegen already warm from
     // the start side — start/end bracket the whole catalog run
-    val calEnd = try calibrationMedian(spark, cpus.toInt)
+    val calEnd = try calibrationMedian(spark, cpus)
       catch { case e: Throwable =>
         System.err.println(s"[bench] calibration probe failed: $e"); -1.0 }
     // The driver parses ONE JSON line from the tail (last ~2000 chars) of the
@@ -333,10 +306,7 @@ object Bench {
         "\"" + k + "\":{\"median\":" + r3(v) + ",\"cpu\":" + r3(cpuV) +
           ",\"runs\":" + ts.map(r3).mkString("[", ",", "]") + sh + "}"
       }.mkString("{", ",", "}")
-      val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").filter(_.nonEmpty)
-        .map(v => s""","extra_conf":"${v.replace("\"", "'")}"""")
-        .getOrElse("")
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","cpu_total":${r3(cpuTotal)},"cal_start":${r3(calStart)},"cal_end":${r3(calEnd)}$extra,"queries":$qs,"errors":$errs,"runs_per_query":$runs,"agg":"median","sf":"$sfName"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","cpu_total":${r3(cpuTotal)},"cal_start":${r3(calStart)},"cal_end":${r3(calEnd)}$extraConfField,"queries":$qs,"errors":$errs,"runs_per_query":$runs,"agg":"median","sf":"$sfName"}"""
     }
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
     try {

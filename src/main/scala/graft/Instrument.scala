@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.spark.graft.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -25,11 +26,16 @@ object Instrument {
   final case class Counts(jobs: Int, stages: Int)
 
   /** Run `thunk`, returning its result plus the jobs/stages the Spark
-    * scheduler submitted while it ran. The listener bus is asynchronous, so
-    * after the block completes we poll until the counters stop moving
-    * (bounded) before detaching. Counting assumes no concurrent Spark
-    * actions from other threads — true in Bench and the sequential test
-    * JVM.
+    * scheduler submitted while it ran. The listener bus is drained before
+    * the listener attaches and again after the thunk returns, so the count
+    * is exact: every job submitted between the two drains, no job before.
+    *
+    * What is attributed: every job the session's context submits while
+    * the thunk runs. Jobs from threads the thunk itself starts and joins
+    * are counted — q75's three concurrent mart threads are all inside its
+    * count. Actions that other threads start concurrently, from outside
+    * the thunk, are counted too and cannot be told apart; callers run one
+    * thunk at a time (Bench and the sequential test JVM do).
     */
   def countStages[T](spark: SparkSession)(thunk: => T): (T, Counts) = {
     val jobs = new AtomicInteger
@@ -43,19 +49,12 @@ object Instrument {
       }
     }
     val sc = spark.sparkContext
+    ListenerBus.drain(sc)
     sc.addSparkListener(listener)
     val result =
       try thunk
       finally {
-        var last = (-1, -1)
-        var cur = (jobs.get, stages.get)
-        var waitedMs = 0
-        while (cur != last && waitedMs < 5000) {
-          Thread.sleep(150)
-          waitedMs += 150
-          last = cur
-          cur = (jobs.get, stages.get)
-        }
+        ListenerBus.drain(sc)
         sc.removeSparkListener(listener)
       }
     (result, Counts(jobs.get, stages.get))
@@ -64,8 +63,10 @@ object Instrument {
   /** Cumulative executor-CPU accounting: a long-lived listener summing
     * `executorCpuTime` (+ deserialize CPU) over every finished task, in
     * nanoseconds. Deltas between two reads attribute CPU to whatever ran
-    * in between — valid because Bench executes queries strictly
-    * sequentially.
+    * in between. As in [[countStages]]: tasks of jobs submitted from
+    * threads the measured code starts (q75's mart threads) are included,
+    * and tasks of actions that other threads run concurrently cannot be
+    * separated — Bench executes queries strictly sequentially.
     *
     * Why CPU and not wall: wall time swings ±2x with machine load on a
     * shared box (round 7: q49 read 9.6 s under driver load vs 4.2 s idle,
@@ -84,9 +85,8 @@ object Instrument {
     * similar machine occupancy, and treat jobs/stages as the only truly
     * environment-free signal.
     *
-    * The listener bus is asynchronous: `settle()` polls until the counter
-    * stops moving (bounded) so a read taken right after an action returns
-    * does not miss late task-end events.
+    * The listener bus is asynchronous: `settle()` drains it so a read taken
+    * right after an action returns does not miss late task-end events.
     */
   final class CpuAccum private[Instrument] (sc: org.apache.spark.SparkContext) {
     private val cpuNs = new AtomicLong
@@ -101,22 +101,10 @@ object Instrument {
     }
     sc.addSparkListener(listener)
 
-    /** Current total without waiting for the bus to drain — only safe when
-      * nothing ran since the last settle(). */
-    def value: Long = cpuNs.get
-
-    /** Wait (bounded) for the async listener bus to drain, then read. */
-    def settle(maxMs: Int = 3000): Long = {
-      var last = -1L
-      var cur = cpuNs.get
-      var waited = 0
-      while (cur != last && waited < maxMs) {
-        Thread.sleep(40)
-        waited += 40
-        last = cur
-        cur = cpuNs.get
-      }
-      cur
+    /** Drain the listener bus, then read. */
+    def settle(): Long = {
+      ListenerBus.drain(sc)
+      cpuNs.get
     }
 
     def detach(): Unit = sc.removeSparkListener(listener)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,7 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter for local
     // iteration (the driver always passes exactly two args)
     val only = args.lift(2).map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same driver-heap guards as graft.Bench: one session runs the whole
-      // catalog, and the SQL status store's default retention (~1000
-      // executions) otherwise accumulates every query's execution graph
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.jobs.JobSession.create("graft verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

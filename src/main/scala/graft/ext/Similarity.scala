@@ -1051,11 +1051,12 @@ object Similarity {
     * the retracted permutation IS the from-scratch permutation on the
     * survivors (spec-pinned — no drift, no fold-time-model argument
     * needed, the one unfold in the family with no `At` variant).
-    * Precondition: the batch is part of the state's corpus — energies
-    * are Σx² ≥ 0, so retracting foreign rows shows up as a negative
-    * per-dim energy in the output, which [[permutationFromState]]'s
-    * ranking would still consume; callers retracting untrusted batches
-    * should assert `min(energy) >= 0` on the result. */
+    * Refuses foreign rows loudly, like [[kmeansUnfold]]/[[pqUnfold]]:
+    * energies are Σx² ≥ 0 and counts ≥ 0, so a batch that is not part of
+    * the state's corpus can drive a dim's `energy` or `n` negative, and
+    * the output then fails at execution (`raise_error`) instead of
+    * feeding [[permutationFromState]] a corrupt ranking. The guard is a
+    * filter, so it holds whichever columns a consumer projects. */
   def energyUnfold(state: DataFrame, batch: DataFrame, id: String,
                    vec: String, scale: Double = DefaultScale): DataFrame =
     state.select(col("dim"), col("energy"), col("n"))
@@ -1064,6 +1065,12 @@ object Similarity {
           (-col("n")).as("n")))
       .groupBy("dim")
       .agg(sum(col("energy")).as("energy"), sum(col("n")).as("n"))
+      .filter(when(col("energy") < 0 || col("n") < 0, raise_error(concat(
+          lit("energyUnfold: dim "), col("dim").cast("string"),
+          lit(" went negative (energy "), col("energy").cast("string"),
+          lit(", n "), col("n").cast("string"),
+          lit("): the batch is not part of this state's corpus"))))
+        .otherwise(lit(true)))
 
   /** The [[energyPermutation]] deal from a persisted/folded
     * [[energyState]] frame: rank dims energy-desc (ties to the lower

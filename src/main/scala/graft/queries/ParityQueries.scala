@@ -64,15 +64,15 @@ object ParityQueries extends Catalog {
         .otherwise(lit(-170) + cityIdx * 211 % 340 + lit(0.05)).as("lon"))
   }
 
-  /** The reference's 25-city geo dimension, nation-derived (same formula as
-    * GeoQueries.nationCities).
-    */
-  /** probe-only accessors for [[graft.tools.ZoneTierProbe]] — the derived
-    * frames stay private to the catalog otherwise */
+  /** Accessors for [[graft.tools.ZoneTierProbe]] and the perfbench harness,
+    * which builds q75's lake from these frames. */
   def refEventsFullForProbe(s: SparkSession, d: String): DataFrame =
     refEventsFull(s, d)
   def refGeoForProbe(s: SparkSession, d: String): DataFrame = refGeo(s, d)
 
+  /** The reference's 25-city geo dimension, nation-derived (same formula as
+    * GeoQueries.nationCities).
+    */
   private def refGeo(s: SparkSession, d: String): DataFrame =
     Tables.nation(s, d).select(
       col("n_nationkey").as("id"),
@@ -522,8 +522,7 @@ object ParityQueries extends Catalog {
         .write.partitionBy("date").mode("overwrite")
         .parquet(s"$base/events")
       refGeo(s, d).write.mode("overwrite").parquet(s"$base/geo")
-      val session = graft.jobs.JobSession.create("graft pipeline e2e")
-      graft.jobs.Pipeline.runArgs(session, Array(
+      graft.jobs.Pipeline.runArgs(s, Array(
         s"$base/events", s"$base/geo", s"$base/marts",
         "2024-01-20", "2000.0", "2024-02-01 00:00:00"))
       // explicit schema, twice over: (a) zone_id is a partition DIR on disk
@@ -561,8 +560,7 @@ object ParityQueries extends Catalog {
         .write.partitionBy("date").mode("overwrite")
         .parquet(s"$base/events")
       refGeo(s, d).write.mode("overwrite").parquet(s"$base/geo")
-      val session = graft.jobs.JobSession.create("graft pipeline grid e2e")
-      graft.jobs.Pipeline.runArgs(session, Array(
+      graft.jobs.Pipeline.runArgs(s, Array(
         s"$base/events", s"$base/geo", s"$base/marts",
         "2024-01-20", "2000.0", "2024-02-01 00:00:00", "auto"))
       val recSchema = org.apache.spark.sql.types.StructType.fromDDL(

@@ -77,7 +77,7 @@ object Tables {
     * still parallelizes; q84's literal-centroid projection keeps the
     * plain scan outright.
     */
-  /** CONTRACT (`hashKey`): the hash mode's balance claim assumes the key
+  /** CONTRACT (`hashKey`): the hash exchange's balance claim assumes the key
     * column is unique (or near-unique) — a skewed key would produce a
     * silently hot exchange, the opposite of what the widen exists for.
     * Callers wiring a NEW table through the widen must pass its id column
@@ -88,28 +88,22 @@ object Tables {
     */
   def wide(df: DataFrame, minBytes: Long = 0L,
            hashKey: String = null): DataFrame = {
-    // SPARK_GRAFT_WIDEN is a bench-tooling knob for A/B-ing the widen
-    // mechanics (round-10 verdict: the widen exchange REPLAYS once per
-    // consuming subtree, and round-robin repartition locally sorts every
-    // row — text columns included — before dealing, so a frame feeding
-    // ~10 subtrees pays ~10 sorts+shuffles of the corpus). Modes:
-    //   off     — plain scan (no widen)
-    //   rr      — round-robin exchange (rounds 9-10 shipped behavior)
-    //   hash    — hash exchange on the first column (no pre-sort; ids are
-    //             unique in every widened table, so balance is equivalent)
-    //   pin     — rr + Caches.pin (exchange runs once, subtrees share it)
-    //   hashpin — hash + Caches.pin
-    // Round-11 default: HASH. Pinning globally looked attractive (one
-    // materialization for multi-subtree consumers) but inflates the
+    // SPARK_GRAFT_WIDEN (or -Dgraft.widen) is on or off, default on. Off
+    // returns the plain scan: the reference WidenModeSpec compares the
+    // widened results against. Hash is the only widened shape
+    // (round 11): round-robin locally sorts every row — text columns
+    // included — before dealing, so a frame feeding ~10 subtrees paid ~10
+    // sorts+shuffles of the corpus, and a global pin inflates the
     // ITERATIVE queries' job counts ~1.6× (q54/q59: 36→62 jobs — the
     // cached relation defeats AQE's job pipelining across CC rounds), so
-    // the pin is applied per-site instead (Caches.pin around the widened
+    // pins are applied per-site instead (Caches.pin around the widened
     // read at q60/q74/q95/q101, where the A/B showed it winning).
-    // sys.props first so WidenModeSpec can flip modes inside one JVM
-    // (sys.env is a process-start snapshot); the env var remains the
-    // bench-tooling interface
+    // sys.props first so WidenModeSpec can flip it inside one JVM (sys.env
+    // is a process-start snapshot)
     val mode = sys.props.get("graft.widen")
-      .orElse(sys.env.get("SPARK_GRAFT_WIDEN")).getOrElse("hash")
+      .orElse(sys.env.get("SPARK_GRAFT_WIDEN")).getOrElse("on")
+    require(mode == "on" || mode == "off",
+      s"SPARK_GRAFT_WIDEN=$mode: expected on or off")
     if (mode == "off") return df
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (bytes >= minBytes && bytes < (BigInt(1) << 30)) {
@@ -124,13 +118,8 @@ object Tables {
       // sf1+ single-file band (the widen's reason to exist) is unchanged,
       // and the ≥1 GiB pass-through above makes the cap irrelevant at
       // lake scale.
-      val n = boundedWidth(df.sparkSession, bytes)
-      val widened =
-        if (mode == "hash" || mode == "hashpin")
-          df.repartition(n, col(Option(hashKey).getOrElse(df.columns.head)))
-        else df.repartition(n)
-      if (mode == "pin" || mode == "hashpin") graft.ext.Caches.pin(widened)
-      else widened
+      df.repartition(boundedWidth(df.sparkSession, bytes),
+        col(Option(hashKey).getOrElse(df.columns.head)))
     } else df
   }
 

@@ -1,10 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Instrument
 import graft.ext.Dedup
+import graft.jobs.JobSession
 import graft.operators.ConnectedComponents
 import graft.sources.Tables
 
@@ -34,20 +35,13 @@ import graft.sources.Tables
   * Prints one JSON line per path plus a touched-fraction line; paste into
   * BENCH_SF1.json round{R}_updates.
   *
-  * Usage: scripts/run.sh graft.tools.CcFoldProbe <sfDir> [cpus]
+  * Usage: scripts/run.sh graft.tools.CcFoldProbe <sfDir>
   */
 object CcFoldProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = args.lift(1).getOrElse("32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = JobSession.create("graft cc fold probe")
 
     // q187's exact split and edge derivation
     val docs = Tables.documents(spark, sfDir)

@@ -1,9 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ext.Similarity
+import graft.jobs.JobSession
 import graft.sources.Tables
 
 /** One-off measurement main behind the chained-fold REFIT POLICY (round-15
@@ -30,7 +31,7 @@ import graft.sources.Tables
   * BENCH_SF1.json round{R}_updates.
   *
   * Usage: scripts/run.sh graft.tools.FoldDriftProbe <sfDir> [k] [iters]
-  *   [batchCounts=1,2,4,8] [cpus]
+  *   [batchCounts=1,2,4,8]
   */
 object FoldDriftProbe {
 
@@ -40,14 +41,7 @@ object FoldDriftProbe {
     val iters = args.lift(2).map(_.toInt).getOrElse(2)
     val batchCounts = args.lift(3).getOrElse("1,2,4,8")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = args.lift(4).getOrElse("16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = JobSession.create("graft fold drift probe")
 
     val all = Tables.embeddings(spark, sfDir)
     val base = all.filter(col("vec_id") % 10 =!= 9)

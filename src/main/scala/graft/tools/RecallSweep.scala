@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.Similarity
+import graft.jobs.JobSession
 import graft.sources.Tables
 
 /** One-off diagnostic: mean recall@10 of the ANN tiers (IVF / plain PQ /
@@ -20,13 +21,7 @@ import graft.sources.Tables
   */
 object RecallSweep {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = JobSession.create("graft recall sweep")
     val d = args(0)
     if (args.length > 1 && args(1) == "tf") { tfBitBudget(spark, d); spark.stop(); return }
     val vecs = Tables.embeddings(spark, d)

@@ -2,8 +2,10 @@ package graft.tools
 
 import scala.collection.concurrent.TrieMap
 
+import org.apache.spark.graft.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+
+import graft.jobs.JobSession
 
 /** One-off diagnostic main: run a single catalog query and print a
   * per-stage cost table — wall, Σ task time, max task time (the skew
@@ -11,7 +13,11 @@ import org.apache.spark.sql.SparkSession
   * time. This answers "WHICH stage is the 123 seconds" directly from the
   * scheduler instead of guessing from the plan.
   *
-  * Usage: scripts/run.sh graft.tools.StageProbe <sfDir> <queryName> [cpus]
+  * Usage: scripts/run.sh graft.tools.StageProbe <sfDir> <queryName>
+  *        scripts/run.sh graft.tools.StageProbe <sfDir> --sweep [nameRegex]
+  * Cores: `SPARK_GRAFT_CPUS`; conf overrides, e.g.
+  * SPARK_GRAFT_EXTRA_CONF="spark.sql.adaptive.advisoryPartitionSizeInBytes=8m"
+  * ([[graft.jobs.JobSession]]).
   */
 object StageProbe {
   private final case class StageAgg(
@@ -28,25 +34,7 @@ object StageProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val qname = args(1)
-    val cpus = if (args.length > 2) args(2) else "32"
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // per-probe conf overrides, e.g.
-    // SPARK_GRAFT_EXTRA_CONF="spark.sql.adaptive.advisoryPartitionSizeInBytes=8m"
-    // (comma-separated k=v entries; conf VALUES must not contain commas —
-    // none of the probe-relevant Spark confs do)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(',').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) => builder.config(k.trim, v.trim)
-        case _ => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_EXTRA_CONF entry '$kv' is not key=value")
-      }
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = JobSession.create("graft stage probe")
 
     val stages = TrieMap.empty[Int, StageAgg]
     val listener = new SparkListener {
@@ -86,8 +74,8 @@ object StageProbe {
       // real fraction of the query wall). AQE cannot see join fan-out
       // (it sizes by shuffle INPUT bytes), so this is the detector for
       // the q134/q75 class of serialized-expansion stages.
-      // optional 4th arg: regex filter over query names (chunked sweeps)
-      val filter = if (args.length > 3) args(3).r else ".*".r
+      // optional 3rd arg: regex filter over query names (chunked sweeps)
+      val filter = if (args.length > 2) args(2).r else ".*".r
       val names = graft.SparkEntry.queries.keys.toSeq.sorted
         .filter(n => filter.findFirstIn(n).isDefined)
       println("query,wall_s,worst_stage,stage_wall_s,max_task_s," +
@@ -101,7 +89,7 @@ object StageProbe {
         try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           val wall = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(500)
+          ListenerBus.drain(spark.sparkContext)
           // consider stages that cost ≥ 10% of the query wall; report the
           // one whose max task dominates its own stage wall the most
           val mat = stages.toSeq.filter(_._2.wallMs >= wall * 100)
@@ -129,7 +117,7 @@ object StageProbe {
     val t0 = System.nanoTime()
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     val wall = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(1000) // drain the async listener bus
+    ListenerBus.drain(spark.sparkContext)
 
     println(f"query=$qname wall=$wall%.1fs  (stages by total task time)")
     println(f"${"stage"}%6s ${"wall_s"}%8s ${"task_s"}%8s ${"max_t_s"}%8s " +

@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.jobs.JobSession
 import graft.operators.Graphs
 import graft.sources.Tables
 
@@ -32,13 +33,7 @@ import graft.sources.Tables
   */
 object TriangleHubBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = JobSession.create("graft triangle hub bench")
     val d = args(0)
     val hubDeg = args.lift(1).map(_.toLong).getOrElse(20000L)
 

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off diagnostic main: print the plan-stat inputs and the resulting
   * zone-tier decision ([[graft.jobs.RecommendationJob.chooseGridZone]])
   * for the q148-shaped inputs at a given sfDir — the decision is pure
@@ -13,13 +11,7 @@ import org.apache.spark.sql.SparkSession
 object ZoneTierProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.jobs.JobSession.create("graft zone tier probe")
     val ev = graft.queries.ParityQueries.refEventsFullForProbe(spark, sfDir)
     val geo = graft.queries.ParityQueries.refGeoForProbe(spark, sfDir)
     val factBytes = ev.queryExecution.optimizedPlan.stats.sizeInBytes

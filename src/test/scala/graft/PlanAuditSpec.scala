@@ -93,6 +93,20 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
       s"unexpected BroadcastNestedLoopJoin in: ${offenders.mkString(", ")}")
   }
 
+  test("q75 runs the pipeline in the caller's session without rewriting " +
+      "its conf") {
+    // a session fetched inside a query is the caller's: rewriting its conf
+    // would run every later query here at another partition count
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try {
+      SparkEntry.queries("q75_pipeline_sink")(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
+      assert(spark.conf.get(key) === "3")
+    } finally spark.conf.set(key, prior)
+  }
+
   test("expensive-tier execution shape: stage/job counts stay bounded") {
     // Wall time carries a ±20% machine-variance band; submitted-stage
     // counts are plan-determined up to a ±2 jitter (file-listing jobs and

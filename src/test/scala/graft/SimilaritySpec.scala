@@ -642,6 +642,21 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
       takedown, "vec_id", "embedding")) === rows(s0))
   }
 
+  test("energyUnfold refuses a batch never folded in, at execution") {
+    val state = Similarity.energyState(vecs.filter($"vec_id" < 50),
+      "vec_id", "embedding")
+    // 100 foreign vectors out of a 50-vector state: every dim's n < 0
+    val foreign = vecs.filter($"vec_id" >= 100 && $"vec_id" < 200)
+    val unfolded = Similarity.energyUnfold(state, foreign, "vec_id",
+      "embedding")
+    val e = intercept[Exception](unfolded.select($"dim").collect())
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => x.getMessage +: messages(x.getCause))
+    assert(messages(e).exists(m => m != null &&
+      m.contains("energyUnfold") && m.contains("negative")),
+      s"unhelpful error: ${messages(e)}")
+  }
+
   test("assignmentDrift: planted occupancy shift fires the refit flag, an " +
       "identical batch stays at tv 0, an empty batch reports NULLs") {
     // two orthogonal-axis centroids; base splits 50/50. A batch living

@@ -3,15 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** One shared local session for all suites (getOrCreate dedups across them). */
+/** One shared local session for all suites (getOrCreate dedups across
+  * them), built by the mains' own factory at 4 cores so specs run the
+  * settings the mains run. */
 trait SparkTestBase {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.jobs.JobSession.create("graft tests", 4)
 }
 
 /** Reference-shaped fixtures (FIXTURES.md §A): messenger events with the nested
