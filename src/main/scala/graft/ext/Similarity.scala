@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -406,16 +406,12 @@ object Similarity {
     * fits billion-vector indexes in RAM) and query-vector dots are
     * approximated from m table lookups ([[pqTopK]]).
     *
-    * The fit is [[kmeansFit]]'s machinery re-based on L2 (PQ's metric —
-    * codewords minimize reconstruction error, so magnitude matters and
-    * cosine assignment would be wrong) and run for ALL m subspaces in the
-    * SAME corpus passes: seeds are the first `kc` rows in (fnv1a64(id),
-    * id) order sliced per subspace, and each Lloyd iteration is ONE scan
-    * computing every subspace's literal argmin + ONE (subspace, cell,
-    * dim)-keyed mean aggregation (m·kc·(d/m) = kc·d long rows over the
-    * exchange after map-side combine — never the corpus). Means are
-    * sign·(|Σ| div n) exact integers; empty cells keep their codeword.
-    * Codebook state is m·kc·(d/m) longs — driver-sized by construction.
+    * The fit is the Lloyd kernel ([[Words]]) under the L2 labeller, run
+    * for ALL m subspaces in the SAME corpus passes: seeds are the first
+    * `kc` rows in (fnv1a64(id), id) order sliced per subspace, and each
+    * iteration is ONE scan labelling every subspace + ONE (subspace,
+    * cell, dim) sum aggregation (kc·d long rows over the exchange after
+    * map-side combine — never the corpus). Codebook state is kc·d longs.
     *
     * Output: (subspace, cell, centroid: array<long>), subspace 0-based,
     * cell 1-based.
@@ -430,57 +426,50 @@ object Similarity {
   }
 
   private def pqFitSeq(corpus: DataFrame, id: String, vec: String, m: Int,
-                       kc: Int, iters: Int, scale: Double)
-      : Seq[(Int, Int, Array[Long])] =
+                       kc: Int, iters: Int, scale: Double): Words =
     pqFitSeqQ(prep(corpus, id, vec, "__id", scale), m, kc, iters)
 
   /** The PQ Lloyd fit over an ALREADY-QUANTIZED (__id, __qv) frame — the
     * entry point residual quantization needs (residuals are differences of
     * quantized longs, never re-quantized doubles). */
-  private def pqFitSeqQ(q: DataFrame, m: Int, kc: Int, iters: Int)
-      : Seq[(Int, Int, Array[Long])] = {
+  private def pqFitSeqQ(q: DataFrame, m: Int, kc: Int, iters: Int): Words = {
     require(m >= 1 && kc >= 1 && iters >= 0, s"bad pq params ($m, $kc, $iters)")
-    val seeds = q
-      .withColumn("__h", graft.plans.Fnv1a64Expression.fnv1a64(col("__id")))
-      .orderBy(col("__h"), col("__id")).limit(kc)
-      .select(col("__qv")).collect()
-      .map(_.getSeq[Long](0).toArray)
+    val seeds = fnvSeeds(q, kc)
     require(seeds.nonEmpty, "pqFit needs a non-empty corpus")
     val dims = seeds.head.length
     require(dims % m == 0, s"dims $dims not divisible by m=$m")
     val sub = dims / m
-    val cent0: Seq[(Int, Int, Array[Long])] = for {
+    val words0 = for {
       j <- 0 until m
-      (s, i) <- seeds.zipWithIndex
+      (s, i) <- seeds.toSeq.zipWithIndex
     } yield (j, i + 1, s.slice(j * sub, (j + 1) * sub))
-    (1 to iters).foldLeft(cent0) { (cent, _) =>
-      val byJ = cent.groupBy(_._1)
-      // one struct per subspace: (j, winning cell, subvector) — exploded so
-      // a single scan + one (j, cell, dim) aggregation serves all m fits
-      val arms = (0 until m).map { j =>
-        val sv = pqSlice(col("__qv"), j, sub)
-        struct(lit(j).as("j"),
-          pqArgminCell(sv, byJ(j).map(c => (c._2, c._3))).as("cell"),
-          sv.as("sv"))
-      }
-      val updated = q
-        .select(explode(array(arms: _*)).as("__a"))
-        .select(col("__a.j").as("__j"), col("__a.cell").as("__cell"),
-          posexplode(col("__a.sv")).as(Seq("__dim", "__x")))
-        .groupBy("__j", "__cell", "__dim")
-        .agg(sum(col("__x")).as("__s"), count(lit(1)).as("__n"))
-        .withColumn("__c",
-          when(col("__s") < 0, lit(-1L)).otherwise(lit(1L)) *
-            expr("abs(__s) div __n"))
-        .groupBy("__j", "__cell")
-        .agg(transform(
-          array_sort(collect_list(struct(col("__dim"), col("__c")))),
-          e => e.getField("__c")).as("__cv"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Long](2).toArray)
-        .toMap
-      cent.map { case (j, c, old) => (j, c, updated.getOrElse((j, c), old)) }
+    lloyd(q, words0, iters, l2Labels)
+  }
+
+  /** Per subspace j of quantized vector `v`: (j, the [[pqArgminCell]]
+    * winner under `words`' subspace-j codewords, the subvector). */
+  private def pqArms(v: Column, words: Words): Seq[(Int, Column, Column)] = {
+    val byJ = words.groupBy(_._1)
+    val sub = words.head._3.length
+    (0 until byJ.size).map { j =>
+      val sv = pqSlice(v, j, sub)
+      (j, pqArgminCell(sv, byJ(j).map(c => (c._2, c._3))), sv)
     }
+  }
+
+  /** The m-code array of quantized vector `v`, codes(j) ∈ 1..kc. */
+  private def pqCodes(v: Column, words: Words): Column =
+    array(pqArms(v, words).map(_._2): _*)
+
+  /** The Lloyd kernel's L2 labeller: every subspace's literal argmin in
+    * ONE scan, exploded to one (__j, __cell, __sv) row per subspace. */
+  private def l2Labels(q: DataFrame, words: Words): DataFrame = {
+    val arms = pqArms(col("__qv"), words).map { case (j, cell, sv) =>
+      struct(lit(j).as("j"), cell.as("cell"), sv.as("sv"))
+    }
+    q.select(explode(array(arms: _*)).as("__a"))
+      .select(col("__a.j").as("__j"), col("__a.cell").as("__cell"),
+        col("__a.sv").as("__sv"))
   }
 
   /** PQ encoding: each vector compressed to its m codebook cells, in
@@ -489,24 +478,16 @@ object Similarity {
     * Output: (id, codes: array<int>), codes(j) ∈ 1..kc. */
   def pqEncode(corpus: DataFrame, id: String, vec: String,
                codebooks: Seq[(Int, Int, Array[Long])],
-               scale: Double = DefaultScale): DataFrame = {
-    val byJ = codebooks.groupBy(_._1)
-    val m = byJ.size
-    val sub = codebooks.head._3.length
-    val q = prep(corpus, id, vec, "__id", scale)
-    val codes = array((0 until m).map(j =>
-      pqArgminCell(pqSlice(col("__qv"), j, sub),
-        byJ(j).map(c => (c._2, c._3)))): _*)
-    q.select(col("__id").as(id), codes.as("codes"))
-  }
+               scale: Double = DefaultScale): DataFrame =
+    pqEncodeQ(prep(corpus, id, vec, "__id", scale))(codebooks)
+      .withColumnRenamed("__id", id)
 
-  /** PQ model state for INCREMENTAL maintenance — [[kmeansState]]'s
-    * product-quantization twin: the fitted codebooks PLUS, per (subspace,
-    * codeword), the exact per-dimension scaled subvector sums and member
-    * count of the corpus encoded under them. Same exactness argument:
-    * sums (not lossy integer means) make [[pqFold]] reproduce the grown
-    * corpus's codeword means bit-for-bit. Store key scheme as
-    * [[kmeansState]]: base-corpus content key + (m, kc, iters). */
+  /** PQ model state for INCREMENTAL maintenance: the fitted codebooks
+    * PLUS, per (subspace, codeword), the exact per-dimension scaled
+    * subvector sums and member count of the corpus encoded under them —
+    * the Lloyd kernel's state ([[lloydState]]), which [[pqFold]]/
+    * [[pqUnfold]] update exactly. Store key scheme as [[kmeansState]]:
+    * base-corpus content key + (m, kc, iters). */
   def pqState(corpus: DataFrame, id: String, vec: String, m: Int, kc: Int,
               iters: Int, scale: Double = DefaultScale): DataFrame =
     pqStateAt(pqFitSeq(corpus, id, vec, m, kc, iters, scale),
@@ -517,121 +498,40 @@ object Similarity {
   def pqStateAt(codebooks: Seq[(Int, Int, Array[Long])], corpus: DataFrame,
                 id: String, vec: String,
                 scale: Double = DefaultScale): DataFrame =
-    pqStateAtQ(codebooks, prep(corpus, id, vec, "__id", scale))
+    lloydState(codebooks, prep(corpus, id, vec, "__id", scale), l2Labels)
 
-  /** [[pqStateAt]] over an ALREADY-QUANTIZED (__id, __qv) frame — the
-    * entry point residual-space state needs ([[ivfPqState]]: residuals
-    * are exact long differences, never re-quantized doubles). */
-  def pqStateAtQ(codebooks: Seq[(Int, Int, Array[Long])],
-                 q: DataFrame): DataFrame = {
-    val spark = q.sparkSession
-    import spark.implicits._
-    val agg = pqCellSums(codebooks, q)
-    codebooks.sortBy(c => (c._1, c._2)).map { case (j, c, v) =>
-      val (s, n) = agg.getOrElse((j, c), (new Array[Long](v.length), 0L))
-      (j, c, v.toSeq, s.toSeq, n)
-    }.toDF("subspace", "cell", "centroid", "sums", "n")
-  }
-
-  /** Per-(subspace, codeword) exact subvector sums + counts of `q` encoded
-    * under `codebooks`, collected — m·kc·sub longs of driver-sized model
-    * state (the [[pqFitSeqQ]] update block's shape, one scan for all m
-    * subspaces). */
-  private def pqCellSums(codebooks: Seq[(Int, Int, Array[Long])],
-                         q: DataFrame): Map[(Int, Int), (Array[Long], Long)] = {
-    val byJ = codebooks.groupBy(_._1)
-    val m = byJ.size
-    val sub = codebooks.head._3.length
-    val arms = (0 until m).map { j =>
-      val sv = pqSlice(col("__qv"), j, sub)
-      struct(lit(j).as("j"),
-        pqArgminCell(sv, byJ(j).map(c => (c._2, c._3))).as("cell"),
-        sv.as("sv"))
-    }
-    q.select(explode(array(arms: _*)).as("__a"))
-      .select(col("__a.j").as("__j"), col("__a.cell").as("__cell"),
-        posexplode(col("__a.sv")).as(Seq("__dim", "__x")))
-      .groupBy("__j", "__cell", "__dim")
-      .agg(sum(col("__x")).as("__s"), count(lit(1)).as("__n"))
-      .collect()
-      .groupBy(r => (r.getInt(0), r.getInt(1)))
-      .map { case (k, rows) =>
-        val s = new Array[Long](sub)
-        rows.foreach(r => s(r.getInt(2)) = r.getLong(3))
-        k -> ((s, rows.head.getLong(4)))
-      }
-  }
-
-  /** Fold a NEW BATCH into persisted PQ state — [[kmeansFold]]'s PQ twin,
-    * with the identical exactness claim per subspace: encode the batch
-    * under the state's codebooks (literal argmin, zero shuffle), add its
-    * exact sums/counts, re-derive each codeword as
-    * `sign·(|S_base + S_batch| div (n_base + n_batch))` — the update half
-    * of one per-subspace Lloyd round over base ∪ batch, exact
-    * (spec-pinned against [[pqStateAt]] on the union). Empty codewords
-    * carry. O(batch) + an m·kc·sub collect; folds chain with sequential
-    * mini-batch semantics like [[kmeansFold]]. */
+  /** Fold a NEW BATCH into persisted PQ state: encode the batch under the
+    * state's codebooks (literal argmin, zero shuffle) and add its exact
+    * sums/counts — [[lloydFold]], exact per subspace against
+    * [[pqStateAt]] on the union (spec-pinned). O(batch) + an m·kc·sub
+    * collect; folds chain with [[kmeansFold]]'s sequential mini-batch
+    * semantics. */
   def pqFold(state: DataFrame, batch: DataFrame, id: String, vec: String,
              scale: Double = DefaultScale): DataFrame =
-    pqFoldSignedQ(state, prep(batch, id, vec, "__id", scale),
+    lloydFold(state, prep(batch, id, vec, "__id", scale), l2Labels,
       sign = 1L, at = None)
 
-  /** Retract (unfold) a batch FROM persisted PQ state — [[kmeansUnfold]]'s
-    * product-quantization twin, per subspace: encode the retracted rows
-    * under the state's current codebooks (literal argmin, zero shuffle),
-    * SUBTRACT their exact subvector sums/counts, re-derive each codeword
-    * over the survivors. Exact vs [[pqStateAt]] on the survivors when the
-    * rows were encoded under these same codebooks (takedown from a fresh
-    * state — spec-pinned); to invert a mid-chain fold exactly, pass the
-    * stored fold-time codebooks to [[pqUnfoldAt]]. Refuses a foreign
-    * batch (negative codeword count) loudly, like [[kmeansUnfold]]. */
+  /** Retract (unfold) a batch FROM persisted PQ state: encode the
+    * retracted rows under the state's current codebooks and subtract
+    * their sums/counts ([[lloydFold]]). Exact vs [[pqStateAt]] on the
+    * survivors for a takedown from a fresh state (spec-pinned); to invert
+    * a mid-chain fold exactly, pass the stored fold-time codebooks to
+    * [[pqUnfoldAt]]. Refuses a foreign batch loudly. */
   def pqUnfold(state: DataFrame, batch: DataFrame, id: String, vec: String,
                scale: Double = DefaultScale): DataFrame =
-    pqFoldSignedQ(state, prep(batch, id, vec, "__id", scale),
+    lloydFold(state, prep(batch, id, vec, "__id", scale), l2Labels,
       sign = -1L, at = None)
 
   /** [[pqUnfold]] with the batch encoded under GIVEN codebooks — the exact
     * fold inverse: `pqUnfoldAt(pqFold(S, B), B, codebooksOf(S)) == S` on
     * sums and counts always, and on the full state when S is a fold
-    * output (spec-pinned; [[kmeansUnfoldAt]]'s argument per subspace). */
+    * output (spec-pinned). `atCodebooks` must have the state's (subspace,
+    * cell) keys and codeword lengths. */
   def pqUnfoldAt(state: DataFrame, batch: DataFrame, id: String,
                  vec: String, atCodebooks: Seq[(Int, Int, Array[Long])],
                  scale: Double = DefaultScale): DataFrame =
-    pqFoldSignedQ(state, prep(batch, id, vec, "__id", scale),
+    lloydFold(state, prep(batch, id, vec, "__id", scale), l2Labels,
       sign = -1L, at = Some(atCodebooks))
-
-  /** [[pqFold]]/[[pqUnfold]] over an ALREADY-QUANTIZED (__id, __qv) batch
-    * frame — the residual-space entry point ([[ivfPqFold]]/
-    * [[ivfPqUnfold]]). `at` supplies fold-time codebooks for the exact
-    * unfold inverse; None assigns under the state's current ones. */
-  private def pqFoldSignedQ(state: DataFrame, qBatch: DataFrame,
-                            sign: Long,
-                            at: Option[Seq[(Int, Int, Array[Long])]])
-      : DataFrame = {
-    val spark = state.sparkSession
-    import spark.implicits._
-    val st = state.select(col("subspace"), col("cell"), col("centroid"),
-        col("sums"), col("n")).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toArray,
-        r.getSeq[Long](3).toArray, r.getLong(4)))
-      .sortBy(r => (r._1, r._2))
-    val cbs = at.getOrElse(st.map(r => (r._1, r._2, r._3)).toSeq)
-    val bagg = pqCellSums(cbs, qBatch)
-    st.map { case (j, c, cv, s, n) =>
-      val (bs, bn) = bagg.getOrElse((j, c), (new Array[Long](cv.length), 0L))
-      val n2 = n + sign * bn
-      require(n2 >= 0,
-        s"codeword ($j, $c) count went negative ($n " +
-          s"${if (sign < 0) "-" else "+"} $bn): the batch is not part of " +
-          "this state's corpus under these codebooks — retract under the " +
-          "fold-time model (pqUnfoldAt/ivfPqUnfoldAt) or refit")
-      val s2 = s.indices.map(i => s(i) + sign * bs(i)).toArray
-      val cv2 =
-        if (n2 == 0) cv
-        else s2.map(x => (if (x < 0) -1L else 1L) * (math.abs(x) / n2))
-      (j, c, cv2.toSeq, s2.toSeq, n2)
-    }.toSeq.toDF("subspace", "cell", "centroid", "sums", "n")
-  }
 
   /** Asymmetric-distance (ADC) approximate top-k by PQ codes: each query
     * precomputes its lookup table — the exact long dot of its j-th
@@ -793,45 +693,38 @@ object Similarity {
                  kmCentroids: DataFrame, m: Int, kc: Int, iters: Int,
                  scale: Double = DefaultScale): DataFrame = {
     val r = residualsQ(corpus, id, vec, kmCentroids, scale)
-    pqStateAtQ(pqFitSeqQ(r, m, kc, iters), r)
+    lloydState(pqFitSeqQ(r, m, kc, iters), r, l2Labels)
   }
 
   /** Fold a NEW BATCH into persisted IVF-PQ state — [[pqFold]] in the
     * frozen coarse layer's residual space: the batch is assigned to its
     * coarse cells (literal argmax under the SAME centroids the state was
     * built with — the caller passes the frozen layer), residualized
-    * exactly, and its per-(subspace, codeword) sums fold in. This IS the
-    * update half of one per-subspace Lloyd round over the base ∪ batch
-    * residuals under the frozen coarse quantizer — exact, spec-pinned
-    * against [[pqStateAtQ]] on the union's residuals. O(batch) + an
-    * m·kc·sub collect; chained folds are sequential mini-batch like
-    * [[pqFold]]/[[kmeansFold]]. The coarse layer itself can fold in
-    * parallel via [[kmeansFold]] when drift warrants a re-route — but
-    * that is a REFIT trigger for the residual state, not a fold (moved
-    * centroids change every stored residual; see the kmeansFold drift
-    * measurements in BENCH_SF1.json for the refit policy).
+    * exactly, and its per-(subspace, codeword) sums fold in
+    * ([[lloydFold]]) — exact, spec-pinned against [[ivfPqStateAt]] on the
+    * union. The coarse layer itself can fold in parallel via
+    * [[kmeansFold]] when drift warrants a re-route — but that is a REFIT
+    * trigger for the residual state, not a fold (moved centroids change
+    * every stored residual; see [[kmeansFold]]'s drift measurements for
+    * the refit policy).
     */
   def ivfPqFold(state: DataFrame, batch: DataFrame, id: String,
                 vec: String, kmCentroids: DataFrame,
                 scale: Double = DefaultScale): DataFrame =
-    pqFoldSignedQ(state, residualsQ(batch, id, vec, kmCentroids, scale),
-      sign = 1L, at = None)
+    lloydFold(state, residualsQ(batch, id, vec, kmCentroids, scale),
+      l2Labels, sign = 1L, at = None)
 
   /** Retract (unfold) a batch FROM persisted IVF-PQ state — [[pqUnfold]]
     * in the FROZEN coarse layer's residual space: the retracted rows
     * route to their coarse cells and residualize exactly as they did at
     * insert time (the coarse quantizer never moved — the whole point of
-    * freezing it), so their per-(subspace, codeword) residual sums
-    * subtract out bit-for-bit when the rows were encoded under the
-    * state's current codebooks (takedown from a fresh state,
-    * spec-pinned vs [[ivfPqStateAt]] on the survivors). Mid-chain fold
-    * inversion takes the stored fold-time codebooks via
-    * [[ivfPqUnfoldAt]]. Refuses a foreign batch loudly. */
+    * freezing it). Mid-chain fold inversion takes the stored fold-time
+    * codebooks via [[ivfPqUnfoldAt]]. Refuses a foreign batch loudly. */
   def ivfPqUnfold(state: DataFrame, batch: DataFrame, id: String,
                   vec: String, kmCentroids: DataFrame,
                   scale: Double = DefaultScale): DataFrame =
-    pqFoldSignedQ(state, residualsQ(batch, id, vec, kmCentroids, scale),
-      sign = -1L, at = None)
+    lloydFold(state, residualsQ(batch, id, vec, kmCentroids, scale),
+      l2Labels, sign = -1L, at = None)
 
   /** [[ivfPqUnfold]] with the batch's residuals encoded under GIVEN
     * codebooks — the exact fold inverse:
@@ -842,8 +735,8 @@ object Similarity {
                     vec: String, kmCentroids: DataFrame,
                     atCodebooks: Seq[(Int, Int, Array[Long])],
                     scale: Double = DefaultScale): DataFrame =
-    pqFoldSignedQ(state, residualsQ(batch, id, vec, kmCentroids, scale),
-      sign = -1L, at = Some(atCodebooks))
+    lloydFold(state, residualsQ(batch, id, vec, kmCentroids, scale),
+      l2Labels, sign = -1L, at = Some(atCodebooks))
 
   /** [[ivfPqState]] under GIVEN codebooks (no fit) — the fold-exactness
     * spec's tool, mirroring [[pqStateAt]]/[[kmeansStateAt]]. */
@@ -851,7 +744,8 @@ object Similarity {
                    corpus: DataFrame, id: String, vec: String,
                    kmCentroids: DataFrame,
                    scale: Double = DefaultScale): DataFrame =
-    pqStateAtQ(codebooks, residualsQ(corpus, id, vec, kmCentroids, scale))
+    lloydState(codebooks, residualsQ(corpus, id, vec, kmCentroids, scale),
+      l2Labels)
 
   /** Residual-space encode under GIVEN codebooks and a frozen
     * [[kmeansFit]] coarse layer — the census tool of the q178 face.
@@ -874,15 +768,8 @@ object Similarity {
 
   /** [[pqEncode]] over an ALREADY-QUANTIZED (__id, __qv) frame. */
   private def pqEncodeQ(q: DataFrame)(
-      codebooks: Seq[(Int, Int, Array[Long])]): DataFrame = {
-    val byJ = codebooks.groupBy(_._1)
-    val m = byJ.size
-    val sub = codebooks.head._3.length
-    val codes = array((0 until m).map(j =>
-      pqArgminCell(pqSlice(col("__qv"), j, sub),
-        byJ(j).map(c => (c._2, c._3)))): _*)
-    q.select(col("__id"), codes.as("codes"))
-  }
+      codebooks: Seq[(Int, Int, Array[Long])]): DataFrame =
+    q.select(col("__id"), pqCodes(col("__qv"), codebooks).as("codes"))
 
   /** IVF-PQ approximate top-k: coarse cells prune the candidate set
     * ([[knnIvf]]'s equi-join shape — queries probe their `nprobe` nearest
@@ -933,11 +820,9 @@ object Similarity {
     require(byJ.forall(_._2.size == kc), "ragged codebook")
     val sub = codebooks.head._3.length
     val res = residualsC(corpus, corpusId, corpusVec, cent, scale)
-    val codes = array((0 until m).map(j =>
-      pqArgminCell(pqSlice(col("__rv"), j, sub),
-        byJ(j).map(c => (c._2, c._3)))): _*)
     val enc = graft.ext.Caches.pin(res.select(
-      col("__id").as("neighbor_id"), col("cell"), codes.as("codes")))
+      col("__id").as("neighbor_id"), col("cell"),
+      pqCodes(col("__rv"), codebooks).as("codes")))
     val q = prep(queries, queryId, queryVec, "query_id", scale)
     val probeCells = q.crossJoin(broadcast(cent))
       .select(col("query_id"),
@@ -1037,10 +922,7 @@ object Similarity {
     * [[energyState]]); folds chain with NO semantic drift. */
   def energyFold(state: DataFrame, batch: DataFrame, id: String,
                  vec: String, scale: Double = DefaultScale): DataFrame =
-    state.select(col("dim"), col("energy"), col("n"))
-      .unionByName(energyState(batch, id, vec, scale))
-      .groupBy("dim")
-      .agg(sum(col("energy")).as("energy"), sum(col("n")).as("n"))
+    energySigned(state, batch, id, vec, scale, sign = 1L)
 
   /** Retract (unfold) a batch FROM persisted energy state — per-dim long
     * SUBTRACTS over d rows. Like [[energyFold]], this is associative
@@ -1051,26 +933,35 @@ object Similarity {
     * the retracted permutation IS the from-scratch permutation on the
     * survivors (spec-pinned — no drift, no fold-time-model argument
     * needed, the one unfold in the family with no `At` variant).
-    * Refuses foreign rows loudly, like [[kmeansUnfold]]/[[pqUnfold]]:
-    * energies are Σx² ≥ 0 and counts ≥ 0, so a batch that is not part of
-    * the state's corpus can drive a dim's `energy` or `n` negative, and
-    * the output then fails at execution (`raise_error`) instead of
-    * feeding [[permutationFromState]] a corrupt ranking. The guard is a
-    * filter, so it holds whichever columns a consumer projects. */
+    * Refuses foreign rows loudly, like [[kmeansUnfold]]/[[pqUnfold]]
+    * (see [[energySigned]]). */
   def energyUnfold(state: DataFrame, batch: DataFrame, id: String,
                    vec: String, scale: Double = DefaultScale): DataFrame =
+    energySigned(state, batch, id, vec, scale, sign = -1L)
+
+  /** [[energyFold]] (`sign` 1) and [[energyUnfold]] (−1). Energies and
+    * counts are ≥ 0, so a foreign retracted batch drives some dim
+    * negative; the output then fails at execution (`raise_error`) instead
+    * of feeding [[permutationFromState]] a corrupt ranking. Lazy: energy
+    * has no model-dependent assignment to collect. The guard is a filter,
+    * so it holds whichever columns a consumer projects. */
+  private def energySigned(state: DataFrame, batch: DataFrame, id: String,
+                           vec: String, scale: Double,
+                           sign: Long): DataFrame = {
+    val name = if (sign < 0) "energyUnfold" else "energyFold"
     state.select(col("dim"), col("energy"), col("n"))
       .unionByName(energyState(batch, id, vec, scale)
-        .select(col("dim"), (-col("energy")).as("energy"),
-          (-col("n")).as("n")))
+        .select(col("dim"), (col("energy") * sign).as("energy"),
+          (col("n") * sign).as("n")))
       .groupBy("dim")
       .agg(sum(col("energy")).as("energy"), sum(col("n")).as("n"))
       .filter(when(col("energy") < 0 || col("n") < 0, raise_error(concat(
-          lit("energyUnfold: dim "), col("dim").cast("string"),
+          lit(s"$name: dim "), col("dim").cast("string"),
           lit(" went negative (energy "), col("energy").cast("string"),
           lit(", n "), col("n").cast("string"),
           lit("): the batch is not part of this state's corpus"))))
         .otherwise(lit(true)))
+  }
 
   /** The [[energyPermutation]] deal from a persisted/folded
     * [[energyState]] frame: rank dims energy-desc (ties to the lower
@@ -1372,15 +1263,192 @@ object Similarity {
   }
 
   /** the k-dispatched assignment every k-means consumer goes through */
-  private def assign(q: DataFrame, cent: Seq[(Int, Array[Long])]): DataFrame =
+  private def assign(q: DataFrame, words: Words): DataFrame = {
+    val cent = words.map(w => (w._2, w._3))
     if (cent.size <= LiteralAssignMaxK) assignLiteral(q, cent)
     else assignArgmax(q, cent)
+  }
 
-  /** driver-side (cell, centroid) extraction of a centroid frame */
-  private def collectCentroids(cent: DataFrame): Seq[(Int, Array[Long])] =
+  /** driver-side (0, cell, centroid) extraction of a centroid frame */
+  private def collectCentroids(cent: DataFrame): Words =
     cent.select(col("cell"), col("centroid")).collect()
-      .map(r => r.getInt(0) -> r.getSeq[Long](1).toArray)
-      .sortBy(_._1).toSeq
+      .map(r => (0, r.getInt(0), r.getSeq[Long](1).toArray))
+      .sortBy(_._2).toSeq
+
+  // ---- the Lloyd kernel: k-means, PQ and IVF-PQ ---------------------------
+
+  /** A model of the Lloyd family as driver-side codewords: (subspace,
+    * cell, codeword), subspace 0-based, cell 1-based. k-means is the one
+    * subspace 0; PQ has m subspaces of d/m dims (IVF-PQ: over residuals).
+    *
+    * Every fit, state and fold of the family runs one rule, and the rule
+    * is what makes them bit-exact and engine-independent:
+    *
+    *  - '''label''': each quantized row gets one cell per subspace under
+    *    codewords compiled into the plan as literals — k-means by
+    *    [[cosineLabels]] (max cosine), PQ by [[l2Labels]] (min L2:
+    *    codewords minimize reconstruction error, so magnitude matters);
+    *    lower cell on ties. A projection: zero corpus shuffle;
+    *  - '''sum''': per (subspace, cell, dim) the LONG sum of the scaled
+    *    values and the member count ([[lloydSums]]) — associative, so
+    *    safe under any partial-aggregation order;
+    *  - '''mean''': each codeword re-derived on the driver as
+    *    `sign(S) · (|S| div n)` ([[lloydMean]]) — integer division on a
+    *    non-negative numerator, where the JVM, Spark's `div` and DuckDB's
+    *    `//` all truncate. The mean of scaled values stays at vector
+    *    magnitude, so codeword self-dots never overflow (a raw SUM
+    *    centroid squares past 2^63 once cells pass ~10^4 rows). A cell
+    *    with no members (n = 0) keeps its codeword, so k never silently
+    *    shrinks.
+    *
+    * A fit ([[lloyd]]) is `iters` label/sum/mean rounds from
+    * [[fnvSeeds]]. A state ([[lloydState]]) stores the codewords PLUS the
+    * sums and counts of the corpus labelled under them: sums, not lossy
+    * integer means, because `|S| div n` drops its remainder and a
+    * mean-only store could never reproduce a grown corpus's mean. A fold
+    * ([[lloydFold]]) labels only the batch under the state's codewords
+    * and adds (or, unfolding, subtracts) its sums and counts, which IS
+    * the update half of one Lloyd round over base ∪ batch (survivors)
+    * seeded at the stored codewords — exactly, since base rows label
+    * identically under the same codewords and their sums are already
+    * stored. One long per (cell, dim) holds Σ of 10⁶-scaled components
+    * for ~10¹² rows per cell before overflow.
+    */
+  private type Words = Seq[(Int, Int, Array[Long])]
+
+  /** Labels the rows of a quantized (__id, __qv) frame under a model:
+    * (__j subspace, __cell, __sv the (sub)vector summed into that cell). */
+  private type Labeller = (DataFrame, Words) => DataFrame
+
+  /** The first `n` rows' vectors in (fnv1a64(id), id) order — a stable
+    * pseudo-random seed draw. `orderBy().limit(n)` plans as
+    * TakeOrderedAndProject: per-partition top-n then an n·P driver merge,
+    * never a global sort of the corpus. */
+  private def fnvSeeds(q: DataFrame, n: Int): Array[Array[Long]] =
+    q.withColumn("__h", graft.plans.Fnv1a64Expression.fnv1a64(col("__id")))
+      .orderBy(col("__h"), col("__id")).limit(n)
+      .select(col("__qv")).collect()
+      .map(_.getSeq[Long](0).toArray)
+
+  /** The kernel's cosine labeller: [[assign]]'s argmax, as subspace 0. */
+  private def cosineLabels(q: DataFrame, words: Words): DataFrame =
+    assign(q, words).select(lit(0).as("__j"), col("cell").as("__cell"),
+      col("__qv").as("__sv"))
+
+  /** Exact per-(subspace, cell) dim sums and member count of a labelled
+    * frame, collected — m·k·dims longs of driver-sized model state. The
+    * fits pass `perCell` to pack each cell's dims in Spark, so one row
+    * per cell reaches the driver ([[autoSemanticK]] can push k to √n);
+    * states and folds collect the (subspace, cell, dim) rows as they are
+    * and spare the packing exchange. */
+  private def lloydSums(labelled: DataFrame, perCell: Boolean)
+      : Map[(Int, Int), (Array[Long], Long)] = {
+    val sums = labelled
+      .select(col("__j"), col("__cell"),
+        posexplode(col("__sv")).as(Seq("__dim", "__x")))
+      .groupBy("__j", "__cell", "__dim")
+      .agg(sum(col("__x")).as("__s"), count(lit(1)).as("__n"))
+    val cells: Seq[((Int, Int), Seq[(Int, Long)], Long)] =
+      if (perCell)
+        sums.groupBy("__j", "__cell")
+          .agg(collect_list(struct(col("__dim"), col("__s"))), max(col("__n")))
+          .collect().toSeq
+          .map(r => ((r.getInt(0), r.getInt(1)),
+            r.getSeq[Row](2).map(e => (e.getInt(0), e.getLong(1))),
+            r.getLong(3)))
+      else
+        sums.collect().toSeq.groupBy(r => (r.getInt(0), r.getInt(1)))
+          .map { case (key, rows) =>
+            (key, rows.map(r => (r.getInt(2), r.getLong(3))),
+              rows.head.getLong(4))
+          }.toSeq
+    cells.map { case (key, dims, n) =>
+      val s = new Array[Long](dims.map(_._1).max + 1)
+      dims.foreach { case (d, x) => s(d) = x }
+      key -> ((s, n))
+    }.toMap
+  }
+
+  /** The kernel's mean rule: per dim `sign(S) · (|S| div n)`; an empty
+    * cell (n = 0) carries its codeword `cv`. */
+  private def lloydMean(cv: Array[Long], s: Array[Long], n: Long): Array[Long] =
+    if (n == 0) cv else s.map(x => (if (x < 0) -1L else 1L) * (math.abs(x) / n))
+
+  /** `iters` fixed Lloyd rounds from `words0`. Per round: one corpus scan,
+    * the literal labelling (codegen, no corpus shuffle), one sum
+    * aggregation and one per-cell collect; the updated codewords re-enter
+    * the next scan as literals (MLlib's driver-side centroid posture).
+    * Rounds are eager — at scale, persist `q` before fitting. */
+  private def lloyd(q: DataFrame, words0: Words, iters: Int,
+                    label: Labeller): Words =
+    (1 to iters).foldLeft(words0) { (words, _) =>
+      val sums = lloydSums(label(q, words), perCell = true)
+      words.map { case (j, c, cv) =>
+        val (s, n) = sums.getOrElse((j, c), (cv, 0L))
+        (j, c, lloydMean(cv, s, n))
+      }
+    }
+
+  /** The kernel's state frame: per (subspace, cell) in key order, the
+    * codeword plus the exact sums and count of `q` labelled under `words`.
+    * Columns (subspace, cell, centroid, sums, n); k-means callers drop
+    * `subspace`. */
+  private def lloydState(words: Words, q: DataFrame,
+                         label: Labeller): DataFrame = {
+    val sums = lloydSums(label(q, words), perCell = false)
+    stateFrame(q.sparkSession, words.sortBy(w => (w._1, w._2)).map { case (j, c, cv) =>
+      val (s, n) = sums.getOrElse((j, c), (new Array[Long](cv.length), 0L))
+      (j, c, cv, s, n)
+    })
+  }
+
+  private def stateFrame(spark: SparkSession,
+                         rows: Seq[(Int, Int, Array[Long], Array[Long], Long)])
+      : DataFrame = {
+    import spark.implicits._
+    rows.map { case (j, c, cv, s, n) => (j, c, cv.toSeq, s.toSeq, n) }
+      .toDF("subspace", "cell", "centroid", "sums", "n")
+  }
+
+  /** The family's one signed fold: label the batch `q` under the state's
+    * codewords (or `at`, the model it was folded under), add (`sign` 1)
+    * or subtract (−1) its sums and counts, re-derive by [[lloydMean]].
+    * Output has the input state's columns. Refuses loudly an `at` model
+    * with other keys than the state's (its extra cells' rows would
+    * vanish) and a count driven negative (a foreign batch). */
+  private def lloydFold(state: DataFrame, q: DataFrame, label: Labeller,
+                        sign: Long, at: Option[Words]): DataFrame = {
+    val subspaced = state.columns.contains("subspace")
+    val st = state.select(if (subspaced) col("subspace") else lit(0),
+        col("cell"), col("centroid"), col("sums"), col("n")).collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toArray,
+        r.getSeq[Long](3).toArray, r.getLong(4)))
+      .sortBy(r => (r._1, r._2)).toSeq
+    val own = st.map(r => (r._1, r._2, r._3))
+    def keys(w: Words) = w.map(x => (x._1, x._2, x._3.length)).sorted
+    at.foreach { a =>
+      require(keys(a) == keys(own),
+        s"the fold-time model's (subspace, cell, length) keys differ from " +
+          s"the state's (${a.size} vs ${own.size} codewords): it is not a " +
+          "model this state was folded under, and rows it labels into a " +
+          "cell the state lacks would be dropped")
+    }
+    val sums = lloydSums(label(q, at.getOrElse(own)), perCell = false)
+    val out = stateFrame(state.sparkSession, st.map { case (j, c, cv, s, n) =>
+      val (bs, bn) = sums.getOrElse((j, c), (new Array[Long](cv.length), 0L))
+      val n2 = n + sign * bn
+      require(n2 >= 0,
+        s"cell ($j, $c) count went negative ($n ${if (sign < 0) "-" else "+"} " +
+          s"$bn): the batch is not part of this state's corpus under this " +
+          "model — retract under the fold-time model (kmeansUnfoldAt/" +
+          "pqUnfoldAt/ivfPqUnfoldAt) or refit")
+      val s2 = s.indices.map(i => s(i) + sign * bs(i)).toArray
+      (j, c, lloydMean(cv, s2, n2), s2, n2)
+    })
+    if (subspaced) out else out.drop("subspace")
+  }
+
+  // ---- k-means fit and assignment -----------------------------------------
 
   /** Deterministic distributed k-means (fixed-iteration Lloyd) over an
     * embedding column. Returns the fitted centroids as `(cell: int,
@@ -1388,41 +1456,20 @@ object Similarity {
     * [[kmeansAssign]] / [[semanticDedupVerdict]].
     *
     * Everything an MLlib-style fit leaves to RNG state or thread timing is
-    * pinned down so two runs — or two engines — agree bit-for-bit:
-    *
-    *  - '''init''': the k corpus rows first in `(fnv1a64(id), id)` order, a
-    *    stable pseudo-random draw. `orderBy().limit(k)` plans as
-    *    TakeOrderedAndProject — per-partition top-k then a k·P driver merge,
-    *    never a global sort of the corpus;
-    *  - '''assignment''': max quantized-integer cosine, lower cell on ties
-    *    (cosines are doubles derived from exact ints — bit-identical in any
-    *    IEEE engine);
-    *  - '''update''': per-dimension LONG sums of the scaled vectors
-    *    (associative — safe under any partial-aggregation order), then
-    *    `sign(s) · (|s| div n)` — integer division on a non-negative
-    *    numerator, where Spark's `div` (truncation) and DuckDB's `//`
-    *    (truncation) provably agree. The mean-of-scaled-values stays at
-    *    vector magnitude, so centroid self-dots never overflow (a raw SUM
-    *    centroid squares to > 2^63 once cells pass ~10^4 rows);
-    *  - '''empty cells''' keep their previous centroid, so k never
-    *    silently shrinks.
-    *
-    * Scale shape — the corpus is NEVER shuffled, matching MLlib's Lloyd:
+    * pinned down so two runs — or two engines — agree bit-for-bit: it is
+    * the Lloyd kernel ([[Words]]) with max-cosine assignment (cosines are
+    * doubles derived from exact ints — bit-identical in any IEEE engine).
+    * The corpus is NEVER shuffled, matching MLlib's Lloyd ([[lloyd]]):
     * centroid state is k·dims longs, driver-sized by construction (the
     * same class of driver-side state as ConnectedComponents' convergence
-    * scalar), collected once per iteration and re-entering the next pass
-    * as fold-to-constant literals. Per iteration: one corpus scan, the
-    * literal argmax projection (codegen, no shuffle), and one (cell, dim)
-    * aggregation whose exchange carries k·dims rows per partition after
-    * map-side combine. Iterations are eager (one action each) — at scale,
-    * persist the corpus projection before fitting to avoid re-scanning.
+    * scalar).
     */
   def kmeansFit(corpus: DataFrame, id: String, vec: String, k: Int,
                 iters: Int, scale: Double = DefaultScale): DataFrame = {
     val fitted = kmeansFitSeq(corpus, id, vec, k, iters, scale)
     val spark = corpus.sparkSession
     import spark.implicits._
-    fitted.map { case (c, v) => (c, v.toSeq) }
+    fitted.map { case (_, c, v) => (c, v.toSeq) }
       .toDF("cell", "centroid")
   }
 
@@ -1431,35 +1478,13 @@ object Similarity {
     * skip the frame round-trip (materialize + collect) entirely.
     */
   private def kmeansFitSeq(corpus: DataFrame, id: String, vec: String,
-                           k: Int, iters: Int,
-                           scale: Double): Seq[(Int, Array[Long])] = {
+                           k: Int, iters: Int, scale: Double): Words = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(iters >= 0, s"iters must be >= 0, got $iters")
     val q = prep(corpus, id, vec, "__id", scale)
-    // TakeOrderedAndProject: per-partition top-k, k·P merged on the driver
-    val seeds = q
-      .withColumn("__h", graft.plans.Fnv1a64Expression.fnv1a64(col("__id")))
-      .orderBy(col("__h"), col("__id")).limit(k)
-      .select(col("__qv")).collect()
-    val cent0: Seq[(Int, Array[Long])] = seeds.zipWithIndex.map {
-      case (r, i) => (i + 1) -> r.getSeq[Long](0).toArray }.toSeq
-    val fitted = (1 to iters).foldLeft(cent0) { (cent, _) =>
-      val updated = assign(q, cent)
-        .select(col("cell"), posexplode(col("__qv")).as(Seq("__dim", "__x")))
-        .groupBy("cell", "__dim")
-        .agg(sum(col("__x")).as("__s"), count(lit(1)).as("__n"))
-        .withColumn("__c",
-          when(col("__s") < 0, lit(-1L)).otherwise(lit(1L)) *
-            expr("abs(__s) div __n"))
-        .groupBy("cell")
-        .agg(transform(
-          array_sort(collect_list(struct(col("__dim"), col("__c")))),
-          e => e.getField("__c")).as("centroid"))
-        .collect()
-        .map(r => r.getInt(0) -> r.getSeq[Long](1).toArray).toMap
-      cent.map { case (c, old) => c -> updated.getOrElse(c, old) }
-    }
-    fitted
+    val seeds = fnvSeeds(q, k).toSeq.zipWithIndex
+      .map { case (s, i) => (0, i + 1, s) }
+    lloyd(q, seeds, iters, cosineLabels)
   }
 
   /** Assignment against fitted centroids: (id, cell, cosine) — the cosine is
@@ -1547,12 +1572,8 @@ object Similarity {
   /** Fitted-model state for INCREMENTAL maintenance (round-14 verdict item
     * 6): the fitted centroids PLUS, per cell, the exact per-dimension
     * scaled-vector sums and member count of the corpus assigned under
-    * those centroids — `(cell, centroid, sums, n)`. Persisting sums (not
-    * just means) is what makes [[kmeansFold]] EXACT: the integer mean
-    * `sign·(|S| div n)` loses its remainder, so a mean-only store could
-    * never reproduce the grown corpus's mean; the sums store can, and one
-    * long per (cell, dim) holds Σ of 10⁶-scaled components for ~10¹²
-    * rows per cell before overflow.
+    * those centroids — `(cell, centroid, sums, n)`, the Lloyd kernel's
+    * state ([[Words]] says why sums make [[kmeansFold]] EXACT).
     *
     * Store key scheme (the [[graft.sources.Tables.ensureMaterialized]]
     * contract): callers key the state by the BASE corpus's content key +
@@ -1564,59 +1585,25 @@ object Similarity {
     */
   def kmeansState(corpus: DataFrame, id: String, vec: String, k: Int,
                   iters: Int, scale: Double = DefaultScale): DataFrame =
-    stateAt(kmeansFitSeq(corpus, id, vec, k, iters, scale),
-      corpus, id, vec, scale)
+    lloydState(kmeansFitSeq(corpus, id, vec, k, iters, scale),
+      prep(corpus, id, vec, "__id", scale), cosineLabels).drop("subspace")
 
   /** [[kmeansState]] under GIVEN centroids (no fit) — the spec's tool for
     * proving fold exactness, and the entry point when centroids come from
     * an external fit. */
   def kmeansStateAt(centroids: DataFrame, corpus: DataFrame, id: String,
                     vec: String, scale: Double = DefaultScale): DataFrame =
-    stateAt(collectCentroids(centroids), corpus, id, vec, scale)
-
-  private def stateAt(cent: Seq[(Int, Array[Long])], corpus: DataFrame,
-                      id: String, vec: String, scale: Double): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val agg = cellSums(cent, prep(corpus, id, vec, "__id", scale))
-    cent.sortBy(_._1).map { case (c, v) =>
-      val (s, n) = agg.getOrElse(c, (new Array[Long](v.length), 0L))
-      (c, v.toSeq, s.toSeq, n)
-    }.toDF("cell", "centroid", "sums", "n")
-  }
-
-  /** Per-cell (per-dim scaled sums, member count) of `q` assigned under
-    * `cent`, collected — k·dims longs of driver-sized model state (the
-    * MLlib Lloyd posture; every caller is gated by k being a fitted
-    * cluster count). */
-  private def cellSums(cent: Seq[(Int, Array[Long])],
-                       q: DataFrame): Map[Int, (Array[Long], Long)] =
-    assign(q, cent)
-      .select(col("cell"), posexplode(col("__qv")).as(Seq("__dim", "__x")))
-      .groupBy("cell", "__dim")
-      .agg(sum(col("__x")).as("__s"), count(lit(1)).as("__n"))
-      .collect()
-      .groupBy(_.getInt(0))
-      .map { case (c, rows) =>
-        val dims = rows.map(_.getInt(1)).max + 1
-        val s = new Array[Long](dims)
-        rows.foreach(r => s(r.getInt(1)) = r.getLong(2))
-        c -> ((s, rows.head.getLong(3)))
-      }
+    lloydState(collectCentroids(centroids),
+      prep(corpus, id, vec, "__id", scale), cosineLabels).drop("subspace")
 
   /** Fold a NEW BATCH into persisted k-means state without re-scanning the
     * base corpus: assign the batch under the state's centroids (literal
     * argmax — no shuffle, no join), add its exact per-dim sums and counts
-    * to the stored ones, and re-derive each centroid as
-    * `sign·(|S_base + S_batch| div (n_base + n_batch))`. This IS the
-    * update half of one Lloyd round over base ∪ batch seeded at the
-    * stored centroids — exactly, not approximately: the base rows would
-    * assign identically under the same centroids, and their sums are
-    * already in the state (spec-pinned against [[kmeansStateAt]] on the
-    * union). Cells with no members anywhere keep their centroid (the
-    * fit's empty-cell carry rule). Output is a state frame, so folds
-    * CHAIN — with sequential mini-batch semantics: each batch is assigned
-    * under the state's then-current centroids, so
+    * to the stored ones and re-derive each centroid ([[lloydFold]]) —
+    * exactly the update half of one Lloyd round over base ∪ batch
+    * (spec-pinned against [[kmeansStateAt]] on the union). Output is a
+    * state frame, so folds CHAIN — with sequential mini-batch semantics:
+    * each batch is assigned under the state's then-current centroids, so
     * `fold(fold(s, b1), b2)` places b2 under b1's update (the freshest
     * model) rather than under the original centroids — deliberately not
     * equal to `fold(s, b1 ∪ b2)`, though total count and scaled mass are
@@ -1634,21 +1621,21 @@ object Similarity {
     * POLICY pinned from this: fold freely while the cumulative folded
     * mass stays under the base mass (Σ n_batch < n_base at state build) —
     * one Lloyd update half absorbs perturbations exactly, but a
-    * majority-new corpus deserves fresh seeds and full rounds.
+    * majority-new corpus deserves fresh seeds and full rounds. The same
+    * policy holds for [[pqFold]] and [[ivfPqFold]].
     */
   def kmeansFold(state: DataFrame, batch: DataFrame, id: String,
                  vec: String, scale: Double = DefaultScale): DataFrame =
-    kmeansFoldSigned(state, batch, id, vec, scale, sign = 1L, at = None)
+    lloydFold(state, prep(batch, id, vec, "__id", scale), cosineLabels,
+      sign = 1L, at = None)
 
   /** Retract (unfold) a batch FROM persisted k-means state — the deletion
     * half of the maintenance family (takedowns, opt-outs, license
     * revocations): assign the retracted rows under the state's CURRENT
-    * centroids, SUBTRACT their exact per-dim sums and counts from the
-    * stored ones, and re-derive each centroid as `sign·(|S′| div n′)` —
-    * one Lloyd update half over the survivors, O(batch), no survivor
-    * re-scan. Because the state persists exact sums (not lossy means),
-    * the subtraction is exact arithmetic: when the retracted rows were
-    * assigned under these same centroids (a takedown from a
+    * centroids, SUBTRACT their exact per-dim sums and counts and re-derive
+    * each centroid ([[lloydFold]]) — one Lloyd update half over the
+    * survivors, O(batch), no survivor re-scan. When the retracted rows
+    * were assigned under these same centroids (a takedown from a
     * freshly-built/refit state — [[kmeansState]]'s centroid column IS the
     * assignment model), the result's sums and counts equal
     * [[kmeansStateAt]] on the survivors bit-for-bit (spec-pinned).
@@ -1664,12 +1651,11 @@ object Similarity {
     * A batch that was never in the corpus can drive a cell's count
     * negative — that is a protocol violation (retracting foreign rows),
     * and the fold REFUSES it loudly rather than emitting a corrupt model.
-    * Empty cells (n′ = 0) carry their current centroid, [[kmeansFold]]'s
-    * rule.
     */
   def kmeansUnfold(state: DataFrame, batch: DataFrame, id: String,
                    vec: String, scale: Double = DefaultScale): DataFrame =
-    kmeansFoldSigned(state, batch, id, vec, scale, sign = -1L, at = None)
+    lloydFold(state, prep(batch, id, vec, "__id", scale), cosineLabels,
+      sign = -1L, at = None)
 
   /** [[kmeansUnfold]] with the batch assigned under GIVEN centroids — the
     * model version the batch was originally folded/assigned under (the
@@ -1678,42 +1664,13 @@ object Similarity {
     * on sums and counts for any S, and on the full state (centroid
     * included) when S is itself a fold output (spec-pinned) — fold and
     * unfold then compute the same batch sums under the same model, and
-    * the re-derive is the same function of the restored (sums, n). */
+    * the re-derive is the same function of the restored (sums, n).
+    * `atCentroids` must have the state's cells and dims. */
   def kmeansUnfoldAt(state: DataFrame, batch: DataFrame, id: String,
                      vec: String, atCentroids: DataFrame,
                      scale: Double = DefaultScale): DataFrame =
-    kmeansFoldSigned(state, batch, id, vec, scale, sign = -1L,
-      at = Some(collectCentroids(atCentroids)))
-
-  private def kmeansFoldSigned(state: DataFrame, batch: DataFrame,
-                               id: String, vec: String, scale: Double,
-                               sign: Long,
-                               at: Option[Seq[(Int, Array[Long])]])
-      : DataFrame = {
-    val spark = state.sparkSession
-    import spark.implicits._
-    val st = state.select(col("cell"), col("centroid"), col("sums"),
-        col("n")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Long](1).toArray,
-        r.getSeq[Long](2).toArray, r.getLong(3)))
-      .sortBy(_._1)
-    val cent = at.getOrElse(st.map(r => (r._1, r._2)).toSeq)
-    val bagg = cellSums(cent, prep(batch, id, vec, "__id", scale))
-    st.map { case (c, cv, s, n) =>
-      val (bs, bn) = bagg.getOrElse(c, (new Array[Long](cv.length), 0L))
-      val n2 = n + sign * bn
-      require(n2 >= 0,
-        s"cell $c count went negative ($n ${if (sign < 0) "-" else "+"} " +
-          s"$bn): the batch is not part of this state's corpus under " +
-          "these centroids — retract under the fold-time model " +
-          "(kmeansUnfoldAt) or refit")
-      val s2 = s.indices.map(i => s(i) + sign * bs(i)).toArray
-      val cv2 =
-        if (n2 == 0) cv // empty everywhere: carry the centroid
-        else s2.map(x => (if (x < 0) -1L else 1L) * (math.abs(x) / n2))
-      (c, cv2.toSeq, s2.toSeq, n2)
-    }.toSeq.toDF("cell", "centroid", "sums", "n")
-  }
+    lloydFold(state, prep(batch, id, vec, "__id", scale), cosineLabels,
+      sign = -1L, at = Some(collectCentroids(atCentroids)))
 
   /** SemDeDup-style semantic dedup: fit k cells ([[kmeansFit]]), then inside
     * each cell drop every row that has a SMALLER-id neighbor with cosine ≥

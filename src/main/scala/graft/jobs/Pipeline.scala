@@ -65,7 +65,8 @@ object Pipeline {
           Seq("user_left", "user_right"))))
     // plain threads, not a global pool: 3 tasks, bounded lifetime, and a
     // failure in any mart must fail the run (exceptions are re-thrown
-    // after all threads finish so no mart is silently skipped)
+    // after all threads finish so no mart is silently skipped; every
+    // other mart's error rides along as a suppressed exception)
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = marts.map { case (name, work) =>
       val t = new Thread(() => {
@@ -79,7 +80,13 @@ object Pipeline {
       t
     }
     threads.foreach(_.join())
-    if (!errors.isEmpty) throw errors.peek()
+    if (!errors.isEmpty) {
+      val first = errors.poll()
+      // `ne`: Spark rethrows a cached analysis failure as the same
+      // instance, and self-suppression would replace it with an IAE
+      errors.forEach(e => if (e ne first) first.addSuppressed(e))
+      throw first
+    }
   }
 
   /** CLI surface: events geo outBase date maxDistanceKm [processedAt]

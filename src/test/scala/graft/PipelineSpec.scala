@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -102,9 +103,15 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     // with a missing output. Injected failure: the geo path points at the
     // EVENTS table, so every mart's plan analysis throws in its thread.
     val out = Files.createTempDirectory("graft-failprop").toString + "/marts"
-    intercept[Throwable] {
+    val e = intercept[Throwable] {
       Pipeline.run(spark, eventsPath, eventsPath, out, runDate, 100.0)
     }
+    // all three marts fail here: one is thrown, the other two ride along
+    // as suppressed (Spark attaches its own caller-stack trace as a
+    // suppressed exception too, so count the analysis errors only)
+    val marts = e.getSuppressed.filter(_.isInstanceOf[AnalysisException])
+    assert(e.isInstanceOf[AnalysisException] && marts.length == 2,
+      e.getSuppressed.map(_.getClass.getName).toSeq)
   }
 
   test("mid-chain crash rerun is safe: marts identical to a clean run") {

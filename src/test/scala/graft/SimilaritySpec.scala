@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -530,16 +531,62 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
       s0, base.filter(lit(false)), "vec_id", "embedding")))
   }
 
-  test("kmeansUnfold refuses a foreign batch loudly (negative cell count)") {
-    val base = vecs.filter($"vec_id" < 100)
-    val cent = Similarity.kmeansFit(base, "vec_id", "embedding",
-      k = 4, iters = 1)
-    val state = Similarity.kmeansStateAt(cent, base, "vec_id", "embedding")
-    val doubled = base.unionByName(base) // twice the corpus: must go < 0
-    val e = intercept[IllegalArgumentException] {
-      Similarity.kmeansUnfold(state, doubled, "vec_id", "embedding")
+  // the foreign-batch refusal, once per member of the Lloyd family: twice
+  // the corpus retracted from its own state must drive a count below zero
+  Seq[(String, DataFrame => DataFrame)](
+    "kmeansUnfold" -> { base =>
+      val cent = Similarity.kmeansFit(base, "vec_id", "embedding",
+        k = 4, iters = 1)
+      Similarity.kmeansUnfold(
+        Similarity.kmeansStateAt(cent, base, "vec_id", "embedding"),
+        base.unionByName(base), "vec_id", "embedding")
+    },
+    "pqUnfold" -> { base =>
+      Similarity.pqUnfold(Similarity.pqState(base, "vec_id", "embedding",
+          m = 4, kc = 4, iters = 1),
+        base.unionByName(base), "vec_id", "embedding")
+    },
+    "ivfPqUnfold" -> { base =>
+      val km = Similarity.kmeansFit(base, "vec_id", "embedding",
+        k = 4, iters = 1)
+      Similarity.ivfPqUnfold(Similarity.ivfPqState(base, "vec_id",
+          "embedding", km, m = 4, kc = 4, iters = 1),
+        base.unionByName(base), "vec_id", "embedding", km)
     }
-    assert(e.getMessage.contains("negative"))
+  ).foreach { case (name, unfoldDoubled) =>
+    test(s"$name refuses a foreign batch loudly (negative cell count)") {
+      val e = intercept[IllegalArgumentException] {
+        unfoldDoubled(vecs.filter($"vec_id" < 100))
+      }
+      assert(e.getMessage.contains("negative"))
+    }
+  }
+
+  // an UnfoldAt model with a cell the state lacks must not drop that
+  // cell's rows silently: a k=4 (kc=4) state retracted under k=5 (kc=5)
+  Seq[(String, (DataFrame, DataFrame) => DataFrame)](
+    "kmeansUnfoldAt" -> { (base, batch) =>
+      def fit(k: Int) = Similarity.kmeansFit(base, "vec_id", "embedding",
+        k = k, iters = 1)
+      Similarity.kmeansUnfoldAt(
+        Similarity.kmeansStateAt(fit(4), base, "vec_id", "embedding"),
+        batch, "vec_id", "embedding", fit(5))
+    },
+    "pqUnfoldAt" -> { (base, batch) =>
+      def fit(kc: Int) = Similarity.collectCodebooks(Similarity.pqFit(base,
+        "vec_id", "embedding", m = 4, kc = kc, iters = 1))
+      Similarity.pqUnfoldAt(
+        Similarity.pqStateAt(fit(4), base, "vec_id", "embedding"),
+        batch, "vec_id", "embedding", fit(5))
+    }
+  ).foreach { case (name, unfoldAtLarger) =>
+    test(s"$name refuses a fold-time model with cells the state lacks") {
+      val base = vecs.filter($"vec_id" < 100)
+      val e = intercept[IllegalArgumentException] {
+        unfoldAtLarger(base, base.filter($"vec_id" % 10 === 9))
+      }
+      assert(e.getMessage.contains("fold-time model"))
+    }
   }
 
   test("pqUnfold retracts a takedown EXACTLY per subspace, and pqUnfoldAt " +
