@@ -19,6 +19,28 @@ import org.apache.spark.sql.functions._
   *    exploded shingles; candidates meet only inside (band, bucket) groups;
   *  - SimHash: 64 sign-sums in one aggregation; candidates share a 16-bit
   *    chunk (pigeonhole: hamming ≤ 3 pairs must collide on one of 4 chunks).
+  *
+  * ONE SET-OVERLAP RULE behind every pair operator that counts shared keys
+  * (self and cross Jaccard, both LSH verifies, contamination overlap,
+  * ExactSubstr provenance). Candidates meet in a key equi-join of two
+  * (id, key) frames ([[pairJoin]]: id_a < id_b when the frames are one
+  * corpus, every cross pair otherwise), the intersection is the per-pair
+  * row count ([[pairCounts]]), and Jaccard = inter / (n_a + n_b − inter)
+  * against the per-doc set sizes ([[finishJaccard]]). Two ways to reach an
+  * EXACT intersection when the key join does not see every shared shingle:
+  *  - a verify tier (LSH bands, a df guard) re-counts its candidate pairs
+  *    over both (id, shingle) frames ([[recount]]);
+  *  - the df guard splits the shingles ([[guardedInter]]): the cold index
+  *    join counts the non-hot intersection directly and only the hot
+  *    contribution — bounded by |hot shingles| × docs, small by
+  *    construction (fewer than |sh|/maxShingleDf shingles can exceed the
+  *    threshold) — is recounted per surviving pair. Measured at sf0.1,
+  *    this inner-join df-mark shape beats both a window-df + full-recount
+  *    formulation (3× slower) and an anti/semi-join against the aggregated
+  *    hot set (1.3× slower), with or without pinning the shingle frame.
+  * The self path marks hot shingles by a join against its own df; the
+  * cross path filters both sides by the CORPUS side's df (the side with
+  * meaningful document frequencies, precomputable once across batches).
   */
 object Dedup {
 
@@ -48,20 +70,8 @@ object Dedup {
     * than `n` words produce none (sequence(0, negative) would DESCEND in
     * Spark, hence the explicit guard).
     */
-  def wordShingles(docs: DataFrame, id: String, text: String, n: Int): DataFrame = {
-    // normalize+split is projected FIRST so the expensive regexp runs once
-    // per row — referenced directly inside the transform() lambda it is
-    // re-evaluated per array element (no CSE into higher-order lambdas;
-    // this was 80% of the char-shingle query's runtime before the split)
-    val words = col("__words")
-    val shingleArr = when(size(words) >= n,
-      transform(sequence(lit(0), size(words) - lit(n)),
-        i => concat_ws(" ", slice(words, i + lit(1), lit(n)))))
-      .otherwise(array())
-    docs.select(col(id),
-        filter(split(normalizeText(col(text)), " "), w => w =!= "").as("__words"))
-      .select(col(id), explode(shingleArr).as("shingle")).distinct()
-  }
+  def wordShingles(docs: DataFrame, id: String, text: String, n: Int): DataFrame =
+    shingles(docs, id, text, n, chars = false, hashed = false)
 
   /** Distinct character `n`-gram shingles of the normalized text — the
     * whitespace-free dedup grain for languages without word boundaries (or
@@ -69,16 +79,8 @@ object Dedup {
     * contract as [[wordShingles]], so every downstream operator (Jaccard,
     * MinHash, LSH) composes unchanged.
     */
-  def charShingles(docs: DataFrame, id: String, text: String, n: Int): DataFrame = {
-    // same once-per-row projection rationale as [[wordShingles]]
-    val norm = col("__norm")
-    val shingleArr = when(length(norm) >= n,
-      transform(sequence(lit(1), length(norm) - lit(n - 1)),
-        i => substr(norm, i, lit(n))))
-      .otherwise(array())
-    docs.select(col(id), normalizeText(col(text)).as("__norm"))
-      .select(col(id), explode(shingleArr).as("shingle")).distinct()
-  }
+  def charShingles(docs: DataFrame, id: String, text: String, n: Int): DataFrame =
+    shingles(docs, id, text, n, chars = true, hashed = false)
 
   /** [[charShingles]] with each shingle reduced to its code-point FNV-1a 64
     * hash at the explode site: same (id, shingle) contract but the shingle
@@ -90,20 +92,8 @@ object Dedup {
     * both engines identically, so oracle equality is preserved.
     */
   def charShingleHashes(docs: DataFrame, id: String, text: String,
-                        n: Int): DataFrame = {
-    import graft.plans.Fnv1a64Expression.fnv1a64
-    val norm = col("__norm")
-    // hash INSIDE the per-doc transform so the generator explodes 8-byte
-    // longs: the alternative — explode the index range, then substr+hash
-    // post-explode — re-projects the whole norm string through every
-    // exploded row (O(len²) bytes per doc; measured 4× the CPU at sf0.1)
-    val shingleArr = when(length(norm) >= n,
-      transform(sequence(lit(1), length(norm) - lit(n - 1)),
-        i => fnv1a64(substr(norm, i, lit(n)))))
-      .otherwise(array())
-    docs.select(col(id), normalizeText(col(text)).as("__norm"))
-      .select(col(id), explode(shingleArr).as("shingle")).distinct()
-  }
+                        n: Int): DataFrame =
+    shingles(docs, id, text, n, chars = true, hashed = true)
 
   /** [[wordShingles]] with each shingle FNV-hashed to a long AT THE EXPLODE
     * SITE — the X21 trick at the word grain: every downstream exchange,
@@ -117,21 +107,44 @@ object Dedup {
     * the oracle hash-check would catch one on any tested corpus).
     */
   def wordShingleHashes(docs: DataFrame, id: String, text: String,
-                        n: Int): DataFrame = {
-    import graft.plans.Fnv1a64Expression.fnv1a64
-    // hash INSIDE the per-doc transform (the charShingleHashes shape,
-    // round-16): the generator explodes 8-byte longs, so even the
-    // distinct's own exchange — the first shuffle of every consumer —
-    // moves longs instead of n-word strings. Value-identical to hashing
-    // after the explode: fnv1a64 runs on exactly the same shingle string
-    // either way; only the point in the plan moves.
-    val words = col("__words")
-    val shingleArr = when(size(words) >= n,
-      transform(sequence(lit(0), size(words) - lit(n)),
-        i => fnv1a64(concat_ws(" ", slice(words, i + lit(1), lit(n))))))
-      .otherwise(array())
-    docs.select(col(id),
-        filter(split(normalizeText(col(text)), " "), w => w =!= "").as("__words"))
+                        n: Int): DataFrame =
+    shingles(docs, id, text, n, chars = false, hashed = true)
+
+  /** The one shingle builder: word or char grain, string or FNV-hashed.
+    * The normalized text (char grain) or token array (word grain) is
+    * projected FIRST so the expensive regexp runs once per row — referenced
+    * directly inside the transform() lambda it is re-evaluated per array
+    * element (no CSE into higher-order lambdas; this was 80% of the
+    * char-shingle query's runtime before the split). Hashing happens INSIDE
+    * the per-doc transform so the generator explodes 8-byte longs: the
+    * alternative — explode the index range, then substr+hash post-explode —
+    * re-projects the whole string through every exploded row (O(len²) bytes
+    * per doc; measured 4× the CPU at sf0.1), and the distinct's own
+    * exchange, the first shuffle of every consumer, moves longs. Values are
+    * identical to hashing after the explode: fnv1a64 runs on exactly the
+    * same shingle string either way.
+    */
+  private def shingles(docs: DataFrame, id: String, text: String, n: Int,
+                       chars: Boolean, hashed: Boolean): DataFrame = {
+    val key: Column => Column =
+      if (hashed) graft.plans.Fnv1a64Expression.fnv1a64(_) else identity
+    val (src, shingleArr) =
+      if (chars) {
+        val norm = col("__norm")
+        (normalizeText(col(text)).as("__norm"),
+          when(length(norm) >= n,
+            transform(sequence(lit(1), length(norm) - lit(n - 1)),
+              i => key(substr(norm, i, lit(n)))))
+            .otherwise(array()))
+      } else {
+        val words = col("__words")
+        (TextAnalysis.tokens(col(text)).as("__words"),
+          when(size(words) >= n,
+            transform(sequence(lit(0), size(words) - lit(n)),
+              i => key(concat_ws(" ", slice(words, i + lit(1), lit(n))))))
+            .otherwise(array()))
+      }
+    docs.select(col(id), src)
       .select(col(id), explode(shingleArr).as("shingle")).distinct()
   }
 
@@ -198,11 +211,9 @@ object Dedup {
     // cache materialization CPU plus the cached relation defeating AQE's
     // cross-stage job pipelining (jobs q22 12→38). The shared distinct's
     // exchange is what ReuseExchange dedups instead.
-    val sizes = sh.groupBy(col(id)).agg(count(lit(1)).as("n_sh"))
-    val withInter =
+    val dfs = sh.groupBy("shingle").agg(count(lit(1)).as("__df"))
+    val inter =
       if (maxShingleDf == Long.MaxValue) {
-        // unguarded: every shared shingle is already in the index join, so
-        // count(*) per pair IS the intersection — one join, no recount.
         // df = 1 shingles are dropped from BOTH join sides first: a
         // shingle in one document can never witness a pair, and on
         // low-duplication corpora they are the overwhelming majority (q44
@@ -211,50 +222,16 @@ object Dedup {
         // aggregate it costs was an exchange the join paid anyway).
         // Provably invisible: intersections count only SHARED shingles.
         val shared = sh.join(
-          sh.groupBy("shingle").agg(count(lit(1)).as("__df"))
-            .filter(col("__df") >= 2).select("shingle"),
-          Seq("shingle"))
-        shared.select(col(id).as("id_a"), col("shingle"))
-          .join(shared.select(col(id).as("id_b"), col("shingle")),
-            Seq("shingle"))
-          .filter(col("id_a") < col("id_b"))
-          .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
+          dfs.filter(col("__df") >= 2).select("shingle"), Seq("shingle"))
+        pairCounts(shared, shared, id, Seq("shingle"), self = true, "inter")
       } else {
-        // guarded: stop-shingles are dropped from candidate GENERATION only,
-        // but still count toward the true Jaccard. The cold index join
-        // counts the non-hot intersection directly (same shape as the
-        // unguarded branch); only the hot contribution — bounded by
-        // |hot shingles| x docs, small by construction (fewer than
-        // |sh|/maxShingleDf shingles can exceed the threshold) — is added
-        // back via a per-pair recount restricted to hot shingles. Measured
-        // at sf0.1: this inner-join df-mark shape beats both a window-df +
-        // full-recount formulation (3x slower) and an anti/semi-join
-        // against the aggregated hot set (1.3x slower), with or without
-        // pinning the shingle frame.
-        val dfs = sh.groupBy("shingle").agg(count(lit(1)).as("__df"))
         val mark = sh.join(dfs, Seq("shingle"))
           .withColumn("__hot", col("__df") > maxShingleDf).drop("__df")
         val gen = mark.filter(!col("__hot")).drop("__hot")
         val hot = mark.filter(col("__hot")).drop("__hot")
-        val coldInter = gen.select(col(id).as("id_a"), col("shingle"))
-          .join(gen.select(col(id).as("id_b"), col("shingle")), Seq("shingle"))
-          .filter(col("id_a") < col("id_b"))
-          .groupBy("id_a", "id_b").agg(count(lit(1)).as("__cold"))
-        val hotInter = coldInter.select("id_a", "id_b")
-          .join(hot.select(col(id).as("id_a"), col("shingle")), Seq("id_a"))
-          .join(hot.select(col(id).as("id_b"), col("shingle")), Seq("id_b", "shingle"))
-          .groupBy("id_a", "id_b").agg(count(lit(1)).as("__hot_n"))
-        coldInter.join(hotInter, Seq("id_a", "id_b"), "left")
-          .withColumn("inter",
-            col("__cold") + coalesce(col("__hot_n"), lit(0L)))
-          .drop("__cold", "__hot_n")
+        guardedInter(gen, gen, hot, hot, id, self = true)
       }
-    withInter
-      .join(sizes.select(col(id).as("id_a"), col("n_sh").as("n_a")), Seq("id_a"))
-      .join(sizes.select(col(id).as("id_b"), col("n_sh").as("n_b")), Seq("id_b"))
-      .withColumn("jaccard",
-        col("inter") / (col("n_a") + col("n_b") - col("inter")))
-      .filter(col("jaccard") >= minJaccard)
+    finishJaccard(inter, sh, sh, id, minJaccard)
   }
 
   /** Cross-frame Jaccard: incoming (A) docs against an existing corpus (B) —
@@ -265,10 +242,7 @@ object Dedup {
     * stop-shingle df guard is computed on the CORPUS side — the side with
     * meaningful document-frequency statistics, and the side whose df can be
     * precomputed once and reused across daily batches. True Jaccard counts
-    * every shared shingle: the cold index join counts the non-hot
-    * intersection directly, and the hot contribution is recounted per
-    * surviving pair — the df-mark device [[jaccardPairsFromShingles]]
-    * measured fastest.
+    * every shared shingle (the set-overlap rule in the object doc).
     *
     * Input frames are (id, shingle) as produced by [[wordShingles]] /
     * [[charShingles]]; output is (id_a ∈ A, id_b ∈ B, inter, n_a, n_b,
@@ -284,50 +258,21 @@ object Dedup {
   def crossJaccardPairs(shA: DataFrame, shB: DataFrame, id: String,
                         minJaccard: Double,
                         maxShingleDf: Long = Long.MaxValue): DataFrame = {
-    val sizesA = shA.groupBy(col(id)).agg(count(lit(1)).as("n_a"))
-    val sizesB = shB.groupBy(col(id)).agg(count(lit(1)).as("n_b"))
     val inter =
       if (maxShingleDf == Long.MaxValue) {
-        // unguarded: every shared shingle is in the index join — count(*)
-        // per pair IS the intersection, no recount (same shape as the
-        // unguarded branch of jaccardPairsFromShingles)
-        shA.select(col(id).as("id_a"), col("shingle"))
-          .join(shB.select(col(id).as("id_b"), col("shingle")), Seq("shingle"))
-          .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
+        pairCounts(shA, shB, id, Seq("shingle"), self = false, "inter")
       } else {
-        // guarded df-mark split, mirroring jaccardPairsFromShingles (its
-        // measured winner — a full per-pair recount over BOTH shingle sets
-        // was the 3x-slower formulation it was benchmarked against): the
-        // cold index join counts the non-hot intersection for free, and
-        // only the hot contribution — bounded by |hot shingles| × docs —
-        // is recounted per surviving pair. A-shingles absent from the
-        // corpus get no df row; they cannot produce a cross candidate
-        // anyway, so the inner df join doubles as the prefilter.
+        // A-shingles absent from the corpus get no df row; they cannot
+        // produce a cross candidate anyway, so the inner df join doubles
+        // as the prefilter
         val dfB = shB.groupBy("shingle").agg(count(lit(1)).as("__df"))
-        val genA = shA.join(dfB.filter(col("__df") <= maxShingleDf), Seq("shingle"))
-          .select(col(id).as("id_a"), col("shingle"))
-        val genB = shB.join(dfB.filter(col("__df") <= maxShingleDf), Seq("shingle"))
-          .select(col(id).as("id_b"), col("shingle"))
-        val coldInter = genA.join(genB, Seq("shingle"))
-          .groupBy("id_a", "id_b").agg(count(lit(1)).as("__cold"))
-        val hotA = shA.join(dfB.filter(col("__df") > maxShingleDf), Seq("shingle"))
-          .select(col(id).as("id_a"), col("shingle"))
-        val hotB = shB.join(dfB.filter(col("__df") > maxShingleDf), Seq("shingle"))
-          .select(col(id).as("id_b"), col("shingle"))
-        val hotInter = coldInter.select("id_a", "id_b")
-          .join(hotA, Seq("id_a"))
-          .join(hotB, Seq("id_b", "shingle"))
-          .groupBy("id_a", "id_b").agg(count(lit(1)).as("__hot_n"))
-        coldInter.join(hotInter, Seq("id_a", "id_b"), "left")
-          .withColumn("inter", col("__cold") + coalesce(col("__hot_n"), lit(0L)))
-          .drop("__cold", "__hot_n")
+        val cold = dfB.filter(col("__df") <= maxShingleDf)
+        val hot = dfB.filter(col("__df") > maxShingleDf)
+        guardedInter(shA.join(cold, Seq("shingle")),
+          shB.join(cold, Seq("shingle")), shA.join(hot, Seq("shingle")),
+          shB.join(hot, Seq("shingle")), id, self = false)
       }
-    inter
-      .join(sizesA.select(col(id).as("id_a"), col("n_a")), Seq("id_a"))
-      .join(sizesB.select(col(id).as("id_b"), col("n_b")), Seq("id_b"))
-      .withColumn("jaccard",
-        col("inter") / (col("n_a") + col("n_b") - col("inter")))
-      .filter(col("jaccard") >= minJaccard)
+    finishJaccard(inter, shA, shB, id, minJaccard)
   }
 
   /** Benchmark decontamination overlap: for every (corpus doc, benchmark
@@ -346,10 +291,72 @@ object Dedup {
     */
   def contaminationOverlap(corpusSh: DataFrame, benchSh: DataFrame,
                            id: String): DataFrame =
-    corpusSh.select(col(id).as("id_a"), col("shingle"))
-      .join(benchSh.select(col(id).as("bench_id"), col("shingle")),
-        Seq("shingle"))
-      .groupBy("id_a", "bench_id").agg(count(lit(1)).as("overlap"))
+    pairCounts(corpusSh, benchSh, id, Seq("shingle"), self = false,
+      "overlap", idB = "bench_id")
+
+  /** (id_a, `idB`) rows of the key equi-join of two (id, keys…) frames —
+    * one row per shared key; `self` keeps only id_a < `idB` (one corpus
+    * joined with itself: each unordered pair once, no (x, x) rows).
+    */
+  private def pairJoin(a: DataFrame, b: DataFrame, id: String,
+                       keys: Seq[String], self: Boolean,
+                       idB: String = "id_b"): DataFrame = {
+    val joined = a.select(col(id).as("id_a") +: keys.map(col): _*)
+      .join(b.select(col(id).as(idB) +: keys.map(col): _*), keys)
+    if (self) joined.filter(col("id_a") < col(idB)) else joined
+  }
+
+  /** (id_a, `idB`, `as`): [[pairJoin]] rows counted per pair — the number
+    * of keys the two docs share. */
+  private def pairCounts(a: DataFrame, b: DataFrame, id: String,
+                         keys: Seq[String], self: Boolean, as: String,
+                         idB: String = "id_b"): DataFrame =
+    pairJoin(a, b, id, keys, self, idB)
+      .groupBy("id_a", idB).agg(count(lit(1)).as(as))
+
+  /** (id_a, id_b, `as`): the exact count of shingles shared per candidate
+    * pair of `cand` (id_a, id_b), over the (id, shingle) frames `a` (id_a's
+    * side) and `b` (id_b's side). */
+  private def recount(cand: DataFrame, a: DataFrame, b: DataFrame,
+                      id: String, as: String): DataFrame =
+    cand
+      .join(a.select(col(id).as("id_a"), col("shingle")), Seq("id_a"))
+      .join(b.select(col(id).as("id_b"), col("shingle")), Seq("id_b", "shingle"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as(as))
+
+  /** (id_a, id_b, inter) under a df guard: pairs generated by the cold
+    * (id, shingle) frames, their exact intersection = cold count + the
+    * hot frames' recount (the guarded split in the object doc). */
+  private def guardedInter(coldA: DataFrame, coldB: DataFrame,
+                           hotA: DataFrame, hotB: DataFrame, id: String,
+                           self: Boolean): DataFrame = {
+    val coldInter =
+      pairCounts(coldA, coldB, id, Seq("shingle"), self, "__cold")
+    val hotInter =
+      recount(coldInter.select("id_a", "id_b"), hotA, hotB, id, "__hot_n")
+    coldInter.join(hotInter, Seq("id_a", "id_b"), "left")
+      .withColumn("inter", col("__cold") + coalesce(col("__hot_n"), lit(0L)))
+      .drop("__cold", "__hot_n")
+  }
+
+  /** Attach n_a/n_b — the shingle-set sizes of id_a in the (id, shingle)
+    * frame `a` and of id_b in `b` — to (id_a, id_b, inter) rows, then
+    * [[jaccardAtLeast]]. */
+  private def finishJaccard(inter: DataFrame, a: DataFrame, b: DataFrame,
+                            id: String, minJaccard: Double): DataFrame = {
+    def sizes(sh: DataFrame, side: String) = sh.groupBy(col(id))
+      .agg(count(lit(1)).as(s"n_$side")).withColumnRenamed(id, s"id_$side")
+    inter
+      .join(sizes(a, "a"), Seq("id_a"))
+      .join(sizes(b, "b"), Seq("id_b"))
+      .transform(jaccardAtLeast(minJaccard))
+  }
+
+  /** jaccard = inter / (n_a + n_b − inter), rows below `minJaccard` dropped. */
+  private def jaccardAtLeast(minJaccard: Double)(df: DataFrame): DataFrame =
+    df.withColumn("jaccard",
+        col("inter") / (col("n_a") + col("n_b") - col("inter")))
+      .filter(col("jaccard") >= minJaccard)
 
   /** MinHash signatures: (id, sig array<long> of length `numHashes`).
     * Hash family i is `xxhash64(i, shingle)`; all minima are computed in ONE
@@ -431,12 +438,15 @@ object Dedup {
   def minHashCandidatesFromSignatures(sigs: DataFrame, id: String,
                                       bands: Int, rowsPerBand: Int): DataFrame = {
     val buckets = lshBuckets(sigs, id, bands, rowsPerBand)
-    buckets.select(col(id).as("id_a"), col("band"), col("bucket"))
-      .join(buckets.select(col(id).as("id_b"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+    bandPairs(buckets, buckets, id, self = true)
   }
+
+  /** Distinct (id_a, id_b) of two (id, band, bucket) frames meeting in
+    * ≥1 (band, bucket) group ([[pairJoin]]). */
+  private def bandPairs(a: DataFrame, b: DataFrame, id: String,
+                        self: Boolean): DataFrame =
+    pairJoin(a, b, id, Seq("band", "bucket"), self)
+      .select("id_a", "id_b").distinct()
 
   /** LSH candidate pairs for SEVERAL band configurations from ONE signature
     * pass — the harness shape for tuning the bands/rows trade (recall rises
@@ -476,11 +486,8 @@ object Dedup {
   def crossMinHashCandidates(sigsA: DataFrame, bucketsB: DataFrame,
                              id: String, bands: Int,
                              rowsPerBand: Int): DataFrame =
-    lshBuckets(sigsA, id, bands, rowsPerBand)
-      .select(col(id).as("id_a"), col("band"), col("bucket"))
-      .join(bucketsB.select(col(id).as("id_b"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      .select("id_a", "id_b").distinct()
+    bandPairs(lshBuckets(sigsA, id, bands, rowsPerBand), bucketsB, id,
+      self = false)
 
   /** LSH-tier incremental near-dup: cross-frame candidates verified by the
     * true cross-frame Jaccard (shingle-intersection recount). This is the
@@ -497,18 +504,10 @@ object Dedup {
     val bucketsB = lshBuckets(
       minHashSignaturesFromShingles(shB, id, numHashes, portable),
       id, bands, numHashes / bands)
-    val sizesA = shA.groupBy(col(id)).agg(count(lit(1)).as("n_a"))
-    val sizesB = shB.groupBy(col(id)).agg(count(lit(1)).as("n_b"))
-    crossMinHashCandidates(sigsA, bucketsB, id, bands, numHashes / bands)
-      .join(shA.select(col(id).as("id_a"), col("shingle")), Seq("id_a"))
-      .join(shB.select(col(id).as("id_b"), col("shingle")),
-        Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-      .join(sizesA.select(col(id).as("id_a"), col("n_a")), Seq("id_a"))
-      .join(sizesB.select(col(id).as("id_b"), col("n_b")), Seq("id_b"))
-      .withColumn("jaccard",
-        col("inter") / (col("n_a") + col("n_b") - col("inter")))
-      .filter(col("jaccard") >= minJaccard)
+    val cand =
+      crossMinHashCandidates(sigsA, bucketsB, id, bands, numHashes / bands)
+    finishJaccard(recount(cand, shA, shB, id, "inter"), shA, shB, id,
+      minJaccard)
   }
 
   /** LSH candidates verified by true n-gram Jaccard ≥ `minJaccard`. */
@@ -529,17 +528,9 @@ object Dedup {
     // string grain its signatures are defined over
     val sh = if (portable) wordShingleHashes(docs, id, text, n)
              else wordShingles(docs, id, text, n)
-    val sizes = sh.groupBy(col(id)).agg(count(lit(1)).as("n_sh"))
     val sigs = minHashSignaturesFromShingles(sh, id, numHashes, portable)
-    minHashCandidatesFromSignatures(sigs, id, bands, numHashes / bands)
-      .join(sh.select(col(id).as("id_a"), col("shingle")), Seq("id_a"))
-      .join(sh.select(col(id).as("id_b"), col("shingle")), Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-      .join(sizes.select(col(id).as("id_a"), col("n_sh").as("n_a")), Seq("id_a"))
-      .join(sizes.select(col(id).as("id_b"), col("n_sh").as("n_b")), Seq("id_b"))
-      .withColumn("jaccard",
-        col("inter") / (col("n_a") + col("n_b") - col("inter")))
-      .filter(col("jaccard") >= minJaccard)
+    val cand = minHashCandidatesFromSignatures(sigs, id, bands, numHashes / bands)
+    finishJaccard(recount(cand, sh, sh, id, "inter"), sh, sh, id, minJaccard)
   }
 
   /** 64-bit SimHash per doc via the native single-pass Catalyst expression
@@ -551,8 +542,7 @@ object Dedup {
     */
   def simHash64Native(docs: DataFrame, id: String, text: String,
                       portable: Boolean = false): DataFrame = {
-    val tokens = filter(split(normalizeText(col(text)), " "), w => w =!= "")
-    docs.select(col(id), tokens.as("__tokens"))
+    docs.select(col(id), TextAnalysis.tokens(col(text)).as("__tokens"))
       .filter(size(col("__tokens")) > 0)
       .select(col(id),
         graft.plans.SimHash64Expression.simhash64(col("__tokens"), portable)
@@ -565,7 +555,7 @@ object Dedup {
     */
   def simHash64(docs: DataFrame, id: String, text: String): DataFrame = {
     val words = docs.select(col(id),
-      explode(filter(split(normalizeText(col(text)), " "), w => w =!= "")).as("w"))
+      explode(TextAnalysis.tokens(col(text))).as("w"))
       .withColumn("h", xxhash64(col("w")))
     val bitSums = (0 until 64).map(i =>
       sum(when(shiftright(col("h"), i).bitwiseAND(lit(1L)) === 1L, 1)
@@ -642,8 +632,7 @@ object Dedup {
         i => concat_ws(" ", slice(ts, i * segTokens + 1, lit(segTokens)))))
       .otherwise(array())
     val segs = docs
-      .select(col(id),
-        filter(split(normalizeText(col(text)), " "), w => w =!= "").as("__ts"))
+      .select(col(id), TextAnalysis.tokens(col(text)).as("__ts"))
       .select(col(id), posexplode(chunks).as(Seq("seg_idx", "seg")))
     val first = segs.groupBy("seg")
       .agg(min(struct(col(id), col("seg_idx"))).as("__f"))
@@ -728,8 +717,7 @@ object Dedup {
     val covered = spans.select(col(id),
       explode(sequence(col("span_start"), col("span_end") - 1)).as("pos"))
     val toks = docs
-      .select(col(id),
-        filter(split(normalizeText(col(text)), " "), w => w =!= "").as("__ts"))
+      .select(col(id), TextAnalysis.tokens(col(text)).as("__ts"))
       .select(col(id), posexplode(col("__ts")).as(Seq("pos", "tok")))
       .withColumn("pos", col("pos").cast("long"))
     val kept = toks.join(covered, Seq(id, "pos"), "left_anti")
@@ -759,13 +747,15 @@ object Dedup {
                        text: String, l: Int): DataFrame = {
     import graft.plans.Fnv1a64Expression.fnv1a64
     val ts = col("__ts")
+    // the cast keeps the gram column nullable, as the span and provenance
+    // plans were measured with (a non-null empty array would let the
+    // optimizer drop their isnotnull filters and move both plans)
     val gramArr = when(size(ts) >= l,
       transform(sequence(lit(0), size(ts) - l),
         i => fnv1a64(concat_ws(" ", slice(ts, i + 1, lit(l))))))
       .otherwise(array().cast("array<bigint>"))
     docs
-      .select(col(id),
-        filter(split(normalizeText(col(text)), " "), w => w =!= "").as("__ts"))
+      .select(col(id), TextAnalysis.tokens(col(text)).as("__ts"))
       .select(col(id), posexplode(gramArr).as(Seq("pos", "__g")))
       .withColumn("pos", col("pos").cast("long"))
   }
@@ -835,11 +825,8 @@ object Dedup {
       .select("__g")
     val idx = grams.join(pairable, Seq("__g"), "left_semi")
     val perDoc = grams.groupBy(col(id)).agg(count(lit(1)).as("n_grams"))
-    val pairs = idx.select(col(id).as("id_a"), col("__g"))
-      .join(idx.select(col(id).as("id_b"), col("__g")), Seq("__g"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("shared_grams"))
+    val pairs =
+      pairCounts(idx, idx, id, Seq("__g"), self = true, "shared_grams")
     pairs
       .join(perDoc.select(col(id).as("id_a"),
         col("n_grams").as("n_grams_a")), Seq("id_a"))
@@ -993,9 +980,7 @@ object Dedup {
       .withColumn("inter",
         size(array_intersect(col("__aa"), col("__ab"))).cast("long"))
     inter
-      .withColumn("jaccard",
-        col("inter") / (col("n_a") + col("n_b") - col("inter")))
-      .filter(col("jaccard") >= minJaccard)
+      .transform(jaccardAtLeast(minJaccard))
       .select("id_a", "id_b", "n_a", "n_b", "inter", "jaccard")
   }
 
@@ -1082,8 +1067,7 @@ object Dedup {
     // inside the vector row); plain shuffle joins — signature candidates
     // track angle, so the candidate frame stays near the true pair mass
     // and never needs the broadcast tier
-    verifyCosine(cand, sparseVecs(tf, id), broadcastVecs = false,
-      minCos2Num, minCos2Den)
+    verifyCosine(cand, sparseVecs(tf, id), minCos2Num, minCos2Den)
       .select("id_a", "id_b", "hamming", "dot", "n2_a", "n2_b",
         "cos2_micro")
   }
@@ -1314,26 +1298,15 @@ object Dedup {
     // few MB in and millions of pairs OUT, so the explosion is invisible
     // and one task runs the whole hot term (measured at sf1: the join
     // stage's max task 64.7 s == stage wall 64.8 s, 181.7M shuffle-write
-    // rows dominated by one of 14 tasks). The textbook balanced
-    // quadratic-self-join fix: number each term's postings (one linear
-    // __t-keyed window), chunk by SelfJoinChunk, and join on the CHUNK
-    // CELL (__t, __ca, __cb) — the left posting replicates to cells
-    // (c, c..nc−1), the right to (0..c, c), so every unordered posting
-    // pair meets in EXACTLY the cell (min chunk, max chunk) and a hot
-    // term's df² work spreads over (df/B)² independent keys, each ≤ B²
-    // probes. Replication is Σ df²/B rows (≈ 0.1% of the pair mass at
-    // B = 1024); terms with one chunk collapse to a single (t, 0, 0)
-    // cell with zero replication, so natural corpora pay only the
-    // posting-numbering window.
-    val byTerm = Window.partitionBy("__t")
-    val chunked = gen
-      .select(col(id), col("__t"), col("__s2"), col("__n2"))
-      .withColumn("__pos",
-        row_number().over(byTerm.orderBy(col(id))).cast("long") - 1)
-      .withColumn("__nc",
-        expr(s"(count(1) over (partition by __t) + ${selfJoinChunk - 1}) " +
-          s"div $selfJoinChunk"))
-      .withColumn("__c", expr(s"__pos div $selfJoinChunk"))
+    // rows dominated by one of 14 tasks). Hence the balanced chunk-cell
+    // self-join on the term key ([[Skew.chunkCells]], postings numbered
+    // by id): a hot term's df² work spreads over (df/B)² independent
+    // cells, replication is Σ df²/B rows (≈ 0.1% of the pair mass at
+    // B = 1024), and natural corpora pay only the posting-numbering
+    // window.
+    val (left, right) = Skew.chunkCells(
+      gen.select(col(id), col("__t"), col("__s2"), col("__n2")), "__t",
+      col(id), selfJoinChunk)
     // The cell join's exchanges are left to AQE DELIBERATELY, despite the
     // input-size-blindness pattern (postings in are MBs, pairs out are
     // GBs; at sf1 AQE coalesces the joined stage to 17 of 32 slots).
@@ -1348,14 +1321,10 @@ object Dedup {
     // input here is ~20-30 MB compressed, so AQE's ~1 MB target merges
     // it to 17 partitions; at sf10+ the same input is 10× larger and AQE
     // keeps full width on its own.
-    val pairs = chunked
-      .withColumn("__cb", explode(sequence(col("__c"), col("__nc") - 1)))
-      .withColumnRenamed("__c", "__ca")
+    val pairs = left
       .select(col(id).as("id_a"), col("__t"), col("__ca"), col("__cb"),
         col("__s2").as("__s2a"), col("__n2").as("__n2a"))
-      .join(chunked
-        .withColumn("__ca", explode(sequence(lit(0L), col("__c"))))
-        .withColumnRenamed("__c", "__cb")
+      .join(right
         .select(col(id).as("id_b"), col("__t"), col("__ca"), col("__cb"),
           col("__s2").as("__s2b"), col("__n2").as("__n2b")),
         Seq("__t", "__ca", "__cb"))
@@ -1401,22 +1370,20 @@ object Dedup {
       // codegen; the map-fold it replaces linear-scanned string keys per
       // term and dominated the sf1 verify); n2 rides inside the vector
       // row
-      verifyCosine(cand, sparseVecs(kept, id), broadcastVecs = false,
-        minCos2Num, minCos2Den)
+      verifyCosine(cand, sparseVecs(kept, id), minCos2Num, minCos2Den)
         .select("id_a", "id_b", "dot", "n2_a", "n2_b", "cos2_micro")
     }
   }
 
   /** Postings bound under which [[cosinePairs]] COLLECTS the per-doc
     * vector table into a [[graft.plans.SparseVecModel]] (16 B per posting
-    * → ≤ ~64 MB, one shared object per executor) and verifies every
-    * posting-join row inline: on vocabulary-degenerate corpora the
+    * → ≤ ~64 MB, one shared object per executor) and verifies each
+    * distinct candidate inline: on vocabulary-degenerate corpora the
     * candidate frame is enormous while the vector table is tiny, and the
-    * model removes the pre-verify distinct, both vector joins, and all
-    * per-row array copies. Past the bound (a 100 TB natural-vocabulary
-    * corpus — vector table unbounded, candidates few) the verify keeps
-    * the distinct + shuffle-join tier. The gate is a MEASURED count of
-    * the pinned postings, not a guess.
+    * model removes both vector joins and all per-row array copies. Past
+    * the bound (a 100 TB natural-vocabulary corpus — vector table
+    * unbounded, candidates few) the verify takes the shuffle-join tier.
+    * The gate is a MEASURED count of the pinned postings, not a guess.
     */
   val VerifyBroadcastPostings = 4000000L
 
@@ -1454,15 +1421,15 @@ object Dedup {
         expr("transform(__kv, x -> x.v)").as("__vs"), col("__n2"))
 
   /** Exact-integer cosine verify of an (id_a, id_b) candidate frame
-    * against [[sparseVecs]] vectors: attach both docs' vectors (broadcast
-    * when `broadcastVecs` — see [[VerifyBroadcastPostings]]), merge-dot,
-    * threshold den·dot² ≥ num·n2_a·n2_b, emit the integer certificate.
+    * against [[sparseVecs]] vectors: attach both docs' vectors by two
+    * id-keyed shuffle joins (the distributed tier; small vector tables take
+    * [[cosinePairs]]' collected-model check instead — see
+    * [[VerifyBroadcastPostings]]), merge-dot, threshold
+    * den·dot² ≥ num·n2_a·n2_b, emit the integer certificate.
     */
-  private def verifyCosine(cand: DataFrame, vecs: DataFrame,
-                           broadcastVecs: Boolean,
+  private def verifyCosine(cand: DataFrame, v: DataFrame,
                            minCos2Num: Long, minCos2Den: Long): DataFrame = {
-    val v = if (broadcastVecs) broadcast(vecs) else vecs
-    val id = vecs.columns.head
+    val id = v.columns.head
     cand
       .join(v.select(col(id).as("id_a"), col("__ks").as("__ksa"),
         col("__vs").as("__vsa"), col("__n2").as("n2_a")), Seq("id_a"))

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.plans.Fnv1a64Expression.fnv1a64
@@ -53,17 +53,12 @@ import graft.plans.Fnv1a64Expression.fnv1a64
   */
 object LanguageModel {
 
-  /** Normalized word array of `text` — the corpus-wide tokenization every
-    * dedup/curation operator shares (`Dedup.normalizeText` ∘ split). */
-  private def words(text: Column): Column =
-    filter(split(Dedup.normalizeText(text), " "), w => w =!= "")
-
   /** (id, prev, w) consecutive-word pairs — map-only explode, no exchange.
     * Docs with fewer than two words produce no rows (`sequence(1, 0)`
     * would DESCEND in Spark, hence the explicit size guard). */
   def bigramPairs(docs: DataFrame, id: String, text: String): DataFrame =
     docs
-      .select(col(id), words(col(text)).as("__ws"))
+      .select(col(id), TextAnalysis.tokens(col(text)).as("__ws"))
       .filter(size(col("__ws")) >= 2)
       .select(col(id), col("__ws"),
         explode(sequence(lit(1), size(col("__ws")) - 1)).as("__i"))
@@ -80,7 +75,7 @@ object LanguageModel {
     val bg = bigramPairs(train, id, text)
     val bi = bg.groupBy("prev", "w").agg(count(lit(1)).as("c2"))
     val uni = bg.groupBy("prev").agg(count(lit(1)).as("c1"))
-    val v = train.select(explode(words(col(text))).as("__w"))
+    val v = train.select(explode(TextAnalysis.tokens(col(text))).as("__w"))
       .agg(countDistinct(col("__w")).as("V"))
     (bi, uni, v)
   }
@@ -120,7 +115,7 @@ object LanguageModel {
   def hashedFeatures(docs: DataFrame, id: String, text: String,
                      buckets: Int): DataFrame = {
     val unis = docs
-      .select(col(id), explode(words(col(text))).as("__f"))
+      .select(col(id), explode(TextAnalysis.tokens(col(text))).as("__f"))
     val bis = bigramPairs(docs, id, text)
       .select(col(id), concat_ws(" ", col("prev"), col("w")).as("__f"))
     unis.unionByName(bis)

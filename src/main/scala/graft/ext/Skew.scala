@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation for hot keys — the failure mode of `groupBy`/`join` at
@@ -76,5 +77,44 @@ object Skew {
     val saltedRight = right.withColumn("__salt",
       explode(sequence(lit(0), lit(saltBuckets - 1))))
     saltedLeft.join(saltedRight, keys :+ "__salt", joinType).drop("__salt")
+  }
+
+  /** The two sides of a balanced chunk-cell self-join on `key` — for
+    * quadratic self-joins (every pair of rows sharing a key), whose output
+    * AQE's skew detection cannot see: it sizes shuffle INPUT, and a hot
+    * key's few MB of rows fan out to millions of pairs in one task.
+    *
+    * Rows are numbered within their key by `order` (one linear key-keyed
+    * window) and cut into chunks of `chunk` rows. The left side replicates
+    * each row of chunk c to cells (c, c..nc−1), the right side to
+    * (0..c, c), so joining the sides on (key, __ca, __cb) meets every
+    * unordered pair of a key's rows in EXACTLY the cell (min chunk, max
+    * chunk): a key with m rows spreads its m² pair work over (m/B)²
+    * independent cells of ≤ B² pairs each. Keys with one chunk collapse to
+    * a single (key, 0, 0) cell with zero replication. Diagonal cells carry
+    * both orientations of a pair; the caller's pair predicate halves them,
+    * and a cross-chunk cell always has the earlier-numbered row on the
+    * left.
+    *
+    * Returns (left, right): `df`'s columns plus __ca, __cb (and the
+    * numbering helpers __pos, __nc). Callers pick their payload columns
+    * and join hint.
+    */
+  def chunkCells(df: DataFrame, key: String, order: Column,
+                 chunk: Long): (DataFrame, DataFrame) = {
+    val numbered = df
+      .withColumn("__pos",
+        row_number().over(Window.partitionBy(key).orderBy(order))
+          .cast("long") - 1)
+      .withColumn("__nc", expr(
+        s"(count(1) over (partition by $key) + ${chunk - 1}) div $chunk"))
+      .withColumn("__c", expr(s"__pos div $chunk"))
+    val left = numbered
+      .withColumn("__cb", explode(sequence(col("__c"), col("__nc") - 1)))
+      .withColumnRenamed("__c", "__ca")
+    val right = numbered
+      .withColumn("__ca", explode(sequence(lit(0L), col("__c"))))
+      .withColumnRenamed("__c", "__cb")
+    (left, right)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ext.Caches
+import graft.ext.{Caches, Skew}
 import graft.functions.Geo
 import graft.operators.NearestNeighborJoin
 
@@ -71,7 +71,7 @@ object RecommendationJob {
   /** Membership chunk for the balanced per-channel pair self-join tier:
     * a channel with m members splits into ⌈m/B⌉ chunks and its m² pair
     * work spreads over the chunk-pair cells, each ≤ B² pairs — the
-    * [[graft.ext.Dedup.SelfJoinChunk]] device applied to the one
+    * [[graft.ext.Skew.chunkCells]] device applied to the one
     * remaining unsplittable-key shape in the engine (J6,
     * project_step_3.py:121-126). 2048² ≈ 4M pairs per cell keeps a cell
     * well under a task's memory while dozens of cells fill a wave.
@@ -212,38 +212,19 @@ object RecommendationJob {
             col("user_id").as("message_to")),
           Seq("subscription_channel"), "left")
     } else {
-      // BALANCED-CHUNK TIER (the Dedup.cosinePairs device on the channel
-      // key): number each channel's members (one linear channel-keyed
-      // window, user_id DESC), chunk by `pairChunk`, and join on the CHUNK
-      // CELL (channel, __ca, __cb) — the left member replicates to cells
-      // (c, c..nc−1), the right to (0..c, c), so every unordered member
-      // pair meets in EXACTLY the cell (min chunk, max chunk) with the
-      // LARGER user on the left (DESC numbering), i.e. already in the
-      // reference's user_id > message_to orientation; diagonal cells carry
-      // both orientations and the filter halves them. A viral channel's m²
-      // pairs spread over (m/B)² independent cell keys, each ≤ B² pairs;
-      // single-chunk channels collapse to one (ch, 0, 0) cell with zero
-      // replication. The shuffle_hash hint forbids the broadcast plan —
-      // under a broadcast the pair fan-out would run inside the window's
-      // channel-partitioned tasks and re-serialize the hot channel; the
-      // hint exchanges both sides by the CELL key instead, which is the
-      // entire point of the device.
-      val byCh = Window.partitionBy("subscription_channel")
-      val numbered = positionedBase
-        .withColumn("__pos",
-          row_number().over(byCh.orderBy(col("user_id").desc))
-            .cast("long") - 1)
-        .withColumn("__nc", expr("(count(1) over (partition by " +
-          s"subscription_channel) + ${pairChunk - 1}) div $pairChunk"))
-        .withColumn("__c", expr(s"__pos div $pairChunk"))
-      val left = numbered
-        .withColumn("__cb", explode(sequence(col("__c"), col("__nc") - 1)))
-        .select(col("subscription_channel"), col("__c").as("__ca"),
-          col("__cb"), col("user_id"))
-      val right = numbered
-        .withColumn("__ca", explode(sequence(lit(0L), col("__c"))))
-        .select(col("subscription_channel"), col("__ca"),
-          col("__c").as("__cb"), col("user_id").as("message_to"))
+      // BALANCED-CHUNK TIER ([[Skew.chunkCells]] on the channel key,
+      // members numbered user_id DESC: a cross-chunk cell puts the LARGER
+      // user on the left, the reference's orientation). The shuffle_hash
+      // hint forbids the broadcast plan — under a broadcast the pair
+      // fan-out would run inside the window's channel-partitioned tasks
+      // and re-serialize the hot channel; the hint exchanges both sides by
+      // the CELL key instead, which is the entire point of the device.
+      val (cellsL, cellsR) = Skew.chunkCells(positionedBase,
+        "subscription_channel", col("user_id").desc, pairChunk)
+      val left = cellsL.select(col("subscription_channel"), col("__ca"),
+        col("__cb"), col("user_id"))
+      val right = cellsR.select(col("subscription_channel"), col("__ca"),
+        col("__cb"), col("user_id").as("message_to"))
       left.join(right.hint("shuffle_hash"),
           Seq("subscription_channel", "__ca", "__cb"))
         .drop("__ca", "__cb")

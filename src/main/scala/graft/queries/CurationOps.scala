@@ -641,8 +641,7 @@ object CurationOps extends Catalog {
     // they are — the oracle replays the identical construction.
     "q92_typo_pairs" -> ((s, d) => {
       val toks = Tables.documents(s, d)
-        .select(explode(filter(split(Dedup.normalizeText(col("text")), " "),
-          w => w =!= "")).as("tok"))
+        .select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
         .distinct().filter(length(col("tok")) >= 5)
       val typos = toks.select(concat(col("tok").substr(lit(1), lit(1)),
         col("tok").substr(lit(3), length(col("tok")) - 2)).as("tok"))

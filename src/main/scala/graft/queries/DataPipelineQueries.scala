@@ -52,6 +52,58 @@ object DataPipelineQueries extends Catalog {
   private val stopListSql =
     TextAnalysis.EnglishStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
 
+  /** The q22 family's near-dup edges (q22, q54, q59, q73, q162, q76,
+    * q187–q189 and [[graft.tools.CcFoldProbe]]): word 3-gram shingles on
+    * the hashed grain, Jaccard ≥ 0.1, df cap 5. The cap is the 100 TB
+    * contract (per-shingle df² is the blow-up) and actually bites on this
+    * corpus (max df 7 at sf0.01, 25 at sf0.1), so the guarded branch is
+    * oracle-pinned at every driver scale. The incremental members split
+    * the corpus into an incoming batch (doc_id % 10 == 7) and the stored
+    * base. The DuckDB oracles spell the same values on their own: they
+    * are the independent reference.
+    */
+  private[graft] object DupEdges {
+    val N = 3
+    val MinJaccard = 0.1
+    val MaxShingleDf = 5L
+    val BatchResidue = 7
+
+    /** (incoming batch, base corpus) */
+    def split(docs: DataFrame): (DataFrame, DataFrame) =
+      (docs.filter(col("doc_id") % 10 === BatchResidue),
+        docs.filter(col("doc_id") % 10 =!= BatchResidue))
+
+    def shingles(docs: DataFrame): DataFrame =
+      Dedup.wordShingleHashes(docs, "doc_id", "text", n = N)
+
+    /** within-corpus pairs with inter, n_a, n_b, jaccard */
+    def pairs(docs: DataFrame): DataFrame =
+      Dedup.jaccardPairs(docs, "doc_id", "text", n = N,
+        minJaccard = MinJaccard, maxShingleDf = MaxShingleDf)
+
+    /** (id_a, id_b) within one corpus */
+    def edges(docs: DataFrame): DataFrame =
+      pairs(docs).select(col("id_a"), col("id_b"))
+
+    /** (id_a, id_b) within one shingle frame */
+    def within(sh: DataFrame): DataFrame =
+      Dedup.jaccardPairsFromShingles(sh, "doc_id",
+          minJaccard = MinJaccard, maxShingleDf = MaxShingleDf)
+        .select(col("id_a"), col("id_b"))
+
+    /** (id_a ∈ batch, id_b ∈ base) */
+    def cross(shA: DataFrame, shB: DataFrame): DataFrame =
+      Dedup.crossJaccardPairs(shA, shB, "doc_id",
+          minJaccard = MinJaccard, maxShingleDf = MaxShingleDf)
+        .select(col("id_a"), col("id_b"))
+
+    /** store key of the base corpus's labels and edges under these
+      * parameters: a change to any of them keys a fresh build */
+    def storeKey(d: String): String =
+      Tables.contentKey(s"$d/documents.parquet",
+        s"n${N}_j${MinJaccard}_df${MaxShingleDf}_base$BatchResidue")
+  }
+
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- exact dedup: one shuffle on the normalized-text fingerprint -------
     "q21_exact_dup_groups" -> ((s, d) => {
@@ -62,11 +114,7 @@ object DataPipelineQueries extends Catalog {
     }),
 
     // ---- n-gram Jaccard near-dup via shingle inverted index ----------------
-    // maxShingleDf = 5: the stop-shingle guard is the 100 TB contract (per-
-    // shingle df² is the blow-up); 5 actually bites on this corpus (max df is
-    // 7 at sf0.01, 25 at sf0.1), so the guarded branch — candidate generation
-    // without hot shingles, true-Jaccard recount adding the hot contribution
-    // back — is exercised and oracle-pinned at every scale the driver runs.
+    // the DupEdges parameters (guarded branch oracle-pinned at every scale).
     // PLAIN scan (round 12): the multi-subtree jaccardPairs chain replays
     // the widen exchange per subtree — sidecar r9 (plain) vs r11 (hash
     // widen): q22 wall 2.0→5.1 s, CPU 5.1→77.5 s in full-catalog context;
@@ -74,8 +122,7 @@ object DataPipelineQueries extends Catalog {
     // BENCH_SF1.json widen_ab_r12) found no widen-keeping config that
     // recovers the CPU, so this family reverts like q130/q131 did
     "q22_jaccard_near_dups" -> ((s, d) => {
-      Dedup.jaccardPairs(Tables.documents(s, d), "doc_id", "text",
-          n = 3, minJaccard = 0.1, maxShingleDf = 5L)
+      DupEdges.pairs(Tables.documents(s, d))
         .select(col("id_a"), col("id_b"), col("inter").as("shared"),
           (floor(col("jaccard") * 1e6 + 0.5) / 1e6).as("jaccard"))
     }),
@@ -297,9 +344,7 @@ object DataPipelineQueries extends Catalog {
       // widened 11.7 s / plain 9.4 s, and +6 CPU-s for the extra
       // round-robin string shuffles. The starved first scan stage is
       // amortized across subtrees the same way the recompute is.
-      val docs = Tables.documents(s, d)
-      val incoming = docs.filter(col("doc_id") % 10 === 7)
-      val corpus = docs.filter(col("doc_id") % 10 =!= 7)
+      val (incoming, corpus) = DupEdges.split(Tables.documents(s, d))
       // the shingle frames feed ~10 subtrees (sizes/df/gen/inter across
       // three pair pipelines). Round-12 measured Caches.pin here at
       // 35.0 s vs 15.7 s recomputed — the ROW-CACHE materialization +
@@ -310,23 +355,13 @@ object DataPipelineQueries extends Catalog {
       // subtree — measured 9.3 → 7.9 s wall / 9.8 → 7.1 CPU-s at sf0.1.
       // hashed shingle grain (round-16, the q22-family switch): all ~10
       // subtrees' exchanges and probes move longs instead of 3-word strings
-      val shA = Dedup.wordShingleHashes(incoming, "doc_id", "text", n = 3)
-        .localCheckpoint(false)
-      val shB = Dedup.wordShingleHashes(corpus, "doc_id", "text", n = 3)
-        .localCheckpoint(false)
+      val shA = DupEdges.shingles(incoming).localCheckpoint(false)
+      val shB = DupEdges.shingles(corpus).localCheckpoint(false)
       val prior = graft.operators.ConnectedComponents.run(
-        Dedup.jaccardPairsFromShingles(shB, "doc_id",
-            minJaccard = 0.1, maxShingleDf = 5L)
-          .select(col("id_a"), col("id_b")),
-        "id_a", "id_b")
-      val cross = Dedup.crossJaccardPairs(shA, shB, "doc_id",
-          minJaccard = 0.1, maxShingleDf = 5L)
-        .select(col("id_a"), col("id_b"))
-      val within = Dedup.jaccardPairsFromShingles(shA, "doc_id",
-          minJaccard = 0.1, maxShingleDf = 5L)
-        .select(col("id_a"), col("id_b"))
+        DupEdges.within(shB), "id_a", "id_b")
       graft.operators.ConnectedComponents.merge(prior, "id", "component",
-          cross.unionByName(within), "id_a", "id_b")
+          DupEdges.cross(shA, shB).unionByName(DupEdges.within(shA)),
+          "id_a", "id_b")
         .withColumn("cluster_size",
           count(lit(1)).over(Window.partitionBy("component")))
         .withColumnRenamed("id", "doc_id")
@@ -346,28 +381,17 @@ object DataPipelineQueries extends Catalog {
     // hash, which re-derives base components, batch endpoints, touched
     // roots, AND the final whole-graph closure from scratch.
     "q187_cc_fold" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val incoming = docs.filter(col("doc_id") % 10 === 7)
-      val corpus = docs.filter(col("doc_id") % 10 =!= 7)
+      val (incoming, corpus) = DupEdges.split(Tables.documents(s, d))
       // hashed shingle grain (round-16): the batch-edge generators move
       // 8-byte keys end to end (the q22-family switch)
-      val shA = Dedup.wordShingleHashes(incoming, "doc_id", "text", n = 3)
-        .localCheckpoint(false)
-      val shB = Dedup.wordShingleHashes(corpus, "doc_id", "text", n = 3)
-        .localCheckpoint(false)
+      val shA = DupEdges.shingles(incoming).localCheckpoint(false)
+      val shB = DupEdges.shingles(corpus).localCheckpoint(false)
       val stored = Tables.ensureMaterialized(s, "cc_labels",
-        Tables.contentKey(s"$d/documents.parquet", "j01df5base7"))(
+        DupEdges.storeKey(d))(
         graft.operators.ConnectedComponents.run(
-          Dedup.jaccardPairsFromShingles(shB, "doc_id",
-              minJaccard = 0.1, maxShingleDf = 5L)
-            .select(col("id_a"), col("id_b")),
-          "id_a", "id_b"))
-      val batchEdges = Dedup.crossJaccardPairs(shA, shB, "doc_id",
-          minJaccard = 0.1, maxShingleDf = 5L)
-        .select(col("id_a"), col("id_b"))
-        .unionByName(Dedup.jaccardPairsFromShingles(shA, "doc_id",
-            minJaccard = 0.1, maxShingleDf = 5L)
-          .select(col("id_a"), col("id_b")))
+          DupEdges.within(shB), "id_a", "id_b"))
+      val batchEdges =
+        DupEdges.cross(shA, shB).unionByName(DupEdges.within(shA))
       graft.operators.ConnectedComponents.fold(stored, "id", "component",
           batchEdges, "id_a", "id_b")
         .withColumn("cluster_size",
@@ -390,14 +414,10 @@ object DataPipelineQueries extends Catalog {
     // the base closure, the touched roots, AND the survivor closure from
     // scratch; the `touched` frontier itself is under the hash.
     "q188_cc_unfold" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val corpus = docs.filter(col("doc_id") % 10 =!= 7)
-      val shB = Dedup.wordShingleHashes(corpus, "doc_id", "text", n = 3)
-      val key = Tables.contentKey(s"$d/documents.parquet", "j01df5base7")
+      val (_, corpus) = DupEdges.split(Tables.documents(s, d))
+      val key = DupEdges.storeKey(d)
       val storedEdges = Tables.ensureMaterialized(s, "cc_edges", key)(
-        Dedup.jaccardPairsFromShingles(shB, "doc_id",
-            minJaccard = 0.1, maxShingleDf = 5L)
-          .select(col("id_a"), col("id_b")))
+        DupEdges.within(DupEdges.shingles(corpus)))
       val stored = Tables.ensureMaterialized(s, "cc_labels", key)(
         graft.operators.ConnectedComponents.run(storedEdges, "id_a", "id_b"))
       val takedown = corpus.filter(col("doc_id") % 10 === 3)
@@ -423,14 +443,10 @@ object DataPipelineQueries extends Catalog {
     // (never re-scored), only touched clusters re-run the argmax — at
     // 100 TB the repair is O(touched neighborhood), not a corpus re-score.
     "q189_takedown_cascade" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val corpus = docs.filter(col("doc_id") % 10 =!= 7)
-      val shB = Dedup.wordShingleHashes(corpus, "doc_id", "text", n = 3)
-      val key = Tables.contentKey(s"$d/documents.parquet", "j01df5base7")
+      val (_, corpus) = DupEdges.split(Tables.documents(s, d))
+      val key = DupEdges.storeKey(d)
       val storedEdges = Tables.ensureMaterialized(s, "cc_edges", key)(
-        Dedup.jaccardPairsFromShingles(shB, "doc_id",
-            minJaccard = 0.1, maxShingleDf = 5L)
-          .select(col("id_a"), col("id_b")))
+        DupEdges.within(DupEdges.shingles(corpus)))
       val stored = Tables.ensureMaterialized(s, "cc_labels", key)(
         graft.operators.ConnectedComponents.run(storedEdges, "id_a", "id_b"))
       val scoredAll = corpus.select(col("doc_id"),
@@ -1060,8 +1076,7 @@ object DataPipelineQueries extends Catalog {
     "q170_lsh_recall_sweep" -> ((s, d) => {
       val docs = Tables.documentsWide(s, d).select(
         col("doc_id"),
-        filter(split(Dedup.normalizeText(col("text")), " "), w => w =!= "")
-          .as("ws"))
+        TextAnalysis.tokens(col("text")).as("ws"))
       // prefix texts re-tokenize to exactly their token slice: tokens are
       // whitespace-free and normalizeText is idempotent over a
       // single-space join
@@ -1670,9 +1685,7 @@ object DataPipelineQueries extends Catalog {
     // with) — the oracle's recursive CTE pins exactly that closure.
     "q54_dup_clusters" -> ((s, d) => {
       // plain scan: the q22 widen-replay revert (widen_ab_r12)
-      val pairs = Dedup.jaccardPairs(Tables.documents(s, d), "doc_id", "text",
-          n = 3, minJaccard = 0.1, maxShingleDf = 5L)
-        .select(col("id_a"), col("id_b"))
+      val pairs = DupEdges.edges(Tables.documents(s, d))
       graft.operators.ConnectedComponents.run(pairs, "id_a", "id_b")
         .withColumn("cluster_size",
           count(lit(1)).over(Window.partitionBy("component")))
@@ -1688,9 +1701,7 @@ object DataPipelineQueries extends Catalog {
     "q59_corpus_dedup" -> ((s, d) => {
       // plain scan: the q22 widen-replay revert (widen_ab_r12)
       val docs = Tables.documents(s, d)
-      val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
-          n = 3, minJaccard = 0.1, maxShingleDf = 5L)
-        .select(col("id_a"), col("id_b"))
+      val pairs = DupEdges.edges(docs)
       val comp = graft.operators.ConnectedComponents.run(pairs, "id_a", "id_b")
         .withColumnRenamed("id", "doc_id")
       docs.select(col("doc_id"), col("lang"))
@@ -1718,9 +1729,7 @@ object DataPipelineQueries extends Catalog {
     "q162_dedup_survivorship" -> ((s, d) => {
       // plain scan: the q22 widen-replay revert (widen_ab_r12)
       val docs = Tables.documents(s, d)
-      val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
-          n = 3, minJaccard = 0.1, maxShingleDf = 5L)
-        .select(col("id_a"), col("id_b"))
+      val pairs = DupEdges.edges(docs)
       val comp = graft.operators.ConnectedComponents.run(pairs, "id_a", "id_b")
         .withColumnRenamed("id", "doc_id")
       val scored = graft.ext.Caches.pin(docs
@@ -1750,9 +1759,7 @@ object DataPipelineQueries extends Catalog {
       import graft.plans.Fnv1a64Expression.fnv1a64
       // plain scan: the q22 widen-replay revert (widen_ab_r12)
       val docs = Tables.documents(s, d)
-      val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
-          n = 3, minJaccard = 0.1, maxShingleDf = 5L)
-        .select(col("id_a"), col("id_b"))
+      val pairs = DupEdges.edges(docs)
       val comp = graft.operators.ConnectedComponents.run(pairs, "id_a", "id_b")
         .withColumnRenamed("id", "doc_id")
       val kept = docs.join(comp, Seq("doc_id"), "left")

@@ -4,9 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Instrument
-import graft.ext.Dedup
 import graft.jobs.JobSession
 import graft.operators.ConnectedComponents
+import graft.queries.DataPipelineQueries.DupEdges
 import graft.sources.Tables
 
 /** One-off measurement main behind the frontier-only CC fold (round-16
@@ -44,11 +44,9 @@ object CcFoldProbe {
     val spark = JobSession.create("graft cc fold probe")
 
     // q187's exact split and edge derivation
-    val docs = Tables.documents(spark, sfDir)
-    val incoming = docs.filter(col("doc_id") % 10 === 7)
-    val corpus = docs.filter(col("doc_id") % 10 =!= 7)
-    val shA = Dedup.wordShingles(incoming, "doc_id", "text", n = 3)
-    val shB = Dedup.wordShingles(corpus, "doc_id", "text", n = 3)
+    val (incoming, corpus) = DupEdges.split(Tables.documents(spark, sfDir))
+    val shA = DupEdges.shingles(incoming).localCheckpoint(false)
+    val shB = DupEdges.shingles(corpus).localCheckpoint(false)
 
     val scratch = new java.io.File(
       sys.props.getOrElse("java.io.tmpdir", "/tmp"),
@@ -59,17 +57,9 @@ object CcFoldProbe {
       spark.read.parquet(p)
     }
 
-    val baseEdges = mat("base_edges")(
-      Dedup.jaccardPairsFromShingles(shB, "doc_id",
-          minJaccard = 0.1, maxShingleDf = 5L)
-        .select(col("id_a"), col("id_b")))
+    val baseEdges = mat("base_edges")(DupEdges.within(shB))
     val batchEdges = mat("batch_edges")(
-      Dedup.crossJaccardPairs(shA, shB, "doc_id",
-          minJaccard = 0.1, maxShingleDf = 5L)
-        .select(col("id_a"), col("id_b"))
-        .unionByName(Dedup.jaccardPairsFromShingles(shA, "doc_id",
-            minJaccard = 0.1, maxShingleDf = 5L)
-          .select(col("id_a"), col("id_b"))))
+      DupEdges.cross(shA, shB).unionByName(DupEdges.within(shA)))
     val labels = mat("labels")(
       ConnectedComponents.run(baseEdges, "id_a", "id_b"))
 

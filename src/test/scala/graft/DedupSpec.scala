@@ -148,17 +148,23 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       s"corpus or incoming self-pair leaked: $got")
     assert(got.contains((101L, 3L)) && got.contains((101L, 4L)))
     assert(!got.exists(_._1 == 102L))
-    // the df guard drops hot shingles from candidate GENERATION but the
-    // reported intersection still counts them: jaccard values must equal
-    // the unguarded run's for every surviving pair
-    val guarded = Dedup.crossJaccardPairs(shA, shB, "doc_id",
-      minJaccard = 0.3, maxShingleDf = 2L)
+    // the df guard drops hot shingles from candidate GENERATION, and the
+    // LSH tier generates from bands, but the reported intersection still
+    // counts every shared shingle: (inter, jaccard) must equal the
+    // unguarded run's for every surviving pair
     val jU = unguarded.select("id_a", "id_b", "inter", "jaccard")
       .as[(Long, Long, Long, Double)].collect().toSet
-    val jG = guarded.select("id_a", "id_b", "inter", "jaccard")
-      .as[(Long, Long, Long, Double)].collect().toSet
-    assert(jG.subsetOf(jU), s"guarded produced different values: $jG vs $jU")
-    assert(jG.exists(_._1 == 101L)) // guard did not kill the real pair
+    Seq(
+      "guarded" -> Dedup.crossJaccardPairs(shA, shB, "doc_id",
+        minJaccard = 0.3, maxShingleDf = 2L),
+      "minhash" -> Dedup.crossMinHashNearDups(shA, shB, "doc_id",
+        numHashes = 64, bands = 32, minJaccard = 0.3)
+    ).foreach { case (path, verified) =>
+      val jG = verified.select("id_a", "id_b", "inter", "jaccard")
+        .as[(Long, Long, Long, Double)].collect().toSet
+      assert(jG.subsetOf(jU), s"$path produced different values: $jG vs $jU")
+      assert(jG.exists(_._1 == 101L), s"$path killed the real pair")
+    }
   }
 
   test("crossMinHashNearDups: batch probes corpus buckets, never A×A/B×B") {
@@ -256,6 +262,67 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
         .select("id_a", "id_b", "inter", "jaccard")
         .as[(Long, Long, Long, Double)].collect().toSet
       assert(pref === full, s"tau=$tau")
+    }
+  }
+
+  // seeded corpus over a 5-word vocabulary: trigram shingles collide
+  // across docs, so pairs spread over the whole Jaccard range and some
+  // shingles exceed a small df cap (the guarded paths' hot recount runs)
+  private lazy val collidingDocs = {
+    val rnd = new scala.util.Random(20261017L)
+    val vocab = Seq("ka", "lo", "mu", "ne", "pi")
+    (1L to 40L).map { i =>
+      (i, Seq.fill(5 + rnd.nextInt(10))(vocab(rnd.nextInt(vocab.size)))
+        .mkString(" "))
+    }.toDF("doc_id", "text")
+  }
+
+  test("every verified self path reports the unguarded index's exact " +
+      "(inter, jaccard)") {
+    val tau = 0.3
+    val exact = Dedup.jaccardPairs(collidingDocs, "doc_id", "text", 3, tau)
+      .select("id_a", "id_b", "inter", "jaccard")
+      .as[(Long, Long, Long, Double)].collect()
+      .map(r => (r._1, r._2) -> ((r._3, r._4))).toMap
+    Seq(
+      "guarded jaccardPairs" -> Dedup.jaccardPairs(collidingDocs, "doc_id",
+        "text", 3, tau, maxShingleDf = 4L),
+      "minHashNearDups" -> Dedup.minHashNearDups(collidingDocs, "doc_id",
+        "text", 3, numHashes = 64, bands = 32, minJaccard = tau),
+      "portable minHashNearDups" -> Dedup.minHashNearDups(collidingDocs,
+        "doc_id", "text", 3, numHashes = 64, bands = 32, minJaccard = tau,
+        portable = true),
+      "prefixJaccardPairs" -> Dedup.prefixJaccardPairs(collidingDocs,
+        "doc_id", "text", 3, tau)
+    ).foreach { case (path, verified) =>
+      val got = verified.select("id_a", "id_b", "inter", "jaccard")
+        .as[(Long, Long, Long, Double)].collect()
+      assert(got.nonEmpty, s"$path: degenerate fixture")
+      got.foreach { case (a, b, inter, j) =>
+        assert(exact.get((a, b)).contains((inter, j)),
+          s"$path: ($a, $b) reports ($inter, $j), exact ${exact.get((a, b))}")
+      }
+    }
+  }
+
+  test("jaccardPairsFromShingles: the hashed grains give the string " +
+      "grains' rows") {
+    // the char grain's 35 possible trigrams sit in most docs, so its cap
+    // that still leaves cold shingles is higher
+    Seq(
+      ("word", Dedup.wordShingles _, Dedup.wordShingleHashes _, 4L),
+      ("char", Dedup.charShingles _, Dedup.charShingleHashes _, 30L)
+    ).foreach { case (grain, strings, hashes, cap) =>
+      Seq(Long.MaxValue, cap).foreach { maxDf =>
+        def rows(sh: org.apache.spark.sql.DataFrame) =
+          Dedup.jaccardPairsFromShingles(sh, "doc_id", 0.1, maxDf)
+            .select("id_a", "id_b", "inter", "jaccard")
+            .as[(Long, Long, Long, Double)].collect().toSet
+        val want = rows(strings(collidingDocs, "doc_id", "text", 3))
+        assert(want.nonEmpty, s"$grain, maxShingleDf $maxDf: degenerate fixture")
+        assert(rows(hashes(collidingDocs, "doc_id", "text", 3)) === want,
+          s"$grain grain, maxShingleDf $maxDf")
+      }
     }
   }
 
