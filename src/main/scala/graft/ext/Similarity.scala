@@ -74,15 +74,73 @@ object Similarity {
     df.select(col(id).as(idAlias), quantize(col(vec), scale).as("__qv"))
       .withColumn("__qn", dotLong(col("__qv"), col("__qv")))
 
-  /** posexplode of a [[graft.plans.TopKByAggregate]] array into the
-    * (query_id, rank, neighbor_id, cosine) contract every top-k entry point
-    * shares. rank is 1-based in score-desc, id-asc order — identical to the
-    * `row_number` window ordering it replaces.
+  /** `df` plus its quantized vector (`__qv`) and self-dot (`__qn`). */
+  private def withQuantized(df: DataFrame, vec: String,
+                            scale: Double): DataFrame =
+    df.withColumn("__qv", quantize(col(vec), scale))
+      .withColumn("__qn", dotLong(col("__qv"), col("__qv")))
+
+  // ---- the top-k search kernel --------------------------------------------
+
+  /** The search kernel's one ranker: per `key`, the `k` best `id`s of
+    * `rows` by (`score` desc, id asc) as `__tk`, an array of (score, id);
+    * `keep`, a condition on the score column `__s`, filters before the
+    * heap, and `extra` aggregates ride the same aggregation. Every search
+    * entry point and the IVF probe rank here, under one rule:
+    *  - [[graft.plans.TopKByAggregate]], not a window: the candidate
+    *    product dies MAP-SIDE in O(k) mergeable state and the one exchange
+    *    carries k·|keys| rows (the window form sorted the whole product:
+    *    80× wall at 10× data on the re-rank);
+    *  - [[pinnedScore]] wraps the score ATTRIBUTE at the aggregate, never
+    *    the scoring expression (755 s at sf1 vs 8 s for the same-shaped
+    *    q146 before pqTopK matched this placement);
+    *  - exclusions (self-matches, the hard-negative cut) run before the
+    *    heap, so excluded rows never occupy slots;
+    *  - ids may be any integral type, cast to bigint here once (ties to
+    *    the lower id; on bigint input the optimizer drops the cast);
+    *  - scores are doubles; PQ's exact long ADC dots (≤ d·scale² < 2⁵³)
+    *    fit one exactly;
+    *  - the PQ paths pin their encoded corpus ([[pqTopK]]) and the IVF
+    *    paths assign cells with [[assignCellsQ]].
     */
-  private def explodeTopK(grouped: DataFrame): DataFrame =
-    grouped.select(col("query_id"), posexplode(col("__tk")).as(Seq("__p", "__e")))
-      .select(col("query_id"), (col("__p") + 1).cast("long").as("rank"),
-        col("__e.id").as("neighbor_id"), col("__e.score").as("cosine"))
+  private def topK(rows: DataFrame, key: String, score: Column, id: String,
+                   k: Int, keep: Option[Column] = None,
+                   extra: Seq[Column] = Nil): DataFrame = {
+    val scored = rows.select(col(key), score.cast("double").as("__s"),
+      col(id).cast("long").as(id))
+    keep.fold(scored)(scored.filter).groupBy(key)
+      .agg(graft.plans.TopKByAggregate.topkBy(
+        pinnedScore(col("__s")), col(id), k).as("__tk"), extra: _*)
+  }
+
+  /** [[topK]] of (query_id, neighbor_id, …) candidate pairs per query,
+    * self-matches dropped. */
+  private def neighbors(pairs: DataFrame, score: Column, k: Int,
+                        keep: Option[Column] = None,
+                        extra: Seq[Column] = Nil): DataFrame =
+    topK(pairs.filter(col("neighbor_id") =!= col("query_id")), "query_id",
+      score, "neighbor_id", k, keep, extra)
+
+  /** (query_id, `as`) rows of a [[topK]] result's ids (the first `first`). */
+  private def topIds(tk: DataFrame, as: String,
+                     first: Option[Int] = None): DataFrame = {
+    val ids = col("__tk.id")
+    tk.select(col("query_id"), explode(first.fold(ids)(slice(ids, 1, _))).as(as))
+  }
+
+  /** posexplode of a [[topK]] result into the (query_id, rank,
+    * neighbor_id, score) contract every search entry point shares, plus
+    * the `carry` columns. rank is 1-based in score-desc, id-asc order —
+    * identical to the `row_number` window ordering it replaces.
+    */
+  private def explodeTopK(grouped: DataFrame,
+                          score: Column => Column = _.as("cosine"),
+                          carry: Seq[String] = Nil): DataFrame =
+    grouped.select((col("query_id") +: carry.map(col)) :+
+        posexplode(col("__tk")).as(Seq("__p", "__e")): _*)
+      .select(Seq(col("query_id"), (col("__p") + 1).cast("long").as("rank"),
+        col("__e.id").as("neighbor_id"), score(col("__e.score"))) ++
+        carry.map(col): _*)
 
   /** Bit-exact identity on a double score that `CollapseProject` refuses to
     * inline into the consuming aggregate: `least(c, c)` references the
@@ -98,34 +156,45 @@ object Similarity {
     */
   private def pinnedScore(c: Column): Column = least(c, c)
 
+  /** Query × candidate cosine over the kernel's column names. */
+  private def pairCos: Column =
+    cosineFromQuantized(col("__qv"), col("__cv"), col("__qn"), col("__cn"))
+
+  /** Row × centroid cosine against the [[centC]] columns. */
+  private def centCos: Column =
+    cosineFromQuantized(col("__qv"), col("__ctv"), col("__qn"), col("__ctn"))
+
+  /** The hard-negative cut: `floor(cos·10⁶ + 0.5) < maxCosMicro`, plain
+    * IEEE ops on the integer-dot-derived cosine, so the boundary decision
+    * is hash-exact cross-engine; ranking below it uses the raw double. */
+  private def belowCut(maxCosMicro: Long): Column =
+    floor(col("__s") * 1e6 + lit(0.5)) < lit(maxCosMicro.toDouble)
+
+  /** The corpus side of a search: (neighbor_id, __cv, __cn). */
+  private def corpusSide(corpus: DataFrame, id: String, vec: String,
+                         scale: Double): DataFrame =
+    prep(corpus, id, vec, "neighbor_id", scale)
+      .withColumnRenamed("__qv", "__cv").withColumnRenamed("__qn", "__cn")
+
+  /** The brute-force search: the corpus crossed with the broadcast query
+    * set — use only with a bounded query set. */
+  private def exact(corpus: DataFrame, queries: DataFrame,
+                    corpusId: String, corpusVec: String,
+                    queryId: String, queryVec: String,
+                    k: Int, keep: Option[Column], scale: Double): DataFrame =
+    explodeTopK(neighbors(corpusSide(corpus, corpusId, corpusVec, scale)
+        .crossJoin(broadcast(prep(queries, queryId, queryVec, "query_id",
+          scale))), pairCos, k, keep))
+
   /** Exact top-k cosine neighbors of each query vector, brute force.
-    * Output: (query_id, neighbor_id, rank, cosine). Self-matches excluded.
-    * Ids must be integral (ranked as BIGINT, ties to the lower id).
-    *
-    * The ranking is [[graft.plans.TopKByAggregate]], not a window: the
-    * |corpus|×|queries| product is reduced to k rows per query MAP-SIDE
-    * (bounded O(k) heap state, partial-mergeable), so the one exchange
-    * carries k·|queries| rows — the window form it replaced shuffled and
-    * sorted the entire product (measured 80× wall at 10× data on the
-    * rerank sibling, which shares the shape).
+    * Output: (query_id, rank, neighbor_id, cosine). Self-matches excluded.
     */
   def knnExact(corpus: DataFrame, queries: DataFrame,
                corpusId: String, corpusVec: String,
                queryId: String, queryVec: String,
-               k: Int, scale: Double = DefaultScale): DataFrame = {
-    val c = prep(corpus, corpusId, corpusVec, "neighbor_id", scale)
-      .withColumnRenamed("__qv", "__cv").withColumnRenamed("__qn", "__cn")
-    val q = prep(queries, queryId, queryVec, "query_id", scale)
-    explodeTopK(c.crossJoin(broadcast(q))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"),
-        cosineFromQuantized(col("__qv"), col("__cv"), col("__qn"), col("__cn"))
-          .as("__cos"),
-        col("neighbor_id").cast("long").as("neighbor_id"))
-      .groupBy("query_id")
-      .agg(graft.plans.TopKByAggregate.topkBy(
-        pinnedScore(col("__cos")), col("neighbor_id"), k).as("__tk")))
-  }
+               k: Int, scale: Double = DefaultScale): DataFrame =
+    exact(corpus, queries, corpusId, corpusVec, queryId, queryVec, k,
+      None, scale)
 
   /** Hard-negative mining for contrastive/embedding training — per anchor,
     * the `k` MOST similar corpus vectors whose cosine still falls BELOW a
@@ -135,35 +204,51 @@ object Similarity {
     * self-matches and near-duplicate "false negatives" that would poison
     * the loss (they are the POSITIVE class by another name).
     *
-    * Shape = [[knnExact]] with the exclusion applied BEFORE the bounded
-    * top-k heap ([[graft.plans.TopKByAggregate]]): near-positives never
-    * occupy heap slots, the map-side state stays O(k) per anchor, and the
-    * one exchange still carries k·|anchors| rows. The threshold compares
-    * the 1e6-QUANTIZED cosine (`floor(cos·10⁶ + 0.5) < maxCosMicro`, plain
-    * IEEE ops on an integer-dot-derived double) so the boundary decision
-    * is hash-exact cross-engine — ranking below the cut uses the raw
-    * double, which both engines derive bit-identically from the same
-    * integer dot. Same bounded-broadcast-anchor-set contract as
-    * [[knnExact]] (q25): anchors are the small side by construction.
+    * [[knnExact]] with [[belowCut]] applied before the heap. Anchors are
+    * the broadcast side, bounded by construction (q165).
     */
   def hardNegatives(corpus: DataFrame, queries: DataFrame,
                     corpusId: String, corpusVec: String,
                     queryId: String, queryVec: String,
                     k: Int, maxCosMicro: Long,
-                    scale: Double = DefaultScale): DataFrame = {
-    val c = prep(corpus, corpusId, corpusVec, "neighbor_id", scale)
-      .withColumnRenamed("__qv", "__cv").withColumnRenamed("__qn", "__cn")
+                    scale: Double = DefaultScale): DataFrame =
+    exact(corpus, queries, corpusId, corpusVec, queryId, queryVec, k,
+      Some(belowCut(maxCosMicro)), scale)
+
+  /** Each query's `nprobe` nearest cells: [[topK]] over the query ×
+    * broadcast-centroid product of a [[prep]]'d `q` and a [[centC]]
+    * `cent`. */
+  private def probe(q: DataFrame, cent: DataFrame, nprobe: Int): DataFrame =
+    topK(q.crossJoin(broadcast(cent)), "query_id", centCos, "cell", nprobe)
+
+  /** The IVF inverted lists: (neighbor_id, cell, __cv, __cn), each corpus
+    * row under its [[assignCellsQ]] cell. */
+  private def ivfLists(corpus: DataFrame, corpusId: String, corpusVec: String,
+                       cent: DataFrame, scale: Double): DataFrame =
+    assignCellsQ(withQuantized(corpus, corpusVec, scale), corpusId, cent)
+      .select(col(corpusId).as("neighbor_id"), col("cell"),
+        col("__qv").as("__cv"), col("__qn").as("__cn"))
+
+  /** Rank the probed cells' corpus rows: (query_id, cell) probe rows
+    * rejoin the query vectors by id, then meet the inverted lists in a
+    * cell equi-join — Σ probed-cell sizes, never |corpus| × |queries|. */
+  private def ivfNeighbors(cells: DataFrame, q: DataFrame, lists: DataFrame,
+                           k: Int, keep: Option[Column] = None,
+                           extra: Seq[Column] = Nil): DataFrame =
+    neighbors(cells.join(q, Seq("query_id")).join(lists, Seq("cell")),
+      pairCos, k, keep, extra)
+
+  /** The IVF search: [[probe]], then [[ivfNeighbors]]. */
+  private def ivf(corpus: DataFrame, queries: DataFrame,
+                  corpusId: String, corpusVec: String,
+                  queryId: String, queryVec: String,
+                  centroids: DataFrame, centroidId: String,
+                  centroidVec: String, k: Int, nprobe: Int,
+                  keep: Option[Column], scale: Double): DataFrame = {
+    val cent = centC(centroids, centroidId, centroidVec, scale)
     val q = prep(queries, queryId, queryVec, "query_id", scale)
-    explodeTopK(c.crossJoin(broadcast(q))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"),
-        cosineFromQuantized(col("__qv"), col("__cv"), col("__qn"), col("__cn"))
-          .as("__cos"),
-        col("neighbor_id").cast("long").as("neighbor_id"))
-      .filter(floor(col("__cos") * 1e6 + lit(0.5)) < lit(maxCosMicro.toDouble))
-      .groupBy("query_id")
-      .agg(graft.plans.TopKByAggregate.topkBy(
-        pinnedScore(col("__cos")), col("neighbor_id"), k).as("__tk")))
+    explodeTopK(ivfNeighbors(topIds(probe(q, cent, nprobe), "cell"), q,
+      ivfLists(corpus, corpusId, corpusVec, cent, scale), k, keep))
   }
 
   /** IVF-probed hard-negative mining — [[hardNegatives]]' semantics on
@@ -171,13 +256,12 @@ object Similarity {
     * the whole corpus with the broadcast anchor set, which is right for a
     * bounded anchor set but still SCANS the full corpus per anchor; here
     * anchors probe their `nprobe` nearest IVF cells and the quantized
-    * positive cut (`floor(cos·10⁶ + 0.5) < maxCosMicro`) excludes
-    * near-positives BEFORE the bounded top-k heap — so at 100 TB the
-    * negative mining touches Σ probed-cell sizes, not |corpus|·|anchors|.
-    * Recall is the IVF contract (a qualifying negative in an unprobed
-    * cell is missed) and is MEASURED, not assumed: the q168 catalog face
-    * composes this with [[recallAtK]] against the exact tier, the same
-    * X120 harness that grades every other ANN tier.
+    * positive cut excludes near-positives BEFORE the bounded top-k heap —
+    * so at 100 TB the negative mining touches Σ probed-cell sizes, not
+    * |corpus|·|anchors|. Recall is the IVF contract (a qualifying negative
+    * in an unprobed cell is missed) and is MEASURED, not assumed: the q168
+    * catalog face composes this with [[recallAtK]] against the exact tier,
+    * the same X120 harness that grades every other ANN tier.
     */
   def hardNegativesIvf(corpus: DataFrame, queries: DataFrame,
                        corpusId: String, corpusVec: String,
@@ -185,53 +269,18 @@ object Similarity {
                        centroids: DataFrame, centroidId: String,
                        centroidVec: String,
                        k: Int, nprobe: Int, maxCosMicro: Long,
-                       scale: Double = DefaultScale): DataFrame = {
-    val assigned = assignCellsQ(corpus, corpusId, corpusVec,
-        centroids, centroidId, centroidVec, scale)
-      .select(col(corpusId).as("neighbor_id"), col("cell").cast("long").as("cell"),
-        col("__qv").as("__cv"), col("__qn").as("__cn"))
-    val cent = prep(centroids, centroidId, centroidVec, "cell", scale)
-      .withColumnRenamed("__qv", "__ctv").withColumnRenamed("__qn", "__ctn")
-    val q = prep(queries, queryId, queryVec, "query_id", scale)
-    val probeCells = q.crossJoin(broadcast(cent))
-      .select(col("query_id"),
-        cosineFromQuantized(col("__qv"), col("__ctv"), col("__qn"), col("__ctn"))
-          .as("__cos"),
-        col("cell").cast("long").as("cell"))
-      .groupBy("query_id")
-      .agg(graft.plans.TopKByAggregate.topkBy(
-        pinnedScore(col("__cos")), col("cell"), nprobe).as("__tk"))
-      .select(col("query_id"), explode(col("__tk.id")).as("cell"))
-    val probes = probeCells.join(q, Seq("query_id"))
-    explodeTopK(probes.join(assigned, Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"),
-        cosineFromQuantized(col("__qv"), col("__cv"), col("__qn"), col("__cn"))
-          .as("__cos"),
-        col("neighbor_id"))
-      // the hard-negative cut, applied before the heap like the exact tier
-      .filter(floor(col("__cos") * 1e6 + lit(0.5)) < lit(maxCosMicro.toDouble))
-      .groupBy("query_id")
-      .agg(graft.plans.TopKByAggregate.topkBy(
-        pinnedScore(col("__cos")), col("neighbor_id"), k).as("__tk")))
-  }
+                       scale: Double = DefaultScale): DataFrame =
+    ivf(corpus, queries, corpusId, corpusVec, queryId, queryVec, centroids,
+      centroidId, centroidVec, k, nprobe, Some(belowCut(maxCosMicro)), scale)
 
-  /** Assign every corpus row to its nearest centroid (max cosine, centroid id
-    * tiebreak). Output: corpus columns + `cell`. Centroids are broadcast —
-    * they are the coarse quantizer and stay small by construction.
-    */
-  def assignCells(corpus: DataFrame, corpusId: String, corpusVec: String,
-                  centroids: DataFrame, centroidId: String, centroidVec: String,
-                  scale: Double = DefaultScale): DataFrame =
-    assignCellsQ(corpus, corpusId, corpusVec, centroids, centroidId,
-      centroidVec, scale).drop("__qv", "__qn")
-
-  /** [[assignCells]] retaining the quantized vector (`__qv`) and self-dot
-    * (`__qn`) so downstream ranking does not recompute them per corpus row.
+  /** Each row of `q` (an `id` column, `__qv`, `__qn` and any payload) plus
+    * `cell`, its nearest centroid of `cent` ([[centC]]: max cosine, ties to
+    * the lower cell id). Centroids are broadcast — they are the coarse
+    * quantizer and stay small by construction.
     *
     * The argmax is a SLIM `max_by` aggregate over the broadcast-nested-loop
-    * product — only (id, cosine, cell) ever enters it; the corpus payload
-    * rejoins by id afterwards. Three measured traps shaped this:
+    * product — only (id, cosine, cell) ever enters it; the payload rejoins
+    * by id afterwards. Three measured traps shaped this:
     * the window form shuffled and sorted the whole |corpus|·k product with
     * full payload rows (the dominant cost of both IVF queries at 10×
     * data); carrying the payload through the aggregate instead made it
@@ -242,29 +291,20 @@ object Similarity {
     * candidates back-to-back, so the partial sort sees presorted runs and
     * the exchange carries one slim row per corpus row). Ties break to the
     * lower cell id, matching the old `(cos DESC, cell)` window order;
-    * corpus rows whose cosine is NULL against every centroid are dropped
+    * rows whose cosine is NULL against every centroid are dropped
     * ("no vector ⇒ no cell" — the old form kept an arbitrary cell).
-    * The corpus side is scanned twice (once into the argmax, once for the
+    * The input is scanned twice (once into the argmax, once for the
     * payload rejoin) — both scans prune to id+vector, and the rejoin
     * exchange of n rows replaces the old n·k-row window exchange.
     */
-  private def assignCellsQ(corpus: DataFrame, corpusId: String, corpusVec: String,
-                           centroids: DataFrame, centroidId: String,
-                           centroidVec: String, scale: Double): DataFrame = {
-    val cent = prep(centroids, centroidId, centroidVec, "cell", scale)
-      .withColumnRenamed("__qv", "__ctv").withColumnRenamed("__qn", "__ctn")
-    val withQ = corpus
-      .withColumn("__qv", quantize(col(corpusVec), scale))
-      .withColumn("__qn", dotLong(col("__qv"), col("__qv")))
-    val best = withQ.select(col(corpusId), col("__qv"), col("__qn"))
+  private def assignCellsQ(q: DataFrame, id: String,
+                           cent: DataFrame): DataFrame = {
+    val best = q.select(col(id), col("__qv"), col("__qn"))
       .crossJoin(broadcast(cent))
-      .select(col(corpusId),
-        cosineFromQuantized(col("__qv"), col("__ctv"), col("__qn"), col("__ctn"))
-          .as("__cos"),
-        col("cell"))
-      .groupBy(col(corpusId))
+      .select(col(id), centCos.as("__cos"), col("cell"))
+      .groupBy(col(id))
       .agg(max_by(col("cell"), struct(col("__cos"), -col("cell"))).as("cell"))
-    withQ.join(best, Seq(corpusId))
+    q.join(best, Seq(id))
   }
 
   /** IVF approximate top-k: queries probe their `nprobe` nearest cells and
@@ -276,37 +316,9 @@ object Similarity {
              corpusId: String, corpusVec: String,
              queryId: String, queryVec: String,
              centroids: DataFrame, centroidId: String, centroidVec: String,
-             k: Int, nprobe: Int, scale: Double = DefaultScale): DataFrame = {
-    val assigned = assignCellsQ(corpus, corpusId, corpusVec,
-        centroids, centroidId, centroidVec, scale)
-      .select(col(corpusId).as("neighbor_id"), col("cell").cast("long").as("cell"),
-        col("__qv").as("__cv"), col("__qn").as("__cn"))
-    // per query: its nprobe closest centroids — same slim bounded top-k as
-    // the final ranking (k·|queries| exchanged, never the q×k product);
-    // the query vector rejoins by id after the explode
-    val cent = prep(centroids, centroidId, centroidVec, "cell", scale)
-      .withColumnRenamed("__qv", "__ctv").withColumnRenamed("__qn", "__ctn")
-    val q = prep(queries, queryId, queryVec, "query_id", scale)
-    val probeCells = q.crossJoin(broadcast(cent))
-      .select(col("query_id"),
-        cosineFromQuantized(col("__qv"), col("__ctv"), col("__qn"), col("__ctn"))
-          .as("__cos"),
-        col("cell").cast("long").as("cell"))
-      .groupBy("query_id")
-      .agg(graft.plans.TopKByAggregate.topkBy(
-        pinnedScore(col("__cos")), col("cell"), nprobe).as("__tk"))
-      .select(col("query_id"), explode(col("__tk.id")).as("cell"))
-    val probes = probeCells.join(q, Seq("query_id"))
-    explodeTopK(probes.join(assigned, Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"),
-        cosineFromQuantized(col("__qv"), col("__cv"), col("__qn"), col("__cn"))
-          .as("__cos"),
-        col("neighbor_id"))
-      .groupBy("query_id")
-      .agg(graft.plans.TopKByAggregate.topkBy(
-        pinnedScore(col("__cos")), col("neighbor_id"), k).as("__tk")))
-  }
+             k: Int, nprobe: Int, scale: Double = DefaultScale): DataFrame =
+    ivf(corpus, queries, corpusId, corpusVec, queryId, queryVec, centroids,
+      centroidId, centroidVec, k, nprobe, None, scale)
 
   /** [[knnIvf]] at several `nprobe` settings from ONE index pass — the
     * harness shape for tuning the probe budget (recall rises with nprobe,
@@ -331,43 +343,15 @@ object Similarity {
                   k: Int, nprobes: Seq[Int],
                   scale: Double = DefaultScale): DataFrame = {
     require(nprobes.nonEmpty && nprobes.forall(_ > 0), "nprobes must be positive")
-    val assigned = assignCellsQ(corpus, corpusId, corpusVec,
-        centroids, centroidId, centroidVec, scale)
-      .select(col(corpusId).as("neighbor_id"),
-        col("cell").cast("long").as("cell"),
-        col("__qv").as("__cv"), col("__qn").as("__cn"))
+    val cent = centC(centroids, centroidId, centroidVec, scale)
+    val lists = ivfLists(corpus, corpusId, corpusVec, cent, scale)
       .localCheckpoint(false)
-    val cent = prep(centroids, centroidId, centroidVec, "cell", scale)
-      .withColumnRenamed("__qv", "__ctv").withColumnRenamed("__qn", "__ctn")
     val q = prep(queries, queryId, queryVec, "query_id", scale)
-    val probeTk = q.crossJoin(broadcast(cent))
-      .select(col("query_id"),
-        cosineFromQuantized(col("__qv"), col("__ctv"), col("__qn"), col("__ctn"))
-          .as("__cos"),
-        col("cell").cast("long").as("cell"))
-      .groupBy("query_id")
-      .agg(graft.plans.TopKByAggregate.topkBy(
-        pinnedScore(col("__cos")), col("cell"), nprobes.max).as("__tk"))
-      .localCheckpoint(false)
+    val probeTk = probe(q, cent, nprobes.max).localCheckpoint(false)
     nprobes.map { np =>
-      val probeCells = probeTk.select(col("query_id"),
-        explode(slice(col("__tk.id"), 1, np)).as("cell"))
-      val probes = probeCells.join(q, Seq("query_id"))
-      probes.join(assigned, Seq("cell"))
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .select(col("query_id"),
-          cosineFromQuantized(col("__qv"), col("__cv"), col("__qn"), col("__cn"))
-            .as("__cos"),
-          col("neighbor_id"))
-        .groupBy("query_id")
-        .agg(graft.plans.TopKByAggregate.topkBy(
-          pinnedScore(col("__cos")), col("neighbor_id"), k).as("__tk"),
-          count(lit(1)).as("candidates"))
-        .select(col("query_id"), col("candidates"),
-          posexplode(col("__tk")).as(Seq("__p", "__e")))
-        .select(col("query_id"), (col("__p") + 1).cast("long").as("rank"),
-          col("__e.id").as("neighbor_id"), col("__e.score").as("cosine"),
-          col("candidates"))
+      explodeTopK(ivfNeighbors(topIds(probeTk, "cell", Some(np)), q, lists, k,
+          extra = Seq(count(lit(1)).as("candidates"))),
+        carry = Seq("candidates"))
         .withColumn("nprobe", lit(np.toLong))
     }.reduce(_ unionByName _)
   }
@@ -533,17 +517,44 @@ object Similarity {
     lloydFold(state, prep(batch, id, vec, "__id", scale), l2Labels,
       sign = -1L, at = Some(atCodebooks))
 
+  /** ADC scoring under `codebooks`: (the lookup table over `__qv`, entry
+    * j·kc + (cell−1) = dot(query_j, word_cell), a literal projection; the
+    * statically-unrolled lookup sum Σ_j lut[j·kc + code_j] over the
+    * `__lut` and `codes` columns). */
+  private def adc(codebooks: Seq[(Int, Int, Array[Long])]): (Column, Column) = {
+    val byJ = codebooks.groupBy(_._1)
+    val m = byJ.size
+    val kc = byJ(0).size
+    require(byJ.forall(_._2.size == kc), "ragged codebook")
+    val sub = codebooks.head._3.length
+    val lut = array((for {
+      j <- 0 until m
+      (_, _, cv) <- byJ(j).sortBy(_._2)
+    } yield dotLong(pqSlice(col("__qv"), j, sub),
+      array(cv.map(lit).toIndexedSeq: _*))): _*)
+    val lookup = (0 until m).map(j =>
+        element_at(col("__lut"), lit(j * kc) + col("codes")(j)))
+      .reduce(_ + _)
+    (lut, lookup)
+  }
+
+  /** The PQ entry points' score column: the ADC dot as a long. */
+  private def adcDot(score: Column): Column = score.cast("long").as("adc_dot")
+
   /** Asymmetric-distance (ADC) approximate top-k by PQ codes: each query
-    * precomputes its lookup table — the exact long dot of its j-th
-    * subvector with every codeword (m·kc entries, flattened j-major) — and
-    * a corpus row scores as Σ_j lut[j·kc + code_j]: m array lookups per
-    * pair instead of d multiplies, the PQ read-time win. The table build
-    * is a literal projection over the (sample-sized) query frame; scoring
-    * crossJoins the broadcast tables against the encoded corpus ([[knnExact]]'s
-    * shape) with a statically-unrolled m-term lookup sum in codegen, and
-    * ranks via the bounded map-side top-k aggregate (k·|queries| over the
-    * exchange, never the product). Scores are exact longs (ADC dot ≤
-    * d·scale² < 2⁵³, so the aggregate's double carries it exactly).
+    * precomputes its lookup table ([[adc]]) and a corpus row scores as
+    * Σ_j lut[j·kc + code_j]: m array lookups per pair instead of d
+    * multiplies, the PQ read-time win. The table build is a literal
+    * projection over the (sample-sized) query frame; scoring crossJoins
+    * the broadcast tables against the encoded corpus ([[knnExact]]'s
+    * shape) and ranks in the search kernel ([[topK]]).
+    *
+    * The encoded corpus is PINNED: without the materialization barrier
+    * the encode projection — 32 literal-codeword argmin dots — collapses
+    * into the per-pair scoring stage and re-evaluates PER JOINED ROW
+    * (measured ~115 µs/pair at sf1, 790 s for an 8M-row product; the
+    * pinned plan probes the 4 cached codes instead: the entire point of
+    * encoding once).
     *
     * Output: (query_id, rank, neighbor_id, adc_dot), self-pairs excluded,
     * ties to the lower neighbor id.
@@ -553,54 +564,15 @@ object Similarity {
              queryId: String, queryVec: String,
              codebooks: Seq[(Int, Int, Array[Long])], k: Int,
              scale: Double = DefaultScale): DataFrame = {
-    val byJ = codebooks.groupBy(_._1)
-    val m = byJ.size
-    val kc = byJ(0).size
-    val sub = codebooks.head._3.length
-    // PINNED: without the materialization barrier the encode projection —
-    // 32 literal-codeword argmin dots — collapses into the per-pair
-    // scoring stage and re-evaluates PER JOINED ROW (measured ~115 µs/pair
-    // at sf1, 790 s for an 8M-row product; the pinned plan probes the
-    // 4 cached codes instead: the entire point of encoding once)
+    val (lut, lookup) = adc(codebooks)
     val enc = graft.ext.Caches.pin(
       pqEncode(corpus, corpusId, corpusVec, codebooks, scale)
         .select(col(corpusId).as("neighbor_id"), col("codes")))
-    // j-major flattened lut: entry j·kc + (cell−1) = dot(query_j, word_cell)
-    val lutEntries = for {
-      j <- 0 until m
-      (_, cell, cv) <- byJ(j).sortBy(_._2)
-    } yield dotLong(pqSlice(col("__qv"), j, sub),
-      array(cv.map(lit).toIndexedSeq: _*))
     val qlut = prep(queries, queryId, queryVec, "query_id", scale)
-      .select(col("query_id"), array(lutEntries: _*).as("__lut"))
-    require(byJ.forall(_._2.size == kc), "ragged codebook")
-    val adc = (0 until m).map(j =>
-        element_at(col("__lut"), lit(j * kc) + col("codes")(j)))
-      .reduce(_ + _)
-    enc.crossJoin(broadcast(qlut))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), adc.cast("double").as("__s"),
-        col("neighbor_id"))
-      .groupBy("query_id")
-      // pinnedScore wraps the ATTRIBUTE at the aggregate (not the adc
-      // expression in the select): the double reference blocks
-      // CollapseProject from inlining the lookup sum into the aggregate
-      // child, where update() would evaluate it INTERPRETED per product
-      // row — measured 755 s at sf1 vs 8 s for the identically-shaped
-      // q146 before this line matched knnExact's placement
-      .agg(graft.plans.TopKByAggregate.topkBy(
-        pinnedScore(col("__s")), col("neighbor_id"), k).as("__tk"))
-      .select(col("query_id"), posexplode(col("__tk")).as(Seq("__p", "__e")))
-      .select(col("query_id"), (col("__p") + 1).cast("long").as("rank"),
-        col("__e.id").as("neighbor_id"),
-        col("__e.score").cast("long").as("adc_dot"))
+      .select(col("query_id"), lut.as("__lut"))
+    explodeTopK(neighbors(enc.crossJoin(broadcast(qlut)), lookup, k), adcDot)
   }
 
-  /** Quantized-residual frame (__id, cell, __rv) of each corpus row against
-    * its assigned coarse centroid: __rv = __qv − centroid_qv, exact long
-    * differences of already-quantized vectors (never re-quantized doubles,
-    * so both engines derive the identical residual from the identical
-    * assignment). */
   /** Canonical quantized coarse layer (cell: long, __ctv, __ctn) from a
     * raw-embedding centroid frame. */
   private def centC(centroids: DataFrame, centroidId: String,
@@ -616,29 +588,22 @@ object Similarity {
         col("centroid").as("__ctv"))
       .withColumn("__ctn", dotLong(col("__ctv"), col("__ctv")))
 
+  /** Quantized-residual frame (__id, cell, __rv) of each corpus row against
+    * its assigned coarse centroid: __rv = __qv − centroid_qv, exact long
+    * differences of already-quantized vectors (never re-quantized doubles,
+    * so both engines derive the identical residual from the identical
+    * assignment). */
   private def residualsC(corpus: DataFrame, corpusId: String,
                          corpusVec: String, cent: DataFrame,
-                         scale: Double): DataFrame = {
-    val withQ = corpus
-      .select(col(corpusId).as("__id"), quantize(col(corpusVec), scale).as("__qv"))
-      .withColumn("__qn", dotLong(col("__qv"), col("__qv")))
-    val best = withQ
-      .crossJoin(broadcast(cent))
-      .select(col("__id"),
-        cosineFromQuantized(col("__qv"), col("__ctv"), col("__qn"),
-          col("__ctn")).as("__cos"),
-        col("cell"))
-      .groupBy(col("__id"))
-      .agg(max_by(col("cell"), struct(col("__cos"), -col("cell"))).as("cell"))
-    withQ.join(best, Seq("__id"))
+                         scale: Double): DataFrame =
+    assignCellsQ(prep(corpus, corpusId, corpusVec, "__id", scale), "__id", cent)
       .join(broadcast(cent.select(col("cell"), col("__ctv"))), Seq("cell"))
       .select(col("__id"), col("cell"),
         zip_with(col("__qv"), col("__ctv"), (a, b) => a - b).as("__rv"))
-  }
 
   /** PQ codebooks fit on coarse-cell RESIDUALS — the IVF-PQ fit (Jégou et
     * al. 2011, "Product Quantization for Nearest Neighbor Search"): each
-    * corpus vector is assigned to its nearest coarse centroid ([[assignCells]]'
+    * corpus vector is assigned to its nearest coarse centroid ([[assignCellsQ]]'
     * argmax) and the codebooks learn x − c(x) instead of x. Residuals
     * concentrate around the origin once the coarse quantizer captures the
     * data's macro-structure, so the SAME m·log₂kc bits of code spend their
@@ -814,51 +779,20 @@ object Similarity {
                          cent: DataFrame,
                          codebooks: Seq[(Int, Int, Array[Long])], k: Int,
                          nprobe: Int, scale: Double): DataFrame = {
-    val byJ = codebooks.groupBy(_._1)
-    val m = byJ.size
-    val kc = byJ(0).size
-    require(byJ.forall(_._2.size == kc), "ragged codebook")
-    val sub = codebooks.head._3.length
-    val res = residualsC(corpus, corpusId, corpusVec, cent, scale)
-    val enc = graft.ext.Caches.pin(res.select(
-      col("__id").as("neighbor_id"), col("cell"),
-      pqCodes(col("__rv"), codebooks).as("codes")))
+    val (lut, lookup) = adc(codebooks)
+    val enc = graft.ext.Caches.pin(
+      residualsC(corpus, corpusId, corpusVec, cent, scale).select(
+        col("__id").as("neighbor_id"), col("cell"),
+        pqCodes(col("__rv"), codebooks).as("codes")))
     val q = prep(queries, queryId, queryVec, "query_id", scale)
-    val probeCells = q.crossJoin(broadcast(cent))
-      .select(col("query_id"),
-        cosineFromQuantized(col("__qv"), col("__ctv"), col("__qn"),
-          col("__ctn")).as("__cos"),
-        col("cell"))
-      .groupBy("query_id")
-      .agg(graft.plans.TopKByAggregate.topkBy(
-        pinnedScore(col("__cos")), col("cell"), nprobe).as("__tk"))
-      .select(col("query_id"), explode(col("__tk.id")).as("cell"))
-    val lutEntries = for {
-      j <- 0 until m
-      (_, cell, cv) <- byJ(j).sortBy(_._2)
-    } yield dotLong(pqSlice(col("__qv"), j, sub),
-      array(cv.map(lit).toIndexedSeq: _*))
-    val qlut = q.select(col("query_id"), col("__qv"),
-      array(lutEntries: _*).as("__lut"))
-    val probes = probeCells.join(qlut, Seq("query_id"))
+    val probes = topIds(probe(q, cent, nprobe), "cell")
+      .join(q.select(col("query_id"), col("__qv"), lut.as("__lut")),
+        Seq("query_id"))
       .join(broadcast(cent.select(col("cell"), col("__ctv"))), Seq("cell"))
       .select(col("query_id"), col("cell"), col("__lut"),
         dotLong(col("__qv"), col("__ctv")).as("__off"))
-    val adcRes = (0 until m).map(j =>
-        element_at(col("__lut"), lit(j * kc) + col("codes")(j)))
-      .reduce(_ + _)
-    probes.join(enc, Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"),
-        (col("__off") + adcRes).cast("double").as("__s"),
-        col("neighbor_id"))
-      .groupBy("query_id")
-      .agg(graft.plans.TopKByAggregate.topkBy(
-        pinnedScore(col("__s")), col("neighbor_id"), k).as("__tk"))
-      .select(col("query_id"), posexplode(col("__tk")).as(Seq("__p", "__e")))
-      .select(col("query_id"), (col("__p") + 1).cast("long").as("rank"),
-        col("__e.id").as("neighbor_id"),
-        col("__e.score").cast("long").as("adc_dot"))
+    explodeTopK(neighbors(probes.join(enc, Seq("cell")),
+      col("__off") + lookup, k), adcDot)
   }
 
   /** [[pqFit]]'s frame collected back to the Seq form [[pqEncode]]/
@@ -1066,8 +1000,8 @@ object Similarity {
     // lazy-pinned: both sides of the pair self-join consume the assignment,
     // and without the checkpoint each side re-runs the corpus×centroid
     // argmax scan (the recurring two-consumer re-evaluation trap)
-    val assigned = assignCellsQ(corpus, corpusId, corpusVec,
-        centroids, centroidId, centroidVec, scale)
+    val assigned = assignCellsQ(withQuantized(corpus, corpusVec, scale),
+        corpusId, centC(centroids, centroidId, centroidVec, scale))
       .localCheckpoint(false)
     val a = assigned.select(col(corpusId).as("id_a"), col("cell"),
       col("__qv").as("__va"), col("__qn").as("__na"))
@@ -1750,37 +1684,21 @@ object Similarity {
                 scale: Double = DefaultScale): DataFrame = {
     require(k >= 1 && m >= 1, s"k and m must be >= 1, got k=$k m=$m")
     val mk = math.toIntExact(k.toLong * m)
-    val cCoarse = prep(corpus, corpusId, corpusVec, "neighbor_id", coarseScale)
-      .withColumnRenamed("__qv", "__cv").withColumnRenamed("__qn", "__cn")
-    val qCoarse = prep(queries, queryId, queryVec, "query_id", coarseScale)
     // the coarse scan IS |corpus|×|queries| by design — but its ranking is
-    // the bounded top-k aggregate, so the product dies map-side and the
-    // exchange carries m·k ids per query (the window form shuffled and
-    // sorted the whole product: 80× wall at 10× data)
-    val cand = cCoarse.crossJoin(broadcast(qCoarse))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"),
-        cosineFromQuantized(col("__qv"), col("__cv"), col("__qn"), col("__cn"))
-          .as("__ccos"),
-        col("neighbor_id").cast("long").as("neighbor_id"))
-      .groupBy("query_id")
-      .agg(graft.plans.TopKByAggregate.topkBy(
-        pinnedScore(col("__ccos")), col("neighbor_id"), mk).as("__tk"))
-      .select(col("query_id"), explode(col("__tk.id")).as("neighbor_id"))
-    val cFull = prep(corpus, corpusId, corpusVec, "neighbor_id", scale)
-      .withColumnRenamed("__qv", "__cv").withColumnRenamed("__qn", "__cn")
+    // the kernel's bounded top-k, so the product dies map-side and the
+    // exchange carries m·k ids per query
+    val cand = topIds(neighbors(
+      corpusSide(corpus, corpusId, corpusVec, coarseScale).crossJoin(broadcast(
+        prep(queries, queryId, queryVec, "query_id", coarseScale))),
+      pairCos, mk), "neighbor_id")
+    val cFull = corpusSide(corpus, corpusId, corpusVec, scale)
     val qFull = prep(queries, queryId, queryVec, "query_id", scale)
-    explodeTopK(cand.join(cFull.withColumn("neighbor_id",
+    explodeTopK(topK(cand.join(cFull.withColumn("neighbor_id",
           col("neighbor_id").cast("long")), Seq("neighbor_id"))
-      .join(broadcast(qFull), Seq("query_id"))
-      .select(col("query_id"),
-        cosineFromQuantized(col("__qv"), col("__cv"), col("__qn"), col("__cn"))
-          .as("__cos"),
-        col("neighbor_id"))
-      .groupBy("query_id")
-      .agg(graft.plans.TopKByAggregate.topkBy(
-        pinnedScore(col("__cos")), col("neighbor_id"), k).as("__tk")))
+      .join(broadcast(qFull), Seq("query_id")),
+      "query_id", pairCos, "neighbor_id", k))
   }
+
 
   /** DuckDB SQL text for the identical scaled-integer dot product. */
   /** DuckDB multiplies FLOAT×DOUBLE in float precision — the element must be

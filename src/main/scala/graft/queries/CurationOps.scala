@@ -33,6 +33,7 @@ import graft.sources.Tables
   *    contract, recount exact.
   */
 object CurationOps extends Catalog {
+  import DataPipelineQueries.ModelFolds
 
   private def kmeansCtes(kSql: String, iters: Int, dims: Int,
                          from: String): String =
@@ -76,17 +77,13 @@ object CurationOps extends Catalog {
     // scratch, so the whole maintenance path is under the hash.
     "q176_kmeans_incremental" -> ((s, d) => {
       val all = Tables.embeddings(s, d)
-      val base = all.filter(col("vec_id") % 10 =!= 9)
-      val batch = all.filter(col("vec_id") % 10 === 9)
-      val state = Tables.ensureMaterialized(s, "kmeans_state",
-        Tables.contentKey(s"$d/embeddings.parquet", "k8it2base9"))(
-        Similarity.kmeansState(base, "vec_id", "embedding", k = 8, iters = 2))
+      val batch = all.filter(ModelFolds.isBatch)
+      val state = ModelFolds.kmeansState(s, d, all, whole = false)
       val folded = Similarity.kmeansFold(state, batch, "vec_id", "embedding")
       val assigned = Similarity.kmeansAssign(all, "vec_id", "embedding",
         folded.select("cell", "centroid"))
       folded.select(col("cell"), col("n").as("n_total"),
-          expr("aggregate(zip_with(centroid, sequence(1, size(centroid)), " +
-            "(c, i) -> c * i), 0L, (a, x) -> a + x)").as("c_weighted"))
+          ModelFolds.checksum.as("c_weighted"))
         .join(state.select(col("cell"), col("n").as("n_base")), Seq("cell"))
         .join(assigned.groupBy("cell")
             .agg(count(lit(1)).as("assigned_full")), Seq("cell"), "left")
@@ -109,20 +106,16 @@ object CurationOps extends Catalog {
     // the oracle re-derives BOTH fold layers from scratch.
     "q182_kmeans_fold_chain" -> ((s, d) => {
       val all = Tables.embeddings(s, d)
-      val base = all.filter(col("vec_id") % 10 =!= 9)
-      val batch = all.filter(col("vec_id") % 10 === 9)
+      val batch = all.filter(ModelFolds.isBatch)
       val b1 = batch.filter(pmod(expr("vec_id div 10"), lit(2)) === 0)
       val b2 = batch.filter(pmod(expr("vec_id div 10"), lit(2)) === 1)
-      val state = Tables.ensureMaterialized(s, "kmeans_state",
-        Tables.contentKey(s"$d/embeddings.parquet", "k8it2base9"))(
-        Similarity.kmeansState(base, "vec_id", "embedding", k = 8, iters = 2))
+      val state = ModelFolds.kmeansState(s, d, all, whole = false)
       val f1 = Similarity.kmeansFold(state, b1, "vec_id", "embedding")
       val f2 = Similarity.kmeansFold(f1, b2, "vec_id", "embedding")
       val assigned = Similarity.kmeansAssign(all, "vec_id", "embedding",
         f2.select("cell", "centroid"))
       f2.select(col("cell"), col("n").as("n_total"),
-          expr("aggregate(zip_with(centroid, sequence(1, size(centroid)), " +
-            "(c, i) -> c * i), 0L, (a, x) -> a + x)").as("c_weighted"))
+          ModelFolds.checksum.as("c_weighted"))
         .join(state.select(col("cell"), col("n").as("n_base")), Seq("cell"))
         .join(f1.select(col("cell"), col("n").as("n_mid")), Seq("cell"))
         .join(assigned.groupBy("cell")
@@ -148,18 +141,14 @@ object CurationOps extends Catalog {
     // assignments from scratch.
     "q183_kmeans_retract" -> ((s, d) => {
       val all = Tables.embeddings(s, d)
-      val takedown = all.filter(col("vec_id") % 10 === 9)
-      val survivors = all.filter(col("vec_id") % 10 =!= 9)
-      val state = Tables.ensureMaterialized(s, "kmeans_state_all",
-        Tables.contentKey(s"$d/embeddings.parquet", "k8it2all"))(
-        Similarity.kmeansState(all, "vec_id", "embedding", k = 8, iters = 2))
+      val (survivors, takedown) = ModelFolds.split(all)
+      val state = ModelFolds.kmeansState(s, d, all, whole = true)
       val unfolded = Similarity.kmeansUnfold(state, takedown, "vec_id",
         "embedding")
       val assigned = Similarity.kmeansAssign(survivors, "vec_id",
         "embedding", unfolded.select("cell", "centroid"))
       unfolded.select(col("cell"), col("n").as("n_after"),
-          expr("aggregate(zip_with(centroid, sequence(1, size(centroid)), " +
-            "(c, i) -> c * i), 0L, (a, x) -> a + x)").as("c_weighted"))
+          ModelFolds.checksum.as("c_weighted"))
         .join(state.select(col("cell"), col("n").as("n_full")), Seq("cell"))
         .join(assigned.groupBy("cell")
             .agg(count(lit(1)).as("assigned_survivors")),
@@ -183,13 +172,9 @@ object CurationOps extends Catalog {
     // (an off-model batch still assigns somewhere).
     "q181_embedding_drift" -> ((s, d) => {
       val all = Tables.embeddings(s, d)
-      val base = all.filter(col("vec_id") % 10 =!= 9)
-      val state = Tables.ensureMaterialized(s, "kmeans_state",
-        Tables.contentKey(s"$d/embeddings.parquet", "k8it2base9"))(
-        Similarity.kmeansState(base, "vec_id", "embedding", k = 8, iters = 2))
+      val state = ModelFolds.kmeansState(s, d, all, whole = false)
       Similarity.assignmentDrift(all, "vec_id", "embedding",
-        state.select(col("cell"), col("centroid")),
-        col("vec_id") % 10 === 9)
+        state.select(col("cell"), col("centroid")), ModelFolds.isBatch)
     }),
 
     // ---- inter-document boilerplate n-gram ratio ---------------------------

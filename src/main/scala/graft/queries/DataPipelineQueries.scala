@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -102,6 +102,115 @@ object DataPipelineQueries extends Catalog {
     def storeKey(d: String): String =
       Tables.contentKey(s"$d/documents.parquet",
         s"n${N}_j${MinJaccard}_df${MaxShingleDf}_base$BatchResidue")
+  }
+
+  /** The embedding-model maintenance family's parameters (q176–q179,
+    * q181–q186, here and in [[CurationOps]]): k-means with k = 8 cells and
+    * PQ with m = 4 subspaces × kc = 8 codewords, each fitted with 2 Lloyd
+    * rounds. The corpus splits into a batch (vec_id % 10 == 9: the folded
+    * batch or the retracted takedown) and the rest. Each model is stored
+    * under a key derived from these constants and the slice it was fitted
+    * on (`base9`: the rest; `all`: the whole corpus). The DuckDB oracles
+    * spell the same values on their own: they are the independent
+    * reference.
+    */
+  private[queries] object ModelFolds {
+    val K = 8
+    val M = 4
+    val Kc = 8
+    val Iters = 2
+    val BatchResidue = 9
+
+    /** true on the batch rows */
+    val isBatch: Column = col("vec_id") % 10 === BatchResidue
+
+    /** (the rest, the batch) */
+    def split(all: DataFrame): (DataFrame, DataFrame) =
+      (all.filter(!isBatch), all.filter(isBatch))
+
+    private val KmeansTag = s"k${K}it$Iters"
+    private val PqTag = s"m${M}kc${Kc}it$Iters"
+
+    /** `build` over the slice of `all` it is fitted on — the rest, or the
+      * whole corpus when `whole` — stored as `name` (`name_all`) under a
+      * content key of `tag` and the slice */
+    private def stored(s: SparkSession, d: String, all: DataFrame,
+                       name: String, tag: String, whole: Boolean)(
+        build: DataFrame => DataFrame): DataFrame =
+      Tables.ensureMaterialized(s, if (whole) s"${name}_all" else name,
+        Tables.contentKey(s"$d/embeddings.parquet",
+          tag + (if (whole) "all" else s"base$BatchResidue")))(
+        build(if (whole) all else split(all)._1))
+
+    def kmeansState(s: SparkSession, d: String, all: DataFrame,
+                    whole: Boolean): DataFrame =
+      stored(s, d, all, "kmeans_state", KmeansTag, whole)(
+        Similarity.kmeansState(_, "vec_id", "embedding", k = K, iters = Iters))
+
+    /** the frozen coarse layer of the IVF-PQ faces */
+    def coarse(s: SparkSession, d: String, all: DataFrame,
+               whole: Boolean): DataFrame =
+      stored(s, d, all, "ivfpq_coarse", KmeansTag, whole)(
+        Similarity.kmeansFit(_, "vec_id", "embedding", k = K, iters = Iters))
+
+    def pqState(s: SparkSession, d: String, all: DataFrame,
+                whole: Boolean): DataFrame =
+      stored(s, d, all, "pq_state", PqTag, whole)(Similarity.pqState(
+        _, "vec_id", "embedding", m = M, kc = Kc, iters = Iters))
+
+    def ivfPqState(s: SparkSession, d: String, all: DataFrame, km: DataFrame,
+                   whole: Boolean): DataFrame =
+      stored(s, d, all, "ivfpq_state", s"km$K$PqTag", whole)(
+        Similarity.ivfPqState(_, "vec_id", "embedding", km,
+          m = M, kc = Kc, iters = Iters))
+
+    def energyState(s: SparkSession, d: String, all: DataFrame,
+                    whole: Boolean): DataFrame =
+      stored(s, d, all, "opq_energy", "energy", whole)(
+        Similarity.energyState(_, "vec_id", "embedding"))
+
+    /** order-sensitive checksum of the `centroid` array: Σ_i c_i · i */
+    def checksum: Column =
+      expr("aggregate(zip_with(centroid, sequence(1, size(centroid)), " +
+        "(c, i) -> c * i), 0L, (a, x) -> a + x)")
+
+    /** per (subspace, cell): how many rows of an (id, codes) encode chose
+      * it, as `name` */
+    def census(encoded: DataFrame, name: String): DataFrame =
+      encoded.select(posexplode(col("codes")).as(Seq("subspace", "cell")))
+        .groupBy("subspace", "cell")
+        .agg(count(lit(1)).as(name))
+
+    /** q177/q178: per (subspace, codeword) the count ladder, the folded
+      * codeword checksum and the full-corpus census under it */
+    def foldReport(state: DataFrame, folded: DataFrame,
+                   census: DataFrame): DataFrame =
+      folded.select(col("subspace"), col("cell"), col("n").as("n_total"),
+          checksum.as("cw_weighted"))
+        .join(state.select(col("subspace"), col("cell"),
+          col("n").as("n_base")), Seq("subspace", "cell"))
+        .join(census, Seq("subspace", "cell"), "left")
+        .select(col("subspace").cast("long").as("subspace"),
+          col("cell").cast("long").as("cell"), col("n_base"),
+          (col("n_total") - col("n_base")).as("n_batch"), col("n_total"),
+          col("cw_weighted"),
+          coalesce(col("encoded_full"), lit(0L)).as("encoded_full"))
+
+    /** q184/q185: per (subspace, codeword) the count ladder, the retracted
+      * codeword checksum and the survivor census under it */
+    def retractReport(state: DataFrame, unfolded: DataFrame,
+                      census: DataFrame): DataFrame =
+      unfolded.select(col("subspace"), col("cell"), col("n").as("n_after"),
+          checksum.as("cw_weighted"))
+        .join(state.select(col("subspace"), col("cell"),
+          col("n").as("n_full")), Seq("subspace", "cell"))
+        .join(census, Seq("subspace", "cell"), "left")
+        .select(col("subspace").cast("long").as("subspace"),
+          col("cell").cast("long").as("cell"), col("n_full"),
+          (col("n_full") - col("n_after")).as("n_takedown"), col("n_after"),
+          col("cw_weighted"),
+          coalesce(col("encoded_survivors"), lit(0L))
+            .as("encoded_survivors"))
   }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -1217,31 +1326,12 @@ object DataPipelineQueries extends Catalog {
     // census under the folded codebooks.
     "q177_pq_incremental" -> ((s, d) => {
       val all = Tables.embeddings(s, d)
-      val base = all.filter(col("vec_id") % 10 =!= 9)
-      val batch = all.filter(col("vec_id") % 10 === 9)
-      val state = Tables.ensureMaterialized(s, "pq_state",
-        Tables.contentKey(s"$d/embeddings.parquet", "m4kc8it2base9"))(
-        Similarity.pqState(base, "vec_id", "embedding",
-          m = 4, kc = 8, iters = 2))
+      val batch = all.filter(ModelFolds.isBatch)
+      val state = ModelFolds.pqState(s, d, all, whole = false)
       val folded = Similarity.pqFold(state, batch, "vec_id", "embedding")
-      val cbs = folded.select("subspace", "cell", "centroid").collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toArray))
-        .toSeq
-      val census = Similarity.pqEncode(all, "vec_id", "embedding", cbs)
-        .select(posexplode(col("codes")).as(Seq("subspace", "cell")))
-        .groupBy("subspace", "cell")
-        .agg(count(lit(1)).as("encoded_full"))
-      folded.select(col("subspace"), col("cell"), col("n").as("n_total"),
-          expr("aggregate(zip_with(centroid, sequence(1, size(centroid)), " +
-            "(c, i) -> c * i), 0L, (a, x) -> a + x)").as("cw_weighted"))
-        .join(state.select(col("subspace"), col("cell"),
-          col("n").as("n_base")), Seq("subspace", "cell"))
-        .join(census, Seq("subspace", "cell"), "left")
-        .select(col("subspace").cast("long").as("subspace"),
-          col("cell").cast("long").as("cell"), col("n_base"),
-          (col("n_total") - col("n_base")).as("n_batch"), col("n_total"),
-          col("cw_weighted"),
-          coalesce(col("encoded_full"), lit(0L)).as("encoded_full"))
+      val cbs = Similarity.collectCodebooks(folded)
+      ModelFolds.foldReport(state, folded, ModelFolds.census(
+        Similarity.pqEncode(all, "vec_id", "embedding", cbs), "encoded_full"))
     }),
 
     // ---- incremental IVF-PQ maintenance (fold into residual codebooks) -----
@@ -1259,35 +1349,15 @@ object DataPipelineQueries extends Catalog {
     // codebook fit, fold arithmetic, and census from scratch.
     "q178_ivfpq_incremental" -> ((s, d) => {
       val all = Tables.embeddings(s, d)
-      val base = all.filter(col("vec_id") % 10 =!= 9)
-      val batch = all.filter(col("vec_id") % 10 === 9)
-      val km = Tables.ensureMaterialized(s, "ivfpq_coarse",
-        Tables.contentKey(s"$d/embeddings.parquet", "k8it2base9"))(
-        Similarity.kmeansFit(base, "vec_id", "embedding", k = 8, iters = 2))
-      val state = Tables.ensureMaterialized(s, "ivfpq_state",
-        Tables.contentKey(s"$d/embeddings.parquet", "km8m4kc8it2base9"))(
-        Similarity.ivfPqState(base, "vec_id", "embedding", km,
-          m = 4, kc = 8, iters = 2))
+      val batch = all.filter(ModelFolds.isBatch)
+      val km = ModelFolds.coarse(s, d, all, whole = false)
+      val state = ModelFolds.ivfPqState(s, d, all, km, whole = false)
       val folded = Similarity.ivfPqFold(state, batch, "vec_id", "embedding",
         km)
-      val cbs = folded.select("subspace", "cell", "centroid").collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toArray))
-        .toSeq
-      val census = Similarity.ivfPqEncode(all, "vec_id", "embedding", km, cbs)
-        .select(posexplode(col("codes")).as(Seq("subspace", "cell")))
-        .groupBy("subspace", "cell")
-        .agg(count(lit(1)).as("encoded_full"))
-      folded.select(col("subspace"), col("cell"), col("n").as("n_total"),
-          expr("aggregate(zip_with(centroid, sequence(1, size(centroid)), " +
-            "(c, i) -> c * i), 0L, (a, x) -> a + x)").as("cw_weighted"))
-        .join(state.select(col("subspace"), col("cell"),
-          col("n").as("n_base")), Seq("subspace", "cell"))
-        .join(census, Seq("subspace", "cell"), "left")
-        .select(col("subspace").cast("long").as("subspace"),
-          col("cell").cast("long").as("cell"), col("n_base"),
-          (col("n_total") - col("n_base")).as("n_batch"), col("n_total"),
-          col("cw_weighted"),
-          coalesce(col("encoded_full"), lit(0L)).as("encoded_full"))
+      val cbs = Similarity.collectCodebooks(folded)
+      ModelFolds.foldReport(state, folded, ModelFolds.census(
+        Similarity.ivfPqEncode(all, "vec_id", "embedding", km, cbs),
+        "encoded_full"))
     }),
 
     // ---- incremental OPQ maintenance (fold into the energy ranking) --------
@@ -1303,15 +1373,11 @@ object DataPipelineQueries extends Catalog {
       val spark = s
       import spark.implicits._
       val all = Tables.embeddings(s, d)
-      val base = all.filter(col("vec_id") % 10 =!= 9)
-      val batch = all.filter(col("vec_id") % 10 === 9)
-      val state = Tables.ensureMaterialized(s, "opq_energy",
-        Tables.contentKey(s"$d/embeddings.parquet", "energybase9"))(
-        Similarity.energyState(base, "vec_id", "embedding"))
+      val state = ModelFolds.energyState(s, d, all, whole = false)
+      val batch = all.filter(ModelFolds.isBatch)
       val folded = Similarity.energyFold(state, batch, "vec_id", "embedding")
-      val m = 4
-      val perm = Similarity.permutationFromState(folded, m)
-      val sub = perm.length / m
+      val perm = Similarity.permutationFromState(folded, ModelFolds.M)
+      val sub = perm.length / ModelFolds.M
       val posRows = perm.zipWithIndex
         .map { case (dim, p) => (p + 1L, (p / sub).toLong, dim) }
         .toDF("pos", "subspace", "dim")
@@ -1337,33 +1403,14 @@ object DataPipelineQueries extends Catalog {
     // codeword checksum, and the survivor re-encode census under it.
     "q184_pq_retract" -> ((s, d) => {
       val all = Tables.embeddings(s, d)
-      val takedown = all.filter(col("vec_id") % 10 === 9)
-      val survivors = all.filter(col("vec_id") % 10 =!= 9)
-      val state = Tables.ensureMaterialized(s, "pq_state_all",
-        Tables.contentKey(s"$d/embeddings.parquet", "m4kc8it2all"))(
-        Similarity.pqState(all, "vec_id", "embedding",
-          m = 4, kc = 8, iters = 2))
+      val (survivors, takedown) = ModelFolds.split(all)
+      val state = ModelFolds.pqState(s, d, all, whole = true)
       val unfolded = Similarity.pqUnfold(state, takedown, "vec_id",
         "embedding")
-      val cbs = unfolded.select("subspace", "cell", "centroid").collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toArray))
-        .toSeq
-      val census = Similarity.pqEncode(survivors, "vec_id", "embedding", cbs)
-        .select(posexplode(col("codes")).as(Seq("subspace", "cell")))
-        .groupBy("subspace", "cell")
-        .agg(count(lit(1)).as("encoded_survivors"))
-      unfolded.select(col("subspace"), col("cell"), col("n").as("n_after"),
-          expr("aggregate(zip_with(centroid, sequence(1, size(centroid)), " +
-            "(c, i) -> c * i), 0L, (a, x) -> a + x)").as("cw_weighted"))
-        .join(state.select(col("subspace"), col("cell"),
-          col("n").as("n_full")), Seq("subspace", "cell"))
-        .join(census, Seq("subspace", "cell"), "left")
-        .select(col("subspace").cast("long").as("subspace"),
-          col("cell").cast("long").as("cell"), col("n_full"),
-          (col("n_full") - col("n_after")).as("n_takedown"), col("n_after"),
-          col("cw_weighted"),
-          coalesce(col("encoded_survivors"), lit(0L))
-            .as("encoded_survivors"))
+      val cbs = Similarity.collectCodebooks(unfolded)
+      ModelFolds.retractReport(state, unfolded, ModelFolds.census(
+        Similarity.pqEncode(survivors, "vec_id", "embedding", cbs),
+        "encoded_survivors"))
     }),
 
     // ---- IVF-PQ retraction (unfold in the frozen residual space) -----------
@@ -1376,37 +1423,15 @@ object DataPipelineQueries extends Catalog {
     // retracted codebooks.
     "q185_ivfpq_retract" -> ((s, d) => {
       val all = Tables.embeddings(s, d)
-      val takedown = all.filter(col("vec_id") % 10 === 9)
-      val survivors = all.filter(col("vec_id") % 10 =!= 9)
-      val km = Tables.ensureMaterialized(s, "ivfpq_coarse_all",
-        Tables.contentKey(s"$d/embeddings.parquet", "k8it2all"))(
-        Similarity.kmeansFit(all, "vec_id", "embedding", k = 8, iters = 2))
-      val state = Tables.ensureMaterialized(s, "ivfpq_state_all",
-        Tables.contentKey(s"$d/embeddings.parquet", "km8m4kc8it2all"))(
-        Similarity.ivfPqState(all, "vec_id", "embedding", km,
-          m = 4, kc = 8, iters = 2))
+      val (survivors, takedown) = ModelFolds.split(all)
+      val km = ModelFolds.coarse(s, d, all, whole = true)
+      val state = ModelFolds.ivfPqState(s, d, all, km, whole = true)
       val unfolded = Similarity.ivfPqUnfold(state, takedown, "vec_id",
         "embedding", km)
-      val cbs = unfolded.select("subspace", "cell", "centroid").collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toArray))
-        .toSeq
-      val census = Similarity.ivfPqEncode(survivors, "vec_id", "embedding",
-          km, cbs)
-        .select(posexplode(col("codes")).as(Seq("subspace", "cell")))
-        .groupBy("subspace", "cell")
-        .agg(count(lit(1)).as("encoded_survivors"))
-      unfolded.select(col("subspace"), col("cell"), col("n").as("n_after"),
-          expr("aggregate(zip_with(centroid, sequence(1, size(centroid)), " +
-            "(c, i) -> c * i), 0L, (a, x) -> a + x)").as("cw_weighted"))
-        .join(state.select(col("subspace"), col("cell"),
-          col("n").as("n_full")), Seq("subspace", "cell"))
-        .join(census, Seq("subspace", "cell"), "left")
-        .select(col("subspace").cast("long").as("subspace"),
-          col("cell").cast("long").as("cell"), col("n_full"),
-          (col("n_full") - col("n_after")).as("n_takedown"), col("n_after"),
-          col("cw_weighted"),
-          coalesce(col("encoded_survivors"), lit(0L))
-            .as("encoded_survivors"))
+      val cbs = Similarity.collectCodebooks(unfolded)
+      ModelFolds.retractReport(state, unfolded, ModelFolds.census(
+        Similarity.ivfPqEncode(survivors, "vec_id", "embedding", km, cbs),
+        "encoded_survivors"))
     }),
 
     // ---- OPQ retraction (unfold the energy ranking) -------------------------
@@ -1422,15 +1447,11 @@ object DataPipelineQueries extends Catalog {
       val spark = s
       import spark.implicits._
       val all = Tables.embeddings(s, d)
-      val takedown = all.filter(col("vec_id") % 10 === 9)
-      val state = Tables.ensureMaterialized(s, "opq_energy_all",
-        Tables.contentKey(s"$d/embeddings.parquet", "energyall"))(
-        Similarity.energyState(all, "vec_id", "embedding"))
-      val unfolded = Similarity.energyUnfold(state, takedown, "vec_id",
-        "embedding")
-      val m = 4
-      val perm = Similarity.permutationFromState(unfolded, m)
-      val sub = perm.length / m
+      val state = ModelFolds.energyState(s, d, all, whole = true)
+      val unfolded = Similarity.energyUnfold(state,
+        all.filter(ModelFolds.isBatch), "vec_id", "embedding")
+      val perm = Similarity.permutationFromState(unfolded, ModelFolds.M)
+      val sub = perm.length / ModelFolds.M
       val posRows = perm.zipWithIndex
         .map { case (dim, p) => (p + 1L, (p / sub).toLong, dim) }
         .toDF("pos", "subspace", "dim")

@@ -69,6 +69,50 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
           .partitionBy("query_id").orderBy("rank")))
       .filter($"prev".isNotNull && $"prev" < $"cosine")
     assert(bad.count() === 0)
+
+    // every search entry point shares the contract, on INT ids too: at
+    // most k rows per query (per sweep arm), ranks 1..r without gaps,
+    // non-increasing scores within a query, no self-match
+    val iv = vecs.select($"vec_id".cast("int").as("vec_id"), $"embedding")
+    val iq = iv.filter($"vec_id" % 20 === 0)
+    val cent = iv.filter($"vec_id" % 20 === 7)
+    val cbs = Similarity.collectCodebooks(Similarity.pqFit(vecs, "vec_id",
+      "embedding", m = 4, kc = 4, iters = 1))
+    val (ci, cv, qi, qv) = ("vec_id", "embedding", "vec_id", "embedding")
+    val entries: Seq[(String, () => DataFrame)] = Seq(
+      "knnExact" -> (() => Similarity.knnExact(iv, iq, ci, cv, qi, qv, k)),
+      "hardNegatives" -> (() => Similarity.hardNegatives(iv, iq, ci, cv,
+        qi, qv, k, maxCosMicro = 300000L)),
+      "knnIvf" -> (() => Similarity.knnIvf(iv, iq, ci, cv, qi, qv,
+        cent, "vec_id", "embedding", k, nprobe = 2)),
+      "hardNegativesIvf" -> (() => Similarity.hardNegativesIvf(iv, iq, ci,
+        cv, qi, qv, cent, "vec_id", "embedding", k, nprobe = 2,
+        maxCosMicro = 300000L)),
+      "knnIvfSweep" -> (() => Similarity.knnIvfSweep(iv, iq, ci, cv, qi, qv,
+        cent, "vec_id", "embedding", k, nprobes = Seq(1, 3))),
+      "pqTopK" -> (() => Similarity.pqTopK(iv, iq, ci, cv, qi, qv, cbs, k)),
+      "ivfPqTopK" -> (() => Similarity.ivfPqTopK(iv, iq, ci, cv, qi, qv,
+        cent, "vec_id", "embedding", cbs, k, nprobe = 2)),
+      "knnRerank" -> (() => Similarity.knnRerank(iv, iq, ci, cv, qi, qv,
+        k, m = 2)))
+    entries.foreach { case (name, run) =>
+      val out = run()
+      val arm = if (out.columns.contains("nprobe")) $"nprobe" else lit(0L)
+      val score = if (out.columns.contains("adc_dot")) $"adc_dot" else $"cosine"
+      val rows = out.select(arm.cast("long"), $"query_id".cast("long"),
+          $"rank", $"neighbor_id", score.cast("double"))
+        .as[(Long, Long, Long, Long, Double)].collect()
+      assert(rows.nonEmpty, name)
+      rows.groupBy(r => (r._1, r._2)).foreach { case ((_, q), g) =>
+        val byRank = g.sortBy(_._3)
+        assert(byRank.length <= k, s"$name: query $q has ${g.length} rows")
+        assert(byRank.map(_._3).toSeq === (1L to byRank.length.toLong),
+          s"$name: query $q ranks ${byRank.map(_._3).toSeq}")
+        assert(byRank.sliding(2).forall(p => p.length < 2 || p(0)._5 >= p(1)._5),
+          s"$name: query $q scores ${byRank.map(_._5).toSeq}")
+        assert(!g.exists(_._4 == q), s"$name: query $q matched itself")
+      }
+    }
   }
 
   test("hardNegatives: near-positives excluded before the heap, ranks " +
@@ -120,6 +164,21 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
         centroids, "vec_id", "embedding", k = k, nprobe = nCells)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     assert(full === exact)
+    // the same holds with the hard-negative cut: hardNegativesIvf at a
+    // full probe is hardNegatives, row for row
+    def hn(df: DataFrame) = df.select("query_id", "rank", "neighbor_id",
+      "cosine").as[(Long, Long, Long, Double)].collect().toSet
+    val cut = 300000L
+    val hnExact = hn(Similarity.hardNegatives(vecs, queries,
+      "vec_id", "embedding", "vec_id", "embedding", k, maxCosMicro = cut))
+    val hnFull = hn(Similarity.hardNegativesIvf(vecs, queries,
+      "vec_id", "embedding", "vec_id", "embedding",
+      centroids, "vec_id", "embedding", k = k, nprobe = nCells,
+      maxCosMicro = cut))
+    // the cut bites (some exact neighbor is a near-positive) and holds
+    assert(hnExact.map(r => (r._1, r._3)) != exact)
+    assert(hnExact.nonEmpty && hnExact.forall(_._4 < 0.3))
+    assert(hnFull === hnExact)
   }
 
   test("knnIvfSweep arms are bit-identical to standalone knnIvf runs") {
