@@ -141,16 +141,21 @@ object GridNearestJoin {
     partial :+ (if (partial.isEmpty) cellDeg else partial.last * 3)
   }
 
-  /** Exact nearest-dim-row-per-source-row via iterated grid equi-joins.
+  /** Exact nearest dim rows per source row via iterated grid equi-joins.
     *
-    * Same argmin contract as
-    * [[graft.operators.NearestNeighborJoin.nearestOne]] (deterministic:
-    * ordered by quantized distance then `tieBreak`), but the dim side is
-    * hash-partitioned by cell instead of broadcast, so it scales to
-    * dimension tables far beyond the broadcast threshold. One deliberate
-    * divergence: source rows with NULL coordinates are dropped here (they
-    * have no cell), where nearestOne's cross join emits an arbitrary dim
-    * row with NULL distance for them.
+    * Keeps every dim row ranked first (`rank() == 1`) by quantized
+    * distance then `tieBreak`. With a unique `tieBreak` (a dim key) that
+    * is exactly one row, the [[graft.operators.NearestNeighborJoin
+    * .nearestOne]] contract; with an empty `tieBreak` it is every dim row
+    * tied at the minimum distance, the
+    * [[graft.operators.NearestNeighborJoin.nearestAllTies]] contract. The
+    * dim side is hash-partitioned by cell instead of broadcast, so it
+    * scales to dimension tables far beyond the broadcast threshold. Ties
+    * stay exact under certification: a tied row lies at the certified
+    * distance, which is ≤ the ring's guard, so it is inside the same 3×3
+    * neighborhood. One deliberate divergence: source rows with NULL
+    * coordinates are dropped here (they have no cell), where the cross
+    * joins emit dim rows with NULL distance for them.
     *
     * Ring expansion: rows not certified within the 3×3 neighborhood at
     * `cellDeg` are re-joined at 3×`cellDeg` (then 9×, 27×, …) — each ring is
@@ -197,7 +202,7 @@ object GridNearestJoin {
       val best = srcC.join(dimC, Seq("__cell_lat", "__cell_lon"))
         .withColumn("distance", Geo.haversineKmDet(
           col(srcLat), col(dimLat), col(srcLon), col(dimLon)))
-        .withColumn("__nn_rank", row_number().over(w))
+        .withColumn("__nn_rank", rank().over(w))
         .filter(col("__nn_rank") === 1)
         .drop("__nn_rank", "__cell_lat", "__cell_lon")
       if (exhaustive) {

@@ -43,8 +43,7 @@ object Pipeline {
     */
   def run(spark: SparkSession, eventsPath: String, geoPath: String,
           outBase: String, date: String, maxDistanceKm: Double,
-          processedAt: Option[Column] = None,
-          zoneTier: String = "ref"): Unit = {
+          processedAt: Option[Column] = None): Unit = {
     val events = spark.read.parquet(eventsPath)
     val geo = spark.read.parquet(geoPath)
     // date slice read by partition path, as the reference does (:13-16)
@@ -59,8 +58,7 @@ object Pipeline {
       ("recommendations", () =>
         Sink.writePartitionedSorted(
           RecommendationJob.transform(events, eventsAtDate, geo, date,
-            maxDistanceKm, processedAt.getOrElse(current_timestamp()),
-            zoneTier = zoneTier),
+            maxDistanceKm, processedAt.getOrElse(current_timestamp())),
           s"$outBase/recommendations", "zone_id",
           Seq("user_left", "user_right"))))
     // plain threads, not a global pool: 3 tasks, bounded lifetime, and a
@@ -89,29 +87,21 @@ object Pipeline {
     }
   }
 
-  /** CLI surface: events geo outBase date maxDistanceKm [processedAt]
-    * [zoneTier]. The optional 6th arg ("yyyy-MM-dd HH:mm:ss", UTC) pins the
-    * wall-clock instant — same injectable as RecommendationJob.transform's
-    * `processedAt`, reachable from a shell. The optional 7th arg selects
-    * the nearest-zone tier: "grid" forces
-    * [[RecommendationJob.withZoneGrid]] (output-identical on tie-free
-    * data, q148-proven), "auto" decides from input plan stats
-    * ([[RecommendationJob.chooseGridZone]] — what the catalog's grid
-    * faces run), anything else keeps the reference shape.
+  /** CLI surface: events geo outBase date maxDistanceKm [processedAt].
+    * The optional 6th arg ("yyyy-MM-dd HH:mm:ss", UTC) pins the wall-clock
+    * instant — same injectable as RecommendationJob.transform's
+    * `processedAt`, reachable from a shell. Any other argument count is a
+    * usage error. No argument picks an operator: the recommendation mart
+    * chooses its zone attach and channel self-join from the inputs
+    * ([[RecommendationJob.transform]]).
     */
   def runArgs(spark: SparkSession, args: Array[String]): Unit = {
-    require(args.length >= 5,
-      "usage: Pipeline events geo outBase date maxDistanceKm [processedAt] " +
-        "[grid|auto]")
+    require(args.length == 5 || args.length == 6,
+      "usage: Pipeline events geo outBase date maxDistanceKm [processedAt]")
     val Array(eventsPath, geoPath, outBase, date, maxDistance) = args.take(5)
     val processedAt = args.lift(5).map(ts => to_timestamp(lit(ts)))
-    val tier = args.lift(6) match {
-      case Some("grid") => "grid"
-      case Some("auto") => "auto"
-      case _            => "ref"
-    }
     run(spark, eventsPath, geoPath, outBase, date, maxDistance.toDouble,
-      processedAt, zoneTier = tier)
+      processedAt)
   }
 
   def main(args: Array[String]): Unit = {

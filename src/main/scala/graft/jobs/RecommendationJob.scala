@@ -24,7 +24,7 @@ import graft.operators.NearestNeighborJoin
   * partitions by shuffle INPUT bytes; a viral channel is a few MB in, (m/2)² pair
   * rows out through ONE join key). The fix is not salting (a salted self-join
   * misses cross-salt pairs) but the balanced chunk-cell device
-  * ([[possibleSubscribersToCommunicate]]'s "chunk" tier), auto-engaged from a
+  * ([[possibleSubscribersToCommunicate]]'s chunk tier), engaged from a
   * measured hottest-channel statistic ([[chooseChunkedPairs]]).
   */
 object RecommendationJob {
@@ -79,76 +79,44 @@ object RecommendationJob {
   val PairChunk: Long = 2048L
 
   /** Measured hottest-channel membership above which the pair self-join
-    * takes the balanced-chunk tier (auto mode). The estimate is ONE tiny
-    * aggregate over the already-cached distinct (user, channel) frame —
-    * the q134/chooseGridZone posture: a real engine decides the tier from
-    * a measured statistic, because AQE cannot (its skew detection sizes
+    * takes the balanced-chunk tier. The estimate is ONE tiny aggregate over
+    * the distinct (user, channel) frame, run eagerly (an action) — the
+    * q134/chooseGridZone posture: a real engine decides the tier from a
+    * measured statistic, because AQE cannot (its skew detection sizes
     * partitions by shuffle INPUT bytes and a hot channel is a few MB in,
     * (m/2)² pair rows out — structurally invisible). 2·chunk means the
     * tier only engages when at least one channel actually multi-chunks.
+    * [[transform]] decides once per (cached) subscriber frame.
     */
   def chooseChunkedPairs(subs: DataFrame,
-                         pairChunk: Long = PairChunk): Boolean = {
-    // Memoized per (analyzed plan, chunk): with pairTier="auto" the probe
-    // is an EAGER Spark job at DataFrame-CONSTRUCTION time — callers that
-    // build several plans over the same subscriber frame (transform caches
-    // `subs`; direct callers may not) should pay the scan once, not per
-    // construction. WeakHashMap keyed by the analyzed plan object so
-    // retired frames stay collectable. ASSUMES the files behind a
-    // structurally-equal plan are immutable for the session (the fixture
-    // contract everywhere in this repo) — a source rewritten in place
-    // mid-session would return the stale tier, like any plan-statistics
-    // cache would.
-    val plan = subs.queryExecution.analyzed
-    Option(chunkDecisionCache.get(plan)).flatMap(_.get(pairChunk))
-      .getOrElse {
-        // the probe job runs OUTSIDE the map's lock (two threads racing
-        // the same cold plan duplicate a tiny deterministic aggregate —
-        // benign); `merge` then folds the entry in atomically, so neither
-        // thread's (pairChunk -> decided) can be lost to the other's put
-        val decided = subs.groupBy("subscription_channel").count()
-          .agg(max("count")).first() match {
-            case r if r.isNullAt(0) => false
-            case r => r.getLong(0) > 2 * pairChunk
-          }
-        chunkDecisionCache.merge(plan, Map(pairChunk -> decided),
-          (a, b) => a ++ b)
-        decided
+                         pairChunk: Long = PairChunk): Boolean =
+    subs.groupBy("subscription_channel").count()
+      .agg(max("count")).first() match {
+        case r if r.isNullAt(0) => false
+        case r => r.getLong(0) > 2 * pairChunk
       }
-  }
-
-  // weak KEY = the frame's analyzed plan (strongly held by its
-  // QueryExecution, so the entry lives exactly as long as some DataFrame
-  // over that plan does)
-  private val chunkDecisionCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        Map[Long, Boolean]]())
 
   /** Candidate pairs for `date`: share a channel, never messaged, within
     * `maxDistanceKm` of each other's last position (project_step_3.py:98-141).
-    */
-  /** `emitPeerId = false` reproduces the reference quirk exactly (both
+    *
+    * `emitPeerId = false` reproduces the reference quirk exactly (both
     * output columns carry the left user, project_step_3.py:134-135); with
     * `emitPeerId = true`, `user_right` carries the actual peer.
     *
-    * `pairTier` selects the channel self-join shape: "ref" = the
-    * reference's single-key join (pair fan-out lands on whichever task
-    * owns the channel once the frame outgrows broadcast — at 100 TB one
-    * viral channel = (m/2)² pair rows through one sort-merge key), "chunk"
-    * = the balanced chunk-cell join (identical pair set, work bounded per
-    * cell), "auto" = measure the hottest channel ([[chooseChunkedPairs]])
-    * and pick. NOTE: "auto" runs that probe as an EAGER Spark job at
-    * DataFrame-construction time (memoized per analyzed plan of `subs`,
-    * so repeated constructions over one frame pay once; `transform`
-    * caches `subs`, direct callers building plans lazily should cache
-    * theirs or pass an explicit tier). The two tiers are
-    * row-identical by construction: chunks
-    * are numbered by `user_id` DESC, so a cross-chunk cell meets each
-    * unordered pair exactly once already in the reference's
-    * `user_id > message_to` orientation, and diagonal cells carry both
-    * orientations for the filter to halve — spec-pinned equivalence.
+    * The channel self-join takes one of two shapes, chosen by
+    * [[chooseChunkedPairs]]`(subs, pairChunk)`: the reference's
+    * single-key join (pair fan-out lands on whichever task owns the
+    * channel once the frame outgrows broadcast — at 100 TB one viral
+    * channel = (m/2)² pair rows through one sort-merge key), or the
+    * balanced chunk-cell join (identical pair set, work bounded per cell).
+    * The decision is an EAGER Spark job at DataFrame-construction time;
+    * `transform` caches `subs` first. `pairChunk` is the only knob: specs
+    * force either shape through it. The two shapes are row-identical by
+    * construction: chunks are numbered by `user_id` DESC, so a cross-chunk
+    * cell meets each unordered pair exactly once already in the
+    * reference's `user_id > message_to` orientation, and diagonal cells
+    * carry both orientations for the filter to halve — spec-pinned
+    * equivalence.
     */
   def possibleSubscribersToCommunicate(subs: DataFrame,
                                        communicating: DataFrame,
@@ -156,7 +124,6 @@ object RecommendationJob {
                                        date: String,
                                        maxDistanceKm: Double,
                                        emitPeerId: Boolean = false,
-                                       pairTier: String = "auto",
                                        pairChunk: Long = PairChunk): DataFrame = {
     val wUser = Window.partitionBy("user_id")
     val lastPosition = eventsAtDate
@@ -183,14 +150,7 @@ object RecommendationJob {
     // only the coordinate PAYLOAD moves post-filter.
     val positionedBase = lastPosition.join(subs, Seq("user_id"), "inner")
       .select("subscription_channel", "user_id")
-    val chunked = pairTier match {
-      case "chunk" => true
-      case "ref"   => false
-      case "auto"  => chooseChunkedPairs(subs, pairChunk)
-      case other   => throw new IllegalArgumentException(
-        s"pairTier must be ref|chunk|auto, got $other")
-    }
-    val rawPairs = if (!chunked) {
+    val rawPairs = if (!chooseChunkedPairs(subs, pairChunk)) {
       // REFERENCE TIER. The channel self-join below is a broadcast hash
       // join whose PAIR fan-out runs inside the stream side's existing
       // tasks — and that stream arrives from a date-pruned scan, often ONE
@@ -274,11 +234,11 @@ object RecommendationJob {
         from_utc_timestamp(processedAt, "Australia/Sydney").as("local_time"))
   }
 
-  /** Scale-tier zone attach — same output as [[withZone]] on tie-free
-    * data, different plan. Two structural changes, both 100 TB-motivated:
+  /** Scale-tier zone attach — same rows as [[withZone]], different plan.
+    * Two structural changes, both 100 TB-motivated:
     *
     *  1. The argmin input is the DISTINCT midpoint set, not the pair
-    *     stream: every pair sharing a midpoint gets the same city, so the
+    *     stream: every pair sharing a midpoint gets the same cities, so the
     *     nearest join sees |distinct midpoints| rows (map-side-combined
     *     distinct over two doubles) instead of crossing each of the ~2B
     *     pair rows with every city; one hash join attaches the zone back.
@@ -287,19 +247,18 @@ object RecommendationJob {
     *     city dimension is hash-partitioned, never broadcast, and the
     *     operator survives a dimension beyond the broadcast threshold.
     *
-    * Tie semantics diverge deliberately: [[withZone]] keeps ALL cities
-    * tied at the minimum distance (reference shape, common_func.py:22-24);
-    * this variant emits exactly one deterministic winner per midpoint
-    * (quantized distance, then city id). On data without exact ties —
-    * any real coordinate corpus — the two are row-identical.
+    * One tie rule for both tiers: every city at the minimum distance is
+    * kept, one row each (the reference shape, common_func.py:22-24). The
+    * grid argmin ranks with no tie-break, so `rank() == 1` keeps each tied
+    * city; it judges ties on the distance quantized to 1e-9 km, where
+    * [[withZone]] compares raw doubles.
     *
     * The longitude certification band needs cos(φmax) over BOTH sides'
     * latitudes, so φmax is measured from the data (one tiny agg over the
     * midpoint + city latitudes), not assumed.
     */
   def withZoneGrid(geo: DataFrame, candidates: DataFrame,
-                   processedAt: Column = current_timestamp(),
-                   cellDeg: Double = 0.0): DataFrame = {
+                   processedAt: Column = current_timestamp()): DataFrame = {
     val cities = geo.select(col("id").as("city_id"),
       col("lat").as("lat_city"), col("lon").as("lon_city"))
     // PINNED: the distinct midpoints are read by the φmax agg AND the grid
@@ -320,8 +279,8 @@ object RecommendationJob {
     val zoneOf = graft.ext.GridNearestJoin.nearest(mids, cities,
         srcLat = "lat_avg", dimLat = "lat_city",
         srcLon = "lon_avg", dimLon = "lon_city",
-        srcKey = Seq("lat_avg", "lon_avg"), tieBreak = Seq(col("city_id")),
-        cellDeg = cellDeg, maxAbsLatDeg = maxAbsLat)
+        srcKey = Seq("lat_avg", "lon_avg"), tieBreak = Nil,
+        cellDeg = 0.0, maxAbsLatDeg = maxAbsLat)
       .select(col("lat_avg"), col("lon_avg"), col("city_id"))
     candidates.join(zoneOf, Seq("lat_avg", "lon_avg"))
       .select(col("user_left"), col("user_right"),
@@ -367,35 +326,21 @@ object RecommendationJob {
     dimBytes > DimGridBoundBytes || factBytes > FactGridBoundBytes
   }
 
-  /** `zoneTier`: "ref" = the reference broadcast shape ([[withZone]]),
-    * "grid" = the scale tier ([[withZoneGrid]]), "auto" = decide from
-    * input plan stats ([[chooseGridZone]]). On tie-free data the tiers
-    * are row-identical (see [[withZoneGrid]]); "auto" is what the
-    * catalog's grid faces run, so small inputs stop paying the ladder.
-    *
-    * `pairTier` (ref|chunk|auto, default auto) independently selects the
-    * channel self-join shape — see [[possibleSubscribersToCommunicate]];
-    * the tiers are row-identical on any input, so "auto" is the default
-    * everywhere including the parity faces.
+  /** The whole step-3 mart. Both tier choices come from what the inputs
+    * show, never from a caller's string: the zone attach from plan
+    * statistics ([[chooseGridZone]]: [[withZoneGrid]] above the bounds,
+    * [[withZone]] below — the same rows either way), the channel
+    * self-join from the measured hottest channel
+    * ([[possibleSubscribersToCommunicate]]).
     */
   def transform(events: DataFrame, eventsAtDate: DataFrame, geo: DataFrame,
                 date: String, maxDistanceKm: Double,
-                processedAt: Column = current_timestamp(),
-                zoneTier: String = "ref",
-                pairTier: String = "auto"): DataFrame = {
-    val grid = zoneTier match {
-      case "grid" => true
-      case "ref"  => false
-      case "auto" => chooseGridZone(events, geo)
-      case other  => throw new IllegalArgumentException(
-        s"zoneTier must be ref|grid|auto, got $other")
-    }
+                processedAt: Column = current_timestamp()): DataFrame = {
     val subs = subscribers(events).cache() // reused 2x (ref :32)
     val communicating = communicatingSubscribers(events, subs)
     val candidates = possibleSubscribersToCommunicate(
-      subs, communicating, eventsAtDate, date, maxDistanceKm,
-      pairTier = pairTier)
-    if (grid) withZoneGrid(geo, candidates, processedAt)
+      subs, communicating, eventsAtDate, date, maxDistanceKm)
+    if (chooseGridZone(events, geo)) withZoneGrid(geo, candidates, processedAt)
     else withZone(geo, candidates, processedAt)
   }
 

@@ -64,8 +64,8 @@ object ParityQueries extends Catalog {
         .otherwise(lit(-170) + cityIdx * 211 % 340 + lit(0.05)).as("lon"))
   }
 
-  /** Accessors for [[graft.tools.ZoneTierProbe]] and the perfbench harness,
-    * which builds q75's lake from these frames. */
+  /** Accessors for the perfbench harness, which builds q75's lake from
+    * these frames. */
   def refEventsFullForProbe(s: SparkSession, d: String): DataFrame =
     refEventsFull(s, d)
   def refGeoForProbe(s: SparkSession, d: String): DataFrame = refGeo(s, d)
@@ -478,24 +478,20 @@ object ParityQueries extends Catalog {
           date_format(col("local_time"), "yyyy-MM-dd HH:mm:ss").as("local_time"))
     }),
 
-    // ---- the same DAG with the GRID nearest-zone scale tier ---------------
-    // RecommendationJob.transform(gridZone = true): the midpoint→city
-    // argmin runs as distinct-midpoints → GridNearestJoin cell equi-join →
-    // hash join back, instead of the reference's per-pair broadcast cross
-    // join + window argmin. The oracle is the SAME reference-form SQL as
-    // q49, so a hash match here IS the proof that the scale tier is exact
-    // on this corpus (grid certification + deterministic tie-break).
+    // ---- the same DAG, named for the GRID nearest-zone scale tier --------
+    // RecommendationJob.transform takes the grid zone attach (distinct
+    // midpoints → GridNearestJoin cell equi-join → hash join back) only
+    // above chooseGridZone's plan-stat bounds. At catalog scale the inputs
+    // sit below them, so this face takes the same gated path as q49, under
+    // the SAME reference-form oracle; the grid tier's row identity with the
+    // reference shape, ties included, is pinned in RecommendationSpec.
     "q148_recommendations_grid" -> ((s, d) => {
       val ev = refEventsFull(s, d)
       val atDate = ev.filter(
         to_date(col("event.datetime")) === to_date(lit("2024-01-20")))
       graft.jobs.RecommendationJob.transform(ev, atDate, refGeo(s, d),
           date = "2024-01-20", maxDistanceKm = 2000.0,
-          processedAt = to_timestamp(lit("2024-02-01 00:00:00")),
-          // auto (round-13): plan stats pick the tier — ref shape below
-          // the measured crossover (sf0.1 pays no grid ladder), grid
-          // above it (the sf10 3.0×) — see chooseGridZone
-          zoneTier = "auto")
+          processedAt = to_timestamp(lit("2024-02-01 00:00:00")))
         .select(col("user_left"), col("user_right"), col("zone_id"),
           col("processed_dttm"),
           date_format(col("local_time"), "yyyy-MM-dd HH:mm:ss").as("local_time"))
@@ -541,15 +537,14 @@ object ParityQueries extends Catalog {
             .as("local_time"))
     }),
 
-    // ---- the WHOLE pipeline through real storage, grid nearest-zone tier ---
-    // q75's exact storage round-trip with the 7th CLI arg "grid": the
-    // recommendation mart's midpoint→city argmin runs as q148's distinct-
-    // midpoints → GridNearestJoin → hash-join-back plan INSIDE the
-    // Pipeline/Sink path (round-10 verdict item 2 — the scale tier existed
-    // but the pipeline only wrote the reference shape). Same oracle text as
-    // q49/q75/q148: the tier, the sinks, and the re-read must all be
-    // invisible. Separate scratch base so q75's reference-shape run and
-    // this one never share dynamic-overwrite state within a session.
+    // ---- the WHOLE pipeline through real storage, named for the grid tier --
+    // q75's exact storage round-trip. The recommendation mart takes q148's
+    // grid zone attach only above chooseGridZone's plan-stat bounds; at
+    // catalog scale the inputs sit below them, so this face takes the same
+    // gated path as q75. Same oracle text as q49/q75/q148: the tier, the
+    // sinks, and the re-read must all be invisible. Separate scratch base
+    // so q75's run and this one never share dynamic-overwrite state within
+    // a session.
     "q160_pipeline_grid" -> ((s, d) => {
       val base = s"/tmp/graft_pipeline_grid_${new java.io.File(d).getName}"
       val fs = org.apache.hadoop.fs.FileSystem
@@ -562,7 +557,7 @@ object ParityQueries extends Catalog {
       refGeo(s, d).write.mode("overwrite").parquet(s"$base/geo")
       graft.jobs.Pipeline.runArgs(s, Array(
         s"$base/events", s"$base/geo", s"$base/marts",
-        "2024-01-20", "2000.0", "2024-02-01 00:00:00", "auto"))
+        "2024-01-20", "2000.0", "2024-02-01 00:00:00"))
       val recSchema = org.apache.spark.sql.types.StructType.fromDDL(
         "user_left BIGINT, user_right BIGINT, processed_dttm STRING, " +
           "local_time TIMESTAMP, zone_id INT")

@@ -76,6 +76,28 @@ class GridNearestJoinSpec extends AnyFunSuite with SparkTestBase {
     assert(auto.except(brute).isEmpty && brute.except(auto).isEmpty)
   }
 
+  test("empty tieBreak keeps every tied dim row, like nearestAllTies") {
+    // UserMartSpec's symmetric pattern: sites mirrored across the equator,
+    // so (0, 20) is an EXACT haversine tie; (9, 20) is clearly North
+    val s = Seq((1L, 0.0, 20.0), (2L, 9.0, 20.0)).toDF("id", "lat", "lon")
+    val d = Seq((10L, 10.0, 20.0), (20L, -10.0, 20.0))
+      .toDF("site", "site_lat", "site_lon")
+    def grid(tieBreak: Seq[org.apache.spark.sql.Column]) =
+      GridNearestJoin.nearest(s, d, "lat", "site_lat", "lon", "site_lon",
+          srcKey = Seq("id"), tieBreak = tieBreak,
+          cellDeg = 5.0, maxAbsLatDeg = 15.0)
+        .select($"id", $"site").as[(Long, Long)].collect().toSet
+    try {
+      val allTies = NearestNeighborJoin.nearestAllTies(s, d,
+          "lat", "site_lat", "lon", "site_lon")
+        .select($"id", $"site").as[(Long, Long)].collect().toSet
+      assert(allTies === Set((1L, 10L), (1L, 20L), (2L, 10L)))
+      assert(grid(Nil) === allTies)
+      // a unique tieBreak still returns exactly one row per source row
+      assert(grid(Seq(col("site"))) === Set((1L, 10L), (2L, 10L)))
+    } finally GridNearestJoin.releaseCaches()
+  }
+
   test("ring widths triple until the neighborhood spans the globe") {
     assert(GridNearestJoin.ringWidths(1.0) === Seq(1.0, 3.0, 9.0, 27.0, 81.0, 243.0))
     assert(GridNearestJoin.ringWidths(6.0) === Seq(6.0, 18.0, 54.0, 162.0))

@@ -88,6 +88,17 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(rows.toSeq === Seq((3L, 3L, 1L, runDate)))
   }
 
+  test("runArgs rejects an argument count outside 5..6 with the usage") {
+    // a mistyped extra argument must fail loudly, not run a default
+    val base = Array(eventsPath, geoPath,
+      Files.createTempDirectory("graft-args").toString + "/marts",
+      runDate, "100.0")
+    Seq(base.take(4), base :+ "2022-06-16 00:00:00" :+ "gird").foreach { a =>
+      val e = intercept[IllegalArgumentException](Pipeline.runArgs(spark, a))
+      assert(e.getMessage.contains("usage: Pipeline"), e.getMessage)
+    }
+  }
+
   private def martRows(base: String, mart: String): Seq[String] =
     spark.read.parquet(s"$base/$mart").collect()
       .map(_.toString).sorted.toSeq

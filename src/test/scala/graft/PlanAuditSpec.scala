@@ -67,8 +67,8 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
                                  // centroids) in the residual prep of
                                  // state, fold, and census
       "q185_ivfpq_retract",      // q178's residual prep, retraction side
-      "q148_recommendations_grid") // auto tier (r13): below the stats
-                                   // crossover this IS q49's reference
+      "q148_recommendations_grid") // below chooseGridZone's plan-stat
+                                   // bounds this IS q49's reference
                                    // broadcast nearest-city shape
 
   test("no catalog query plans a CartesianProduct") {
@@ -162,8 +162,9 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
       // q144 the per-city-tz user-mart DAG, q145/q151 the coverage
       // report (q151 = ONE 128-merge batched fit + 3 coverage passes),
       // q146/q147/q152 the ANN recall harness compositions (kmeans +
-      // PQ Lloyd collects ARE the job counts), q148 the grid-zone
-      // recommendation variant (ring expansion + midpoint distinct),
+      // PQ Lloyd collects ARE the job counts), q148 the recommendation
+      // mart named for its grid zone tier (at this scale the plan-stat
+      // gate keeps q49's shape, as for every catalog recommendation face),
       // q149/q150 the ExactSubstr gram/scrub chains
       "q143_stream_enrichment" -> Instrument.Counts(6, 6),
       "q144_user_mart_city_tz" -> Instrument.Counts(17, 17),
@@ -195,8 +196,9 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
       // 11-job bound was measured on the degree plan and the id plan is
       // strictly smaller, no degree pass), q159 = degree tier + shared
       // pinned degree frame (round-10 verdict dedupe, 34 -> 28
-      // stage-jobs), q160 the WHOLE pipeline with the grid zone tier
-      // through real sinks (q75's shape + the grid attach)
+      // stage-jobs), q160 the WHOLE pipeline through real sinks, named for
+      // the grid zone tier (at this scale the plan-stat gate keeps q75's
+      // shape: the same gated path, its own scratch base)
       // re-pinned round 13 after coPurchaseEdges was content-key
       // materialized: the basket self-join's jobs left every graph query
       // (warm counts — the warm-up below makes that the measured state)

@@ -74,19 +74,45 @@ class RecommendationSpec extends AnyFunSuite with SparkTestBase {
   test("gridZone scale tier is row-identical to the reference zone attach") {
     import org.apache.spark.sql.functions._
     val at = to_timestamp(lit("2022-06-15 02:00:00"))
-    val ref = RecommendationJob.transform(
-      allEvents, eventsAtDate, geoDf(spark), d, maxDistanceKm = 5000.0,
-      processedAt = at)
-    val grid = RecommendationJob.transform(
-      allEvents, eventsAtDate, geoDf(spark), d, maxDistanceKm = 5000.0,
-      processedAt = at, zoneTier = "grid") // forced: this test IS the tier proof
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select(col("user_left"), col("user_right"), col("zone_id"),
         col("processed_dttm"),
         date_format(col("local_time"), "yyyy-MM-dd HH:mm:ss"))
       .as[(Long, Long, Long, String, String)].collect().sorted.toSeq
-    try assert(rows(grid) === rows(ref) && rows(ref).nonEmpty)
-    finally graft.ext.GridNearestJoin.releaseCaches()
+    def candidates(ev: org.apache.spark.sql.DataFrame,
+                   atDate: org.apache.spark.sql.DataFrame) = {
+      val subs = RecommendationJob.subscribers(ev)
+      RecommendationJob.possibleSubscribersToCommunicate(subs,
+        RecommendationJob.communicatingSubscribers(ev, subs), atDate, d,
+        5000.0)
+    }
+    // tie input, UserMartSpec's symmetric pattern: two cities mirrored
+    // across the equator at (±10, 20), and users 1 and 2 (one channel,
+    // never messaged) at (±1, 20), so the pair midpoint (0, 20) is an
+    // EXACT haversine tie — the reference rule emits one row per tied city
+    val tieGeo = Seq((1L, "North", 10.0, 20.0), (2L, "South", -10.0, 20.0))
+      .toDF("id", "city", "lat", "lon")
+    val tieCands = candidates(
+      eventsDf(spark, Seq(subscription(1, "chT", "2022-06-01 10:00:00"),
+        subscription(2, "chT", "2022-06-01 10:00:00"))),
+      eventsDf(spark, Seq(msg(1, s"$d 10:00:00", 1.0, 20.0, id = 31, to = 9),
+        msg(2, s"$d 10:00:00", -1.0, 20.0, id = 32, to = 9))))
+    val inputs = Seq(
+      (geoDf(spark), candidates(allEvents, eventsAtDate)), (tieGeo, tieCands))
+    // the grid tier called directly: this test IS the tier proof
+    try {
+      val refs = inputs.map { case (geo, cands) =>
+        val ref = rows(RecommendationJob.withZone(geo, cands, at))
+        assert(rows(RecommendationJob.withZoneGrid(geo, cands, at)) === ref)
+        ref
+      }
+      assert(refs.head.nonEmpty)
+      assert(refs(1).map(_._3) === Seq(1L, 2L), refs(1)) // both tied cities
+      // and the mart itself (below the plan-stat gate here) agrees
+      assert(rows(RecommendationJob.transform(allEvents, eventsAtDate,
+        geoDf(spark), d, maxDistanceKm = 5000.0, processedAt = at)) ===
+        refs.head)
+    } finally graft.ext.GridNearestJoin.releaseCaches()
   }
 
   test("auto zone tier: plan stats pick ref below the crossover, grid above") {
@@ -127,22 +153,25 @@ class RecommendationSpec extends AnyFunSuite with SparkTestBase {
     val (ev, at) = hotChannelFixture(60)
     val subs = RecommendationJob.subscribers(ev)
     val communicating = RecommendationJob.communicatingSubscribers(ev, subs)
-    def pairs(tier: String, chunk: Long) = RecommendationJob
+    // the tier follows pairChunk: 60 members < 2·2048 keeps the reference
+    // shape, 60 > 2·chunk takes the chunk cells
+    def pairs(chunk: Long) = RecommendationJob
       .possibleSubscribersToCommunicate(subs, communicating, at, d, 5000.0,
-        emitPeerId = true, pairTier = tier, pairChunk = chunk)
+        emitPeerId = true, pairChunk = chunk)
       .select("user_left", "user_right")
       .as[(Long, Long)].collect().toSeq.sorted
-    val ref = pairs("ref", RecommendationJob.PairChunk)
+    val ref = pairs(RecommendationJob.PairChunk)
     // chunk 8 over 60 members -> 8 chunks, 36 cells: every pair must meet
     // exactly once, already canonicalized (DESC numbering)
-    val chunked = pairs("chunk", 8L)
+    val chunked = pairs(8L)
     // 60·59/2 viral pairs + (m+1,1),(m+1,2) small-channel pairs − the
     // anti-joined (2,1); the (1,2) pair shares BOTH channels — distinct
     assert(ref.size === 60 * 59 / 2 + 2 - 1)
     assert(chunked === ref)
-    // single-chunk degenerate case: chunk ≥ membership collapses to the
+    // few-chunk case: chunk 24 (60 > 2·24) -> 3 chunks, 6 cells; in both
+    // chunked runs the 3-member "small" channel collapses to its single
     // (ch, 0, 0) cell with zero replication — still identical
-    assert(pairs("chunk", 1024L) === ref)
+    assert(pairs(24L) === ref)
   }
 
   test("auto pair tier: measured hottest-channel membership picks the tier") {
@@ -183,12 +212,14 @@ class RecommendationSpec extends AnyFunSuite with SparkTestBase {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      def maxShare(tier: String): Double = {
+      // the tier follows pairChunk: 120 members < 2·2048 keeps the
+      // reference shape, 120 > 2·16 takes the chunk cells
+      def maxShare(pairChunk: Long): Double = {
         val l = new WriteListener
         spark.sparkContext.addSparkListener(l)
         try {
           RecommendationJob.possibleSubscribersToCommunicate(subs,
-            communicating, at, d, 5000.0, pairTier = tier, pairChunk = 16L)
+            communicating, at, d, 5000.0, pairChunk = pairChunk)
             .count()
           // the listener bus is async: wait until events stop arriving
           val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
@@ -204,8 +235,8 @@ class RecommendationSpec extends AnyFunSuite with SparkTestBase {
         val (_, perTask) = byStage.maxBy(_._2.sum)
         perTask.max.toDouble / perTask.sum
       }
-      val refShare = maxShare("ref")
-      val chunkShare = maxShare("chunk")
+      val refShare = maxShare(RecommendationJob.PairChunk)
+      val chunkShare = maxShare(16L)
       // reference tier: the single viral join key serializes ~all of the
       // 120·119/2 pairs through one task
       assert(refShare > 0.9, s"refShare=$refShare")
