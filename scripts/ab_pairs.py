@@ -4,14 +4,15 @@
 Usage, from inside a graft checkout:
 
     python3 scripts/ab_pairs.py PARENT CHANGE --workload W --pairs N \
-        [--seconds 12] [--trace 0|1] [--json OUT]
+        [--trace 0|1] [--json OUT]
 
 PARENT and CHANGE are git revisions. Each is exported with `git archive`
-into its own temporary tree (under $TMPDIR), built once, and then run with
+into its own temporary tree (under $TMPDIR) and run with
 `python3 perfbench/run.py --workload W --seed i --seconds S --trace T` from
-that tree. Pair i runs both sides on seed i, one after the other; which side
-goes first alternates from pair to pair, so a drift of the host's speed
-lands on both sides alike.
+that tree, S being BENCHMARK.json's `run_seconds`; the first run in each
+tree builds it, outside every metric, as in the benchmark. Pair i runs both
+sides on seed i, one after the other; which side goes first alternates from
+pair to pair, so a drift of the host's speed lands on both sides alike.
 
 Every run is printed. Then, per metric: the parent and change medians, the
 median change/parent ratio over the pairs, the pairs the change wins (by
@@ -47,18 +48,6 @@ def export(root, rev, dest):
         raise SystemExit(f"ab_pairs: git archive {rev} failed")
 
 
-def build(tree):
-    """Build the tree's harness classpath the way perfbench/run.py does, so
-    the first timed pair does not share its minutes with sbt."""
-    env = dict(os.environ, TMPDIR=os.path.join(tree, ".bench_build", "tmp"))
-    env.pop("CARGO_TARGET_DIR", None)
-    os.makedirs(env["TMPDIR"], exist_ok=True)
-    code = ("import sys; sys.path.insert(0, 'perfbench'); "
-            "from benchlib import build; "
-            "build.ensure('.', '.bench_build', 850)")
-    subprocess.run([sys.executable, "-c", code], cwd=tree, env=env, check=True)
-
-
 def run_once(tree, workload, seed, seconds, trace):
     """One perfbench run: (detail, result, None), or (None, None, error)."""
     env = dict(os.environ)
@@ -75,12 +64,13 @@ def run_once(tree, workload, seed, seconds, trace):
         return None, None, f"exit {proc.returncode}: {proc.stderr[-2000:]}"
 
 
-def directions(root):
-    """metric name -> 'lower' | 'higher', from BENCHMARK.json."""
+def benchmark(root):
+    """(run_seconds, metric name -> 'lower' | 'higher'), from BENCHMARK.json."""
     with open(os.path.join(root, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    return {m["name"]: m["better"]
-            for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
+    return bench["run_seconds"], {
+        m["name"]: m["better"]
+        for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
 
 
 def spread(values):
@@ -129,7 +119,6 @@ def main():
     ap.add_argument("change")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, required=True)
-    ap.add_argument("--seconds", type=int, default=12)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--json", help="also write every run and the summary here")
     args = ap.parse_args()
@@ -137,7 +126,7 @@ def main():
         raise SystemExit("ab_pairs: --pairs must be >= 1")
 
     root = git_root()
-    better = directions(root)
+    seconds, better = benchmark(root)
     # short paths: sbt's server socket lives under the tree and a unix
     # socket path must fit in ~100 bytes
     scratch = tempfile.mkdtemp(prefix="ab")
@@ -147,13 +136,11 @@ def main():
     try:
         for side, rev in (("parent", args.parent), ("change", args.change)):
             export(root, rev, trees[side])
-            print(f"building {side} ({rev}) ...", flush=True)
-            build(trees[side])
         for i in range(args.pairs):
             order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
             for side in order:
                 detail, result, error = run_once(
-                    trees[side], args.workload, i, args.seconds, args.trace)
+                    trees[side], args.workload, i, seconds, args.trace)
                 ok = bool(result and result["correct"] and not result["failed"])
                 bad += not ok
                 runs.append({"pair": i, "side": side, "seed": i, "ok": ok,

@@ -151,9 +151,12 @@ object GridNearestJoin {
     * [[graft.operators.NearestNeighborJoin.nearestAllTies]] contract. The
     * dim side is hash-partitioned by cell instead of broadcast, so it
     * scales to dimension tables far beyond the broadcast threshold. Ties
-    * stay exact under certification: a tied row lies at the certified
-    * distance, which is ≤ the ring's guard, so it is inside the same 3×3
-    * neighborhood. One deliberate divergence: source rows with NULL
+    * are judged on the distance rounded to 1e-9 km, and so is
+    * certification: a source row is certified iff its rounded minimum lies
+    * strictly below the ring's rounded guard, so every dim row tied with it
+    * is inside the same 3×3 neighborhood and passes with it (a dim row
+    * outside lies beyond the guard, so it rounds to at least the rounded
+    * guard). One deliberate divergence: source rows with NULL
     * coordinates are dropped here (they have no cell), where the cross
     * joins emit dim rows with NULL distance for them.
     *
@@ -213,7 +216,9 @@ object GridNearestJoin {
         // Any dim row outside this ring's 3×3 neighborhood differs by more
         // than ringDeg in lat (distance > 111·ringDeg) or in lon (distance >
         // 2R·asin(cosφmax·sin Δλ/2)); a best candidate within the smaller of
-        // the two bounds is therefore the global argmin.
+        // the two bounds is therefore the global argmin. Compared rounded,
+        // as the ranking is: a rounded minimum below the rounded guard has
+        // no tie outside the neighborhood, and its tied rows pass together.
         val latGuard = ringDeg * KmPerLatDegFloor
         val lonGuard = 2 * R * math.asin(
           math.cos(maxAbsLatDeg.toRadians) * math.sin((ringDeg / 2).toRadians))
@@ -222,7 +227,8 @@ object GridNearestJoin {
         // read this frame — uncached, Spark would recompute the whole grid
         // join twice per ring. Released via [[Caches.releaseAll]].
         val cached = Caches.pin(best)
-        val certified = cached.filter(col("distance") <= lit(rGuard))
+        val certified = cached.filter(
+          round(col("distance"), 9) < round(lit(rGuard), 9))
         parts += certified
         residue = residue.join(
           certified.select(srcKey.map(col): _*), srcKey, "left_anti")

@@ -234,8 +234,8 @@ object RecommendationJob {
         from_utc_timestamp(processedAt, "Australia/Sydney").as("local_time"))
   }
 
-  /** Scale-tier zone attach — same rows as [[withZone]], different plan.
-    * Two structural changes, both 100 TB-motivated:
+  /** Scale-tier zone attach — same rows as [[withZone]] up to ties closer
+    * than 1e-9 km, different plan. Two structural changes, both 100 TB-motivated:
     *
     *  1. The argmin input is the DISTINCT midpoint set, not the pair
     *     stream: every pair sharing a midpoint gets the same cities, so the
@@ -250,8 +250,9 @@ object RecommendationJob {
     * One tie rule for both tiers: every city at the minimum distance is
     * kept, one row each (the reference shape, common_func.py:22-24). The
     * grid argmin ranks with no tie-break, so `rank() == 1` keeps each tied
-    * city; it judges ties on the distance quantized to 1e-9 km, where
-    * [[withZone]] compares raw doubles.
+    * city; it judges ties on the distance rounded to 1e-9 km, where
+    * [[withZone]] compares raw doubles, so two cities less than 1e-9 km
+    * apart in distance are both kept here and one of them there.
     *
     * The longitude certification band needs cos(φmax) over BOTH sides'
     * latitudes, so φmax is measured from the data (one tiny agg over the
@@ -329,7 +330,8 @@ object RecommendationJob {
   /** The whole step-3 mart. Both tier choices come from what the inputs
     * show, never from a caller's string: the zone attach from plan
     * statistics ([[chooseGridZone]]: [[withZoneGrid]] above the bounds,
-    * [[withZone]] below — the same rows either way), the channel
+    * [[withZone]] below — the same rows either way up to ties closer than
+    * 1e-9 km), the channel
     * self-join from the measured hottest channel
     * ([[possibleSubscribersToCommunicate]]).
     */
