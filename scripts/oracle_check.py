@@ -8,7 +8,7 @@ matching SQL from <verifyOutDir>/oracle_sql.json in DuckDB against the same
 sfDir tables, and compares: columns sorted by name, rows sorted by stringified
 values, cell-by-cell. Reports EXACT / CLOSE (numeric <1e-9 rel) / FAIL.
 """
-import json, sys, math, os
+import json, sys, math, os, shutil
 import duckdb
 import pyarrow.parquet as pq
 
@@ -70,6 +70,11 @@ def main():
     spill = os.environ.get('GRAFT_ORACLE_SPILL', '/tmp/graft_duck_spill')
     os.makedirs(spill, exist_ok=True)
     con.execute(f"SET temp_directory='{spill}'")
+    # ...but never without bound: half the disk free at start. An oracle
+    # that outgrows it (q24's customers x sites at sf0.1) fails its own
+    # query as [FAIL-sql] instead of filling the disk under the rest.
+    con.execute("SET max_temp_directory_size="
+                f"'{shutil.disk_usage(spill).free // 2}B'")
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):

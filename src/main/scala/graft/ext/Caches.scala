@@ -2,14 +2,16 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 
-/** Registry of frames operators pin with `.cache()` mid-plan — currently
-  * the per-ring argmins of [[GridNearestJoin.nearest]] ([[Dedup]] measured
-  * pinning slower than recompute and deliberately registers nothing).
+/** The one registry of frames that operators and queries pin with
+  * `.cache()` mid-plan: every [[pin]] registers its frame, and
+  * [[releaseAll]] unpersists them all.
   *
   * Long-lived sessions call [[releaseAll]] once a returned frame has been
   * materialized — `graft.Verify` does this after each query; `graft.Bench`
   * additionally clears the whole session cache between timed runs
-  * (cold-cache timing), which also drops these entries.
+  * (cold-cache timing), which also drops these entries. Local checkpoints
+  * are not pins: the iterative operators' per-round snapshots are released
+  * by the loop that made them (`graft.operators.Fixpoint`).
   */
 object Caches {
   private val live = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
@@ -28,65 +30,4 @@ object Caches {
     var df = live.poll()
     while (df != null) { df.unpersist(); df = live.poll() }
   }
-
-  /** Release the storage blocks behind a `localCheckpoint`-ed frame
-    * (ADVICE r11: iterative peel/star loops otherwise hold rounds×chains
-    * superseded edge snapshots until the ContextCleaner's next GC-driven
-    * sweep). DANGER: a local checkpoint is NON-RECOMPUTABLE — its lineage
-    * is truncated — so callers must release only frames they created and
-    * fully consumed inside the same loop (never an input, never the frame
-    * they return). No-op on frames that are not checkpoint-backed (the
-    * pattern match falls through), so loop-entry frames derived lazily
-    * from an input are safe to pass.
-    */
-  // Spark WARNs on every unpersist of a localCheckpointed RDD ("lineage
-  // ... truncated and cannot be recomputed after unpersisting") — here
-  // that is the POINT: the frame is provably dead, and ~1 warning per
-  // peel/star round would drown real warnings in every bench log. A
-  // message-scoped DENY filter on exactly that logger drops only this
-  // message (ADVICE r12: a blanket level demotion would also hide
-  // unrelated MapPartitionsRDD warnings — cache eviction, persistence).
-  // Best-effort (a non-log4j2-core classpath just keeps the noise).
-  private lazy val silenceCheckpointWarn: Unit =
-    try {
-      import org.apache.logging.log4j.core.Filter.Result
-      val ctx = org.apache.logging.log4j.LogManager.getContext(false)
-        .asInstanceOf[org.apache.logging.log4j.core.LoggerContext]
-      val cfg = ctx.getConfiguration
-      val name = "org.apache.spark.rdd.MapPartitionsRDD"
-      // LoggerConfig filters see the filter(LogEvent) overload only; the
-      // constructor defaults (NEUTRAL, NEUTRAL) keep every other overload
-      // a no-op, so nothing else on this logger is affected.
-      val deny = new org.apache.logging.log4j.core.filter.AbstractFilter(
-          Result.NEUTRAL, Result.NEUTRAL) {
-        override def filter(e: org.apache.logging.log4j.core.LogEvent)
-            : Result = {
-          val m = if (e.getMessage == null) null
-                  else e.getMessage.getFormattedMessage
-          if (m != null && m.contains(
-              "truncated and cannot be recomputed after unpersisting"))
-            Result.DENY
-          else Result.NEUTRAL
-        }
-      }
-      val ancestor = cfg.getLoggerConfig(name)
-      val target =
-        if (ancestor.getName == name) ancestor
-        else { // give exactly this logger its own (additive) config
-          val lc = new org.apache.logging.log4j.core.config.LoggerConfig(
-            name, ancestor.getLevel, true)
-          cfg.addLogger(name, lc)
-          lc
-        }
-      target.addFilter(deny)
-      ctx.updateLoggers()
-    } catch { case _: Throwable => () }
-
-  def releaseLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        silenceCheckpointWarn
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 }

@@ -30,20 +30,22 @@ import org.apache.spark.sql.functions._
   * Scale shape (the 100 TB contract): each round is two groupBy-min
   * aggregates plus two self-equi-joins on vertex id — no all-pairs step, no
   * driver-side data; intermediate edge sets are `distinct`-bounded by the
-  * current edge count. The per-round convergence check is one scalar
-  * aggregate (count + order-independent xxhash64 checksum — an agg, not a
-  * collect). `localCheckpoint` truncates lineage each round so the plan
-  * stays O(1) deep instead of growing by four joins per iteration; the
-  * checkpoint blocks are freed by the ContextCleaner once superseded.
-  * Convergence telemetry (rounds, final star-edge count) is logged to
-  * stderr per invocation so benchmark rounds expose diameter drift in the
-  * corpus instead of discovering it via a timeout.
+  * current edge count. The rounds run on [[Fixpoint]]: each round's edge
+  * set is a lazy local checkpoint (the plan stays O(1) deep instead of
+  * growing by four joins per round) materialized by the round's one
+  * action, an order-independent (count, xxhash64 checksum) aggregate that
+  * decides convergence; the superseded round's blocks are released there,
+  * and the round count and final star-edge count go to stderr.
   */
 object ConnectedComponents {
 
   /** (id, component) for every vertex appearing in `edges`; `component` is
     * the minimum vertex id of the connected component. Edges are treated as
-    * undirected; self-loops and duplicate edges are harmless.
+    * undirected; self-loops and duplicate edges are harmless. An
+    * unconverged edge set would yield silently WRONG labels, so past
+    * `maxIters` rounds this refuses; with O(log n) convergence 30 rounds
+    * covers any physically storable graph — hitting the cap means a bug
+    * (e.g. non-deterministic input), not a big input.
     */
   def run(edges: DataFrame, src: String, dst: String,
           maxIters: Int = 30): DataFrame =
@@ -69,12 +71,11 @@ object ConnectedComponents {
     * vertices that appear in E1 or E2.
     */
   def merge(labels: DataFrame, idCol: String, compCol: String,
-            newEdges: DataFrame, src: String, dst: String,
-            maxIters: Int = 30): DataFrame =
+            newEdges: DataFrame, src: String, dst: String): DataFrame =
     run(
       labels.select(col(idCol).as("__u"), col(compCol).as("__v"))
         .unionByName(newEdges.select(col(src).as("__u"), col(dst).as("__v"))),
-      "__u", "__v", maxIters)
+      "__u", "__v")
 
   /** FRONTIER-ONLY incremental fold — [[merge]] restricted to the
     * components the batch actually touches (round-16, the graph tier's
@@ -89,11 +90,11 @@ object ConnectedComponents {
     * re-converges |vertices| star edges per day even when the batch
     * touches a handful of clusters; this folds |affected ∪ batch| — the
     * batch's own neighborhood — and the untouched billions ride a
-    * pass-through scan. MEASURED REGIME BOUND (CcFoldProbe at sf1,
-    * BENCH_SF1.json round16_updates): below ~1M stored labels the star
-    * rounds are so cheap that the endpoint semi-joins cost more than the
-    * restriction saves — use [[merge]] there; above it, merge's wall
-    * grows linearly with the untouched mass (every label re-converged
+    * pass-through scan. MEASURED REGIME BOUND (sf1, BENCH_SF1.json
+    * round16_updates.cc_fold_vs_merge_vs_refit): below ~1M stored labels
+    * the star rounds are so cheap that the endpoint semi-joins cost more
+    * than the restriction saves — use [[merge]] there; above it, merge's
+    * wall grows linearly with the untouched mass (every label re-converged
     * per batch) while fold's grows sublinearly (one anti-join scan):
     * 1.6× faster at 10M untouched labels, 2.3× at 30M, widening with
     * scale.
@@ -105,8 +106,7 @@ object ConnectedComponents {
     * `fold(run(E1), E2)` equals `run(E1 ∪ E2)` on vertices of E1 ∪ E2.
     */
   def fold(labels: DataFrame, idCol: String, compCol: String,
-           newEdges: DataFrame, src: String, dst: String,
-           maxIters: Int = 30): DataFrame = {
+           newEdges: DataFrame, src: String, dst: String): DataFrame = {
     // ONE materialization of the batch-edge pipeline (round-16): the
     // edges feed three separate actions — the endpoint set below, the
     // merge's canon checkpoint, and (via touchedRoots) the `untouched`
@@ -124,17 +124,8 @@ object ConnectedComponents {
     val ends = ne.select(col("__s").as("__e"))
       .unionByName(ne.select(col("__d").as("__e")))
       .distinct()
-    val lab = labels.select(col(idCol).as("id"), col(compCol).as("component"))
-    val touchedRoots = lab
-      .join(ends, lab("id") === col("__e"), "left_semi")
-      .select(col("component").as("__root")).distinct()
-    val affected = lab.join(touchedRoots,
-      lab("component") === col("__root"), "left_semi")
-    val untouched = lab.join(touchedRoots,
-      lab("component") === col("__root"), "left_anti")
-    merge(affected, "id", "component", ne, "__s", "__d", maxIters)
-      .withColumn("touched", lit(1))
-      .unionByName(untouched.withColumn("touched", lit(0)))
+    frontier(labels, idCol, compCol, ends, "__e")(
+      merge(_, "id", "component", ne, "__s", "__d"))
   }
 
   /** Vertex RETRACTION — the deletion half of the graph tier (round-16,
@@ -180,32 +171,47 @@ object ConnectedComponents {
     */
   def unfold(labels: DataFrame, idCol: String, compCol: String,
              edges: DataFrame, src: String, dst: String,
-             retracted: DataFrame, rCol: String,
-             maxIters: Int = 30): DataFrame = {
+             retracted: DataFrame, rCol: String): DataFrame = {
     val retr = retracted.select(col(rCol).as("__r")).distinct()
+    frontier(labels, idCol, compCol, retr, "__r") { inTouched =>
+      // surviving members of touched components (the re-derive universe)
+      val affected = inTouched.join(retr, inTouched("id") === col("__r"),
+          "left_anti")
+        .select(col("id"))
+      // stored edges, restricted to touched components and stripped of
+      // retracted endpoints — the only part of the history the stars
+      // re-read
+      val e = edges.select(col(src).as("__u"), col(dst).as("__v"))
+      val surviving = e
+        .join(affected, e("__u") === affected("id"), "left_semi")
+        .join(retr, e("__u") === col("__r"), "left_anti")
+        .join(retr, e("__v") === col("__r"), "left_anti")
+      val rerun = run(surviving, "__u", "__v")
+      // members whose every edge died re-label as their own singleton
+      val isolated = affected.join(rerun, Seq("id"), "left_anti")
+        .select(col("id"), col("id").as("component"))
+      rerun.unionByName(isolated)
+    }
+  }
+
+  /** The frontier split [[fold]] and [[unfold]] share: the stored
+    * components containing a `keys` id (batch endpoints / retracted ids)
+    * are re-derived by `rederive` from their (id, component) rows and
+    * flagged `touched` = 1; every other label passes through with
+    * `touched` = 0, never read by the star rounds.
+    */
+  private def frontier(labels: DataFrame, idCol: String, compCol: String,
+                       keys: DataFrame, key: String)(
+      rederive: DataFrame => DataFrame): DataFrame = {
     val lab = labels.select(col(idCol).as("id"), col(compCol).as("component"))
     val touchedRoots = lab
-      .join(retr, lab("id") === col("__r"), "left_semi")
+      .join(keys, lab("id") === col(key), "left_semi")
       .select(col("component").as("__root")).distinct()
+    val affected = lab.join(touchedRoots,
+      lab("component") === col("__root"), "left_semi")
     val untouched = lab.join(touchedRoots,
       lab("component") === col("__root"), "left_anti")
-    // surviving members of touched components (the re-derive universe)
-    val affected = lab.join(touchedRoots,
-        lab("component") === col("__root"), "left_semi")
-      .join(retr, lab("id") === col("__r"), "left_anti")
-      .select(col("id"))
-    // stored edges, restricted to touched components and stripped of
-    // retracted endpoints — the only part of the history the stars re-read
-    val e = edges.select(col(src).as("__u"), col(dst).as("__v"))
-    val surviving = e
-      .join(affected, e("__u") === affected("id"), "left_semi")
-      .join(retr, e("__u") === col("__r"), "left_anti")
-      .join(retr, e("__v") === col("__r"), "left_anti")
-    val rerun = run(surviving, "__u", "__v", maxIters)
-    // members whose every edge died re-label as their own singleton
-    val isolated = affected.join(rerun, Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("component"))
-    rerun.unionByName(isolated)
+    rederive(affected)
       .withColumn("touched", lit(1))
       .unionByName(untouched.withColumn("touched", lit(0)))
   }
@@ -235,22 +241,6 @@ object ConnectedComponents {
     val vertices = canon.select(col("u").as("id"))
       .unionByName(canon.select(col("v").as("id")))
       .distinct()
-
-    // small-star's contract: strictly (u > v)-oriented working set
-    var e = canon.where(col("u") =!= col("v"))
-
-    // order-independent fingerprint of the edge set: fixpoint when a full
-    // large+small-star round leaves (count, Σ xxhash64(u,v)) unchanged.
-    // DECIMAL(38) because a BIGINT sum of 64-bit hashes overflows silently;
-    // a colliding non-equal set would terminate one round early — with a
-    // 2^-64-per-round probability that is not a practical failure mode.
-    def fingerprint(df: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = df.agg(
-        count(lit(1)),
-        sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).head()
-      (r.getLong(0),
-        Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
-    }
 
     // large-star: m = min(Γ(u) ∪ {u}); every strictly-larger neighbor v of
     // u is re-hung as (v, m). Output stays (bigger, smaller)-oriented
@@ -282,44 +272,12 @@ object ConnectedComponents {
         .distinct()
     }
 
-    var (prevCnt, prevSum) = fingerprint(e)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      // LAZY checkpoint: the fingerprint aggregate right below is the
-      // round's only action and materializes the checkpoint as it runs —
-      // one job per round instead of the eager form's two. Measured small
-      // (q54 7.8 -> 7.6 s, q59 8.0 -> 7.7 s at sf0.1 — rounds are
-      // shuffle-stage-bound, not job-count-bound) but strictly fewer jobs,
-      // and on a busy 1000-executor cluster each saved job is a saved
-      // scheduling round-trip per iteration.
-      val next = smallStar(largeStar(e)).localCheckpoint(false)
-      val (cnt, sm) = fingerprint(next)
-      // next is materialized (the fingerprint aggregate ran); the
-      // superseded round snapshot's blocks are dead — release eagerly
-      // (ADVICE r11) instead of holding rounds-many edge copies until the
-      // ContextCleaner sweeps. Round 0's `e` is a lazy Filter over the
-      // canon checkpoint, which the release helper no-ops on — canon
-      // itself stays live for the `vertices` scan below.
-      graft.ext.Caches.releaseLocalCheckpoint(e)
-      converged = cnt == prevCnt && sm.compareTo(prevSum) == 0
-      e = next
-      prevCnt = cnt
-      prevSum = sm
-      iter += 1
-    }
-    // an unconverged edge set yields silently WRONG labels (one component
-    // reported as several): refuse rather than return them. With O(log n)
-    // convergence, 30 rounds covers any physically storable graph — hitting
-    // the cap means a bug, not a big input.
-    if (!converged)
-      throw new IllegalStateException(
-        s"connected components did not converge in $maxIters " +
-          "large/small-star rounds — this should be impossible for any " +
-          "real graph (O(log n) bound); suspect non-deterministic input")
-    System.err.println(
-      s"[graft] ConnectedComponents: converged in $iter rounds " +
-        s"($prevCnt star edges)")
+    // small-star's contract: strictly (u > v)-oriented working set — a
+    // lazy filter over the canon checkpoint, which stays live for the
+    // `vertices` scan below
+    val (e, rounds) = Fixpoint.run("connected components",
+      canon.where(col("u") =!= col("v")), maxIters)(
+      in => smallStar(largeStar(in)))
 
     // fixpoint edges are stars (non-root → component root); the defensive
     // groupBy-min costs one aggregate and guarantees one row per vertex
@@ -329,6 +287,6 @@ object ConnectedComponents {
     val labels = vertices.join(roots, Seq("id"), "left")
       .select(col("id"),
         coalesce(col("component"), col("id")).as("component"))
-    (labels, iter)
+    (labels, rounds)
   }
 }

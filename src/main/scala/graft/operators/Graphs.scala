@@ -55,8 +55,9 @@ object Graphs {
     * node whose id sits at the MEDIAN of its neighborhood puts
     * (deg/2)² path rows through ONE join key that no partitioning can
     * split (the same single-key pathology as the q49 window finding;
-    * measured round 11 — TriangleHubBench, planted median-id hubs at
-    * sf1: deg-20k hub (10⁸ single-key path rows) 10.3 s vs 3.2 s,
+    * measured round 11 — BENCH_SF1.json
+    * round11_updates.triangle_hub_bench, planted median-id hubs at sf1:
+    * deg-20k hub (10⁸ single-key path rows) 10.3 s vs 3.2 s,
     * deg-60k hub (9·10⁸ rows) 89.4 s vs 4.3 s = 20.8×, identical
     * counts, and the id-oriented wall grows quadratically in hub degree
     * exactly as the in·out product predicts; a LOW-id hub, by contrast,
@@ -94,12 +95,11 @@ object Graphs {
     *
     * Scale shape: each round is ONE mergeable degree aggregation + two
     * semi-joins of the edge frame against the survivor set — all equi-keyed
-    * exchanges, no windows, no collects; `localCheckpoint` truncates
-    * lineage per round (the [[ConnectedComponents]] posture) so the plan
-    * never compounds across rounds. Rounds are data-dependent (≤ the
-    * longest peel cascade); the loop exits as soon as the edge count is
-    * stable and REFUSES (loudly) past `maxRounds` — a silent partial peel
-    * would not be a k-core.
+    * exchanges, no windows, no collects. The rounds run on [[Fixpoint]]
+    * (the [[ConnectedComponents]] loop), so the plan never compounds across
+    * rounds. Rounds are data-dependent (≤ the longest peel cascade); the
+    * loop exits as soon as the edge set is stable and REFUSES (loudly) past
+    * `maxRounds` — a silent partial peel would not be a k-core.
     *
     * Returns (node, core_degree): the surviving nodes with their degree
     * WITHIN the core (≥ k by the fixpoint).
@@ -114,37 +114,23 @@ object Graphs {
     * report) — the composition point [[coreness]] peels incrementally
     * from: by monotonicity core(k) ⊆ core(k−1), so peeling k out of the
     * (k−1)-core's edges reaches the same fixpoint as peeling the whole
-    * graph, over a strictly smaller frame. The returned frame is
-    * localCheckpoint-ed (lineage already truncated); superseded per-round
-    * checkpoints are reclaimed by the ContextCleaner once unreferenced.
+    * graph, over a strictly smaller frame. The returned frame is the
+    * [[Fixpoint]] loop's last local checkpoint (lineage already truncated).
+    * A peel's edge set only shrinks, so the loop's (count, checksum)
+    * fingerprint is stable exactly when the edge count is.
     */
   private[graft] def kCoreEdges(edges: DataFrame, k: Int,
                                 maxRounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    var e = edges.select(col("p1"), col("p2")).localCheckpoint(false)
-    var m = e.count()
-    var rounds = 0
-    var done = false
-    while (!done && rounds < maxRounds) {
+    // the entry checkpoint is taken for this call alone, so the loop may
+    // release it once round 1 supersedes it
+    Fixpoint.run("k-core peel",
+        edges.select(col("p1"), col("p2")).localCheckpoint(false),
+        maxRounds) { e =>
       val surv = degrees(e).filter(col("degree") >= k).select("node")
-      val e2 = e
-        .join(surv.select(col("node").as("p1")), Seq("p1"), "left_semi")
+      e.join(surv.select(col("node").as("p1")), Seq("p1"), "left_semi")
         .join(surv.select(col("node").as("p2")), Seq("p2"), "left_semi")
-        .localCheckpoint(false)
-      val m2 = e2.count()
-      // e2 is materialized; the PREVIOUS round's snapshot (created in this
-      // call, consumed only by the join above) is now dead — release its
-      // blocks instead of waiting for the ContextCleaner (ADVICE r11).
-      // The final frame is never released here: callers read it lazily.
-      graft.ext.Caches.releaseLocalCheckpoint(e)
-      done = m2 == m
-      m = m2
-      e = e2
-      rounds += 1
-    }
-    require(done, s"k-core peel did not converge within $maxRounds rounds " +
-      s"($m edges after round $rounds) — raise maxRounds")
-    e
+    }._1
   }
 
   /** Capped coreness decomposition: per node, the largest k ≤ `maxK` whose

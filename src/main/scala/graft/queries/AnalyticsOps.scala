@@ -274,11 +274,12 @@ object AnalyticsOps extends Catalog {
     // (q110's pair stage as a graph). Round 12 flipped the CATALOG
     // DEFAULT to the degree-oriented tier (round-11 verdict item 6): the
     // id orientation's median-id-hub pathology is measured at 20.8×
-    // (TriangleHubBench, deg-60k hub: 89.4 s vs 4.3 s, quadratic in hub
-    // degree), so the face a user reaches first must be the O(m^1.5)
-    // plan; the id-oriented form stays in the catalog as q158 (same
-    // oracle — the cross-orientation hash match is the exactness proof)
-    // and in AnalyticsSpec's randomized equality control.
+    // (BENCH_SF1.json round11_updates.triangle_hub_bench, deg-60k hub:
+    // 89.4 s vs 4.3 s, quadratic in hub degree), so the face a user
+    // reaches first must be the O(m^1.5) plan; the id-oriented form stays
+    // in the catalog as q158 (same oracle — the cross-orientation hash
+    // match is the exactness proof) and in AnalyticsSpec's randomized
+    // equality control.
     "q116_triangle_counts" -> ((s, d) =>
       Graphs.triangleCountsDegreeOriented(coPurchaseEdges(s, d))),
 

@@ -53,7 +53,7 @@ object DataPipelineQueries extends Catalog {
     TextAnalysis.EnglishStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
 
   /** The q22 family's near-dup edges (q22, q54, q59, q73, q162, q76,
-    * q187–q189 and [[graft.tools.CcFoldProbe]]): word 3-gram shingles on
+    * q187–q189): word 3-gram shingles on
     * the hashed grain, Jaccard ≥ 0.1, df cap 5. The cap is the 100 TB
     * contract (per-shingle df² is the blow-up) and actually bites on this
     * corpus (max df 7 at sf0.01, 25 at sf0.1), so the guarded branch is
@@ -62,7 +62,7 @@ object DataPipelineQueries extends Catalog {
     * base. The DuckDB oracles spell the same values on their own: they
     * are the independent reference.
     */
-  private[graft] object DupEdges {
+  private object DupEdges {
     val N = 3
     val MinJaccard = 0.1
     val MaxShingleDf = 5L

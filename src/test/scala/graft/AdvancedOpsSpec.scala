@@ -200,6 +200,18 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
     assert(rounds <= 10, s"expected O(log n) convergence, took $rounds rounds")
   }
 
+  test("the star rounds leave only the canon and final checkpoints") {
+    // every superseded round snapshot is released once the next one is
+    // materialized; only the canon edge set and the fixpoint stay, both
+    // still read by the returned labels
+    val chain = (1L to 119L).map(i => (i, i + 1))
+    val ((labels, rounds), left) = persistedBy(
+      ConnectedComponents.runCounted(chain.toDF("a", "b"), "a", "b"))
+    assert(rounds > 2)
+    assert(left <= 2, s"$rounds rounds left $left checkpoints")
+    assert(labels.count() === 120L)
+  }
+
   test("merge folds batch edges into prior labels == from-scratch run") {
     // the incremental contract: merge(run(E1), E2) must equal run(E1 ∪ E2)
     // on every vertex either side mentions. E2 exercises all three event

@@ -344,18 +344,29 @@ class AnalyticsSpec extends AnyFunSuite with SparkTestBase {
 
   // ---- k-core ---------------------------------------------------------------
 
+  // K4 on {10,11,12,13} + a pendant chain 13-20-21-22: at k = 2 the
+  // chain's tail 22 has degree 1 and peels, which drops 21 to degree 1,
+  // then 20 — three cascade rounds — while K4 (all degrees 3) survives
+  // intact.
+  private def pendantChain = Seq((10L, 11L), (10L, 12L), (10L, 13L),
+    (11L, 12L), (11L, 13L), (12L, 13L), (13L, 20L), (20L, 21L), (21L, 22L))
+    .toDF("p1", "p2")
+
   test("k-core peel cascades: a pendant chain peels round by round, the " +
       "planted clique survives with within-core degrees") {
-    // K4 on {10,11,12,13} + a pendant chain 13-20-21-22: at k = 2 the
-    // chain's tail 22 has degree 1 and peels, which drops 21 to degree 1,
-    // then 20 — three cascade rounds — while K4 (all degrees 3) survives
-    // intact. The within-core degree must be the K4 degree, not the
-    // original graph's (13 had degree 4 with the chain attached).
-    val g = Seq((10L, 11L), (10L, 12L), (10L, 13L), (11L, 12L),
-      (11L, 13L), (12L, 13L), (13L, 20L), (20L, 21L), (21L, 22L))
-      .toDF("p1", "p2")
-    val out = Graphs.kCore(g, k = 2).as[(Long, Long)].collect().toMap
+    // The within-core degree must be the K4 degree, not the original
+    // graph's (13 had degree 4 with the chain attached).
+    val out = Graphs.kCore(pendantChain, k = 2).as[(Long, Long)]
+      .collect().toMap
     assert(out === Map(10L -> 3L, 11L -> 3L, 12L -> 3L, 13L -> 3L))
+  }
+
+  test("k-core peel leaves only its final snapshot checkpointed") {
+    // four peel rounds (three cascades + the stable one) each superseded
+    // a snapshot; only the fixpoint, read lazily by the result, stays
+    val (core, left) = persistedBy(Graphs.kCore(pendantChain, k = 2))
+    assert(left <= 1, s"the peel left $left checkpoints")
+    assert(core.count() === 4L)
   }
 
   test("k-core: a cycle is its own 2-core; a tree's 2-core is empty; " +
@@ -373,7 +384,7 @@ class AnalyticsSpec extends AnyFunSuite with SparkTestBase {
     // stable round; maxRounds = 2 must throw, not return a partial peel
     val g = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L),
       (5L, 6L), (6L, 7L)).toDF("p1", "p2")
-    val e = intercept[IllegalArgumentException] {
+    val e = intercept[IllegalStateException] {
       Graphs.kCore(g, k = 2, maxRounds = 2).collect()
     }
     assert(e.getMessage.contains("did not converge"))

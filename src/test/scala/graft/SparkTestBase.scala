@@ -8,6 +8,14 @@ import org.apache.spark.sql.functions._
   * settings the mains run. */
 trait SparkTestBase {
   lazy val spark: SparkSession = graft.jobs.JobSession.create("graft tests", 4)
+
+  /** `f`'s result and how many RDDs it left persisted — local checkpoints
+    * included, which register as persisted RDDs when they are taken. */
+  def persistedBy[T](f: => T): (T, Int) = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val r = f
+    (r, spark.sparkContext.getPersistentRDDs.keySet.diff(before).size)
+  }
 }
 
 /** Reference-shaped fixtures (FIXTURES.md §A): messenger events with the nested
