@@ -18,8 +18,9 @@ Every run is printed. Then, per metric: the parent and change medians, the
 median change/parent ratio over the pairs, the pairs the change wins (by
 the metric's direction in BENCHMARK.json), and the parent's inter-quartile
 spread (q3 - q1 of its values, also as a share of its median) — the noise
-the median difference has to clear. Exits 1 if any run failed or reported
-an incorrect result.
+the median difference has to clear. Each end-to-end metric also gets a
+verdict against its BENCHMARK.json `bound` (see `verdict`). Exits 1 if any
+run failed or reported an incorrect result.
 """
 import argparse
 import json
@@ -65,12 +66,14 @@ def run_once(tree, workload, seed, seconds, trace):
 
 
 def benchmark(root):
-    """(run_seconds, metric name -> 'lower' | 'higher'), from BENCHMARK.json."""
+    """(run_seconds, metric name -> 'lower' | 'higher', end-to-end metric
+    name -> bound), from BENCHMARK.json."""
     with open(os.path.join(root, "BENCHMARK.json")) as f:
         bench = json.load(f)
     return bench["run_seconds"], {
         m["name"]: m["better"]
-        for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
+        for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}, {
+        m["name"]: m["bound"] for m in bench.get("end_to_end", [])}
 
 
 def spread(values):
@@ -82,8 +85,28 @@ def spread(values):
     return q3 - q1, (q3 - q1) / med if med else 0.0
 
 
-def summarize(runs, better):
-    """Per-metric rows over the pairs in which both sides produced it."""
+def verdict(parent_median, change_median, wins, pairs, iqr, iqr_rel, lower,
+            bound):
+    """One end-to-end metric's verdict, checked in this order:
+    'gain' when the change wins at least 9/10 of the pairs and its median
+    is better than the parent's by more than the parent's IQR; 'worse' when
+    its median is worse by more than `bound` (a share of the parent's
+    median); 'unresolved' when the parent's IQR over its median exceeds
+    `bound`, too wide a spread to tell; 'within' otherwise."""
+    better_by = parent_median - change_median if lower \
+        else change_median - parent_median
+    if 10 * wins >= 9 * pairs and better_by > iqr:
+        return "gain"
+    if -better_by > bound * abs(parent_median):
+        return "worse"
+    if iqr_rel > bound:
+        return "unresolved"
+    return "within"
+
+
+def summarize(runs, better, bounds=None):
+    """Per-metric rows over the pairs in which both sides produced it; a
+    metric with a bound in `bounds` also gets its `verdict`, others None."""
     rows = []
     names = sorted({n for r in runs if r["result"] for n in r["result"]["metrics"]})
     for name in names:
@@ -102,13 +125,16 @@ def summarize(runs, better):
         lower = better.get(name, "lower") == "lower"
         wins = sum(1 for a, b in both if (b < a if lower else b > a))
         iqr, iqr_rel = spread(parent)
+        p_med, c_med = statistics.median(parent), statistics.median(change)
+        bound = (bounds or {}).get(name)
         rows.append({
             "metric": name, "better": "lower" if lower else "higher",
-            "parent_median": statistics.median(parent),
-            "change_median": statistics.median(change),
+            "parent_median": p_med, "change_median": c_med,
             "median_ratio": statistics.median(ratios) if ratios else None,
             "wins": wins, "pairs": len(both),
             "parent_iqr": iqr, "parent_iqr_rel": iqr_rel,
+            "verdict": None if bound is None else verdict(
+                p_med, c_med, wins, len(both), iqr, iqr_rel, lower, bound),
         })
     return rows
 
@@ -126,7 +152,7 @@ def main():
         raise SystemExit("ab_pairs: --pairs must be >= 1")
 
     root = git_root()
-    seconds, better = benchmark(root)
+    seconds, better, bounds = benchmark(root)
     # short paths: sbt's server socket lives under the tree and a unix
     # socket path must fit in ~100 bytes
     scratch = tempfile.mkdtemp(prefix="ab")
@@ -154,17 +180,17 @@ def main():
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
-    rows = summarize(runs, better)
+    rows = summarize(runs, better, bounds)
     print(f"\n{args.workload}: {args.pairs} pairs, trace {args.trace}, "
           f"{args.parent} -> {args.change}")
     print(f"{'metric':32} {'parent':>10} {'change':>10} {'ratio':>7} "
-          f"{'wins':>6} {'parent IQR':>11} {'IQR/med':>8}")
+          f"{'wins':>6} {'parent IQR':>11} {'IQR/med':>8} verdict")
     for r in rows:
         ratio = "-" if r["median_ratio"] is None else f"{r['median_ratio']:.3f}"
         print(f"{r['metric']:32} {r['parent_median']:10.3f} "
               f"{r['change_median']:10.3f} {ratio:>7} "
               f"{r['wins']:>3}/{r['pairs']:<2} {r['parent_iqr']:11.3f} "
-              f"{r['parent_iqr_rel']:8.3f}")
+              f"{r['parent_iqr_rel']:8.3f} {r['verdict'] or '-'}")
     if args.json:
         with open(args.json, "w") as f:
             json.dump({"workload": args.workload, "parent": args.parent,

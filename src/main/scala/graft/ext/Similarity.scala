@@ -999,9 +999,12 @@ object Similarity {
                      scale: Double = DefaultScale): DataFrame = {
     // lazy-pinned: both sides of the pair self-join consume the assignment,
     // and without the checkpoint each side re-runs the corpus×centroid
-    // argmax scan (the recurring two-consumer re-evaluation trap)
+    // argmax scan (the recurring two-consumer re-evaluation trap). Only
+    // the four columns the pair join reads are checkpointed, not every
+    // corpus column (the raw vector among them).
     val assigned = assignCellsQ(withQuantized(corpus, corpusVec, scale),
         corpusId, centC(centroids, centroidId, centroidVec, scale))
+      .select(col(corpusId), col("cell"), col("__qv"), col("__qn"))
       .localCheckpoint(false)
     val a = assigned.select(col(corpusId).as("id_a"), col("cell"),
       col("__qv").as("__va"), col("__qn").as("__na"))

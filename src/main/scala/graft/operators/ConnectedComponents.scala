@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+import scala.util.DynamicVariable
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Connected components over an undirected edge list — the clustering step a
   * dedup pipeline needs between "near-dup PAIRS" (Jaccard/MinHash/SimHash
@@ -27,15 +31,23 @@ import org.apache.spark.sql.functions._
   * near-clique dedup cluster still converges in ~2 rounds, so the common
   * case pays nothing for the worst-case guarantee.
   *
-  * Scale shape (the 100 TB contract): each round is two groupBy-min
-  * aggregates plus two self-equi-joins on vertex id — no all-pairs step, no
-  * driver-side data; intermediate edge sets are `distinct`-bounded by the
-  * current edge count. The rounds run on [[Fixpoint]]: each round's edge
-  * set is a lazy local checkpoint (the plan stays O(1) deep instead of
-  * growing by four joins per round) materialized by the round's one
-  * action, an order-independent (count, xxhash64 checksum) aggregate that
-  * decides convergence; the superseded round's blocks are released there,
-  * and the round count and final star-edge count go to stderr.
+  * Scale shape (the 100 TB contract): the canonical edge set is
+  * checkpointed once, then one bounded `take` of [[DriverEdges]] + 1 rows
+  * counts it exactly. At most [[DriverEdges]] rows (100K edges, ~35 MB of
+  * driver heap) are labeled by a union-find on the driver and returned as
+  * a local relation: at small scale Spark's per-job fixed cost dominates,
+  * and the star rounds' ~10 jobs per round cost more than the whole graph
+  * (q54 at sf0.01: 25 edges, 37 -> 17 jobs). Above the bound the star
+  * rounds run, with no driver-side data: each round is two groupBy-min
+  * aggregates plus two self-equi-joins on vertex id — no all-pairs step;
+  * intermediate edge sets are `distinct`-bounded by the current edge
+  * count. The rounds run on [[Fixpoint]]: each round's edge set is a lazy
+  * local checkpoint (the plan stays O(1) deep instead of growing by four
+  * joins per round) materialized by the round's one action, an
+  * order-independent (count, xxhash64 checksum) aggregate that decides
+  * convergence; the superseded round's blocks are released there. Either
+  * path prints one stderr line naming itself, with the edge count or the
+  * round count and final star-edge count.
   */
 object ConnectedComponents {
 
@@ -43,9 +55,10 @@ object ConnectedComponents {
     * the minimum vertex id of the connected component. Edges are treated as
     * undirected; self-loops and duplicate edges are harmless. An
     * unconverged edge set would yield silently WRONG labels, so past
-    * `maxIters` rounds this refuses; with O(log n) convergence 30 rounds
-    * covers any physically storable graph — hitting the cap means a bug
-    * (e.g. non-deterministic input), not a big input.
+    * `maxIters` star rounds this refuses (the driver path runs none); with
+    * O(log n) convergence 30 rounds covers any physically storable graph —
+    * hitting the cap means a bug (e.g. non-deterministic input), not a big
+    * input.
     */
   def run(edges: DataFrame, src: String, dst: String,
           maxIters: Int = 30): DataFrame =
@@ -216,8 +229,30 @@ object ConnectedComponents {
       .unionByName(untouched.withColumn("touched", lit(0)))
   }
 
+  /** Canonical edge sets of at most this many rows are labeled on the
+    * driver ([[runCounted]]'s small-graph path); larger ones run the star
+    * rounds. Sized by driver memory: the path holds 349 bytes per edge at
+    * its peak (measured with long ids, 100K random edges over 133K
+    * vertices, local[4]: 108 the taken rows, 31 the id and parent arrays,
+    * 124 the label rows, 86 the local relation built from them), so the
+    * bound keeps it near 35 MB of driver heap. The labels go back as a
+    * local relation of at most twice as many rows, 24 bytes each by
+    * Spark's own size estimate: under 5 MB at the bound, inside the 10 MB
+    * Spark broadcasts by default.
+    */
+  private[graft] val DriverEdges = 100000
+
+  private val starRoundsForced = new DynamicVariable(false)
+
+  /** Runs `f` with every call inside it on the star rounds, whatever its
+    * edge count: specs pin both paths to the same rows with it.
+    */
+  private[graft] def forcingStarRounds[T](f: => T): T =
+    starRoundsForced.withValue(true)(f)
+
   /** As [[run]], additionally returning the number of large+small-star
-    * rounds executed until the edge-set fixpoint (telemetry / specs).
+    * rounds executed until the edge-set fixpoint (telemetry / specs); 0
+    * when the graph was labeled on the driver.
     */
   def runCounted(edges: DataFrame, src: String, dst: String,
                  maxIters: Int = 30): (DataFrame, Int) = {
@@ -232,7 +267,76 @@ object ConnectedComponents {
         least(col(src), col(dst)).as("v"))
       .distinct()
       .localCheckpoint(true)
+    onDriver(canon) match {
+      case Some(labels) => (labels, 0)
+      case None => starRounds(canon, maxIters)
+    }
+  }
 
+  /** The small-graph path: one bounded `take` over the canon checkpoint's
+    * blocks counts its rows exactly (a plan estimate of a pair generator's
+    * output can be off by orders of magnitude); at most [[DriverEdges]]
+    * rows are labeled by a union-find on the driver, each vertex with the
+    * minimum id of its component, and returned as a local relation with
+    * the star path's schema. None — run the star rounds — above the bound,
+    * for non-integral ids, or when a spec forces the rounds.
+    */
+  private def onDriver(canon: DataFrame): Option[DataFrame] = {
+    val u = canon.schema("u")
+    val integral = u.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    if (starRoundsForced.value || !integral) return None
+    val rows = canon.take(DriverEdges + 1)
+    if (rows.length > DriverEdges) return None
+    // canon rows are (greatest, least): a null endpoint makes a self-loop
+    // of the other, two make the one (null, null) row — a null vertex
+    // that the star path labels (null, null) too
+    val ids = rows.iterator.flatMap(r => Iterator(r.get(0), r.get(1)))
+      .collect { case n: Number => n.longValue }.toArray.distinct.sorted
+    val hasNull = rows.exists(r => r.isNullAt(0) || r.isNullAt(1))
+    def at(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    // ids sorted ascending, so the smaller index is the smaller id: every
+    // union hangs the larger root off the smaller and each root is its
+    // component's minimum
+    val parent = Array.tabulate(ids.length)(identity)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    rows.foreach { r =>
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        val a = find(at(r.getAs[Number](0).longValue))
+        val b = find(at(r.getAs[Number](1).longValue))
+        if (a != b) parent(math.max(a, b)) = math.min(a, b)
+      }
+    }
+    val external: Long => Any = u.dataType match {
+      case ByteType => _.toByte
+      case ShortType => _.toShort
+      case IntegerType => _.toInt
+      case _ => identity
+    }
+    val labels = ids.indices.map(i =>
+      Row(external(ids(i)), external(ids(find(i))))) ++
+      (if (hasNull) Seq(Row(null, null)) else Nil)
+    val nullable = u.nullable || canon.schema("v").nullable
+    val schema = StructType(Seq(
+      StructField("id", u.dataType, nullable),
+      StructField("component", u.dataType, nullable)))
+    // the labels no longer read the canon checkpoint
+    Fixpoint.releaseLocalCheckpoint(canon)
+    System.err.println(s"[graft] connected components: union-find on the " +
+      s"driver (${rows.length} edges)")
+    Some(canon.sparkSession.createDataFrame(labels.asJava, schema))
+  }
+
+  /** The distributed path: large/small-star rounds on [[Fixpoint]] over the
+    * canon checkpoint, which the returned labels still read.
+    */
+  private def starRounds(canon: DataFrame, maxIters: Int): (DataFrame, Int) = {
     // every vertex mentioned anywhere in the input: the star fixpoint drops
     // isolated vertices (self-loops, singletons), which must still appear
     // in the output labeled as their own component. Lazily derived from the
@@ -275,7 +379,7 @@ object ConnectedComponents {
     // small-star's contract: strictly (u > v)-oriented working set — a
     // lazy filter over the canon checkpoint, which stays live for the
     // `vertices` scan below
-    val (e, rounds) = Fixpoint.run("connected components",
+    val (e, rounds) = Fixpoint.run("connected components (star rounds)",
       canon.where(col("u") =!= col("v")), maxIters)(
       in => smallStar(largeStar(in)))
 

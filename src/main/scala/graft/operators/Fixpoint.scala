@@ -121,11 +121,13 @@ private[graft] object Fixpoint {
 
   /** Release the storage blocks behind a `localCheckpoint`-ed frame. A
     * local checkpoint is NON-RECOMPUTABLE — its lineage is truncated — so
-    * this is private to the loop, which releases only snapshots it has
-    * superseded. No-op on frames that are not checkpoint-backed (a lazy
-    * entry frame derived from an input).
+    * only the loop, which releases the snapshots it has superseded, and
+    * [[ConnectedComponents]]' small-graph path, which releases the canon
+    * checkpoint once its rows are on the driver, call it. No-op on frames
+    * that are not checkpoint-backed (a lazy entry frame derived from an
+    * input).
     */
-  private def releaseLocalCheckpoint(df: DataFrame): Unit =
+  private[operators] def releaseLocalCheckpoint(df: DataFrame): Unit =
     df.queryExecution.logical match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         silenceCheckpointWarn

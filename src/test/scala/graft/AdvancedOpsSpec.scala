@@ -1,6 +1,7 @@
 package graft
 
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -154,9 +155,25 @@ class AsOfJoinSpec extends AnyFunSuite with SparkTestBase {
 class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
+  /** `f` built on the driver path and again on the forced star rounds:
+    * both must give the same rows under the same schema (column types and
+    * nullability). Returns the rows, sorted.
+    */
+  private def bothPaths(f: => DataFrame): Seq[Row] = {
+    val driver = f
+    val stars = ConnectedComponents.forcingStarRounds(f)
+    assert(driver.schema === stars.schema)
+    val (d, s) = (sortedRows(driver), sortedRows(stars))
+    assert(d === s, "driver union-find and star rounds disagree")
+    d
+  }
+
+  private def sortedRows(df: DataFrame): Seq[Row] =
+    df.collect().toSeq.sortBy(_.toString)
+
   private def components(edges: Seq[(Long, Long)]): Map[Long, Long] =
-    ConnectedComponents.run(edges.toDF("a", "b"), "a", "b")
-      .as[(Long, Long)].collect().toMap
+    bothPaths(ConnectedComponents.run(edges.toDF("a", "b"), "a", "b"))
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("a long chain needs transitive propagation, not one hop") {
     // diameter-7 path: label 1 must travel the whole chain
@@ -178,12 +195,31 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
     assert(comp === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
 
+  test("null endpoints: same rows and schema on both paths") {
+    // greatest/least skip a null, so (null, 5) is 5's self-loop; (null,
+    // null) is one null vertex labeled null. Long and int ids alike; an
+    // empty edge set labels nothing.
+    val longs = bothPaths(ConnectedComponents.run(
+      Seq((None, Some(5L)), (None, None), (Some(1L), Some(2L)))
+        .toDF("a", "b"), "a", "b"))
+    assert(longs === Seq(Row(1L, 1L), Row(2L, 1L), Row(5L, 5L),
+      Row(null, null)).sortBy(_.toString))
+    val ints = bothPaths(ConnectedComponents.run(
+      Seq((None, Some(5)), (None, None), (Some(2), Some(1)))
+        .toDF("a", "b"), "a", "b"))
+    assert(ints === Seq(Row(1, 1), Row(2, 1), Row(5, 5), Row(null, null))
+      .sortBy(_.toString))
+    assert(bothPaths(ConnectedComponents.run(
+      Seq.empty[(Long, Long)].toDF("a", "b"), "a", "b")).isEmpty)
+  }
+
   test("refuses to return partially-propagated labels at the iteration cap") {
     // an 8-vertex chain needs ~4 large/small-star rounds (incl. the
     // fixpoint-confirming one); capping at 2 must refuse, not mislabel
     val chain = (1L to 7L).map(i => (i, i + 1))
     intercept[IllegalStateException] {
-      ConnectedComponents.run(chain.toDF("a", "b"), "a", "b", maxIters = 2)
+      ConnectedComponents.forcingStarRounds(
+        ConnectedComponents.run(chain.toDF("a", "b"), "a", "b", maxIters = 2))
     }
   }
 
@@ -192,8 +228,8 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
     // artifact (boilerplate with incremental counters) in a 100 TB dedup
     // graph. Large/small-star must label it correctly in ~log2(n) rounds.
     val chain = (1L to 119L).map(i => (i, i + 1))
-    val (labels, rounds) =
-      ConnectedComponents.runCounted(chain.toDF("a", "b"), "a", "b")
+    val (labels, rounds) = ConnectedComponents.forcingStarRounds(
+      ConnectedComponents.runCounted(chain.toDF("a", "b"), "a", "b"))
     val comp = labels.as[(Long, Long)].collect().toMap
     assert(comp.keySet === (1L to 120L).toSet)
     assert(comp.values.toSet === Set(1L))
@@ -206,10 +242,122 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
     // still read by the returned labels
     val chain = (1L to 119L).map(i => (i, i + 1))
     val ((labels, rounds), left) = persistedBy(
-      ConnectedComponents.runCounted(chain.toDF("a", "b"), "a", "b"))
+      ConnectedComponents.forcingStarRounds(
+        ConnectedComponents.runCounted(chain.toDF("a", "b"), "a", "b")))
     assert(rounds > 2)
     assert(left <= 2, s"$rounds rounds left $left checkpoints")
     assert(labels.count() === 120L)
+  }
+
+  test("the driver path runs no star round and leaves no checkpoint") {
+    // the labels are a local relation, so the canon checkpoint is released
+    // as soon as its rows are on the driver
+    val chain = (1L to 119L).map(i => (i, i + 1))
+    val ((labels, rounds), left) = persistedBy(
+      ConnectedComponents.runCounted(chain.toDF("a", "b"), "a", "b"))
+    assert(rounds === 0)
+    assert(left === 0, s"the driver path left $left checkpoints")
+    assert(labels.count() === 120L)
+  }
+
+  test("the star rounds' job count stays pinned on a fixed fixture") {
+    // the forced path's shape on the 8-vertex chain: the canon checkpoint,
+    // four star rounds (each its stage-jobs plus the one fingerprint
+    // action) and the final labels. An extra action per round, or a round
+    // that re-derives its input, adds 4+ jobs, past the +2 flutter the
+    // catalog bounds allow (PlanAuditSpec); the driver path pays the
+    // checkpoint and one take, and its labels are a local scan
+    val chain = (1L to 7L).map(i => (i, i + 1)).toDF("a", "b")
+    def shape(f: => (DataFrame, Int)): (Int, Instrument.Counts) = {
+      val (rounds, c) = Instrument.countStages(spark) {
+        val (labels, rounds) = f
+        labels.collect()
+        rounds
+      }
+      (rounds, c)
+    }
+    val (starRounds, star) = shape(ConnectedComponents.forcingStarRounds(
+      ConnectedComponents.runCounted(chain, "a", "b")))
+    val (driverRounds, driver) =
+      shape(ConnectedComponents.runCounted(chain, "a", "b"))
+    info(s"star rounds: $starRounds rounds, ${star.jobs} jobs / " +
+      s"${star.stages} stages; driver: ${driver.jobs} / ${driver.stages}")
+    assert(starRounds === 4 && driverRounds === 0)
+    assert(star.jobs <= StarJobs + 2 && star.stages <= StarJobs + 2,
+      s"star rounds: ${star.jobs} jobs / ${star.stages} stages " +
+        s"(bound $StarJobs)")
+    assert(driver.jobs <= DriverJobs + 2 && driver.stages <= DriverJobs + 2,
+      s"driver path: ${driver.jobs} jobs / ${driver.stages} stages " +
+        s"(bound $DriverJobs)")
+  }
+
+  private val StarJobs = 39
+  private val DriverJobs = 3
+
+  /** Plain-Scala reference: every vertex of `edges` to the minimum id of
+    * its component.
+    */
+  private def reference(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.HashMap[Long, Long]()
+    def root(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = root(p); parent(x) = r; r }
+    }
+    for ((a, b) <- edges) {
+      val (ra, rb) = (root(a), root(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(v => v -> root(v)).toMap
+  }
+
+  /** One seeded graph on 2–13 vertex ids scattered over
+    * [base, base + 1000): a chain, a star, a clique, self-loops only, or a
+    * random multigraph (splits, loops, repeats), plus reversed and
+    * duplicated copies of some of its edges.
+    */
+  private def graph(r: scala.util.Random, kind: Int,
+                    base: Long): Seq[(Long, Long)] = {
+    val n = 2 + r.nextInt(if (kind == 2) 6 else 12)
+    val ids = r.shuffle((0L until 1000L).toVector).take(n).map(base + _)
+    val edges = kind match {
+      case 0 => ids.sliding(2).map(p => (p(0), p(1))).toSeq
+      case 1 => ids.tail.map(v => (ids.head, v))
+      case 2 => for (a <- ids; b <- ids if a < b) yield (a, b)
+      case 3 => ids.map(v => (v, v))
+      case _ => Seq.fill(n)((ids(r.nextInt(n)), ids(r.nextInt(n))))
+    }
+    edges ++ edges.filter(_ => r.nextInt(4) == 0).map(_.swap) ++
+      edges.filter(_ => r.nextInt(6) == 0)
+  }
+
+  test("both paths match a union-find reference on 240 seeded graphs") {
+    // the graphs live in disjoint id ranges, so all of them run as ONE
+    // call per path; even-numbered graphs are int-typed (negative ids
+    // among them) and widen to bigint in the union, odd ones sit past
+    // 2^40
+    val r = new scala.util.Random(20261019L)
+    val graphs = (0 until 240).map { i =>
+      val base = if (i % 2 == 1) (1L << 40) + i * 1000L
+                 else if (i % 4 == 0) -1000L * (i + 1) else 1000L * i
+      graph(r, i % 5, base)
+    }
+    val ints = graphs.indices.filter(_ % 2 == 0).flatMap(graphs)
+      .map { case (a, b) => (a.toInt, b.toInt) }.toDF("a", "b")
+    val longs = graphs.indices.filter(_ % 2 == 1).flatMap(graphs)
+      .toDF("a", "b")
+    val edges = ints.unionByName(longs)
+    val expected = reference(graphs.flatten)
+    def check(path: String, labels: DataFrame): Unit = {
+      val got = labels.as[(Long, Long)].collect()
+      assert(got.length === expected.size, s"$path: one row per vertex")
+      val wrong = got.filter { case (v, c) => !expected.get(v).contains(c) }
+      assert(wrong.isEmpty, s"$path mislabels ${wrong.length} vertices, " +
+        s"e.g. ${wrong.take(5).map { case (v, c) =>
+          s"$v -> $c (want ${expected.get(v)})" }.mkString(", ")}")
+    }
+    check("driver union-find", ConnectedComponents.run(edges, "a", "b"))
+    check("star rounds", ConnectedComponents.forcingStarRounds(
+      ConnectedComponents.run(edges, "a", "b")))
   }
 
   test("merge folds batch edges into prior labels == from-scratch run") {
@@ -219,13 +367,11 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
     // (4→20 — both must adopt root 1), and a brand-new component (100,101).
     val e1 = Seq((1L, 2L), (2L, 3L), (3L, 4L), (20L, 21L), (30L, 31L))
     val e2 = Seq((8L, 9L), (4L, 20L), (9L, 1L), (100L, 101L))
-    val prior = ConnectedComponents.run(e1.toDF("a", "b"), "a", "b")
-    val merged = ConnectedComponents
-      .merge(prior, "id", "component", e2.toDF("a", "b"), "a", "b")
-      .as[(Long, Long)].collect().toMap
-    val scratch = ConnectedComponents
-      .run((e1 ++ e2).toDF("a", "b"), "a", "b")
-      .as[(Long, Long)].collect().toMap
+    val merged = bothPaths(ConnectedComponents.merge(
+        ConnectedComponents.run(e1.toDF("a", "b"), "a", "b"),
+        "id", "component", e2.toDF("a", "b"), "a", "b"))
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val scratch = components(e1 ++ e2)
     assert(merged === scratch)
     assert(merged(21L) === 1L && merged(9L) === 1L) // bridged via 4→20, 9→1
     assert(merged(30L) === 30L)                     // untouched component
@@ -239,13 +385,11 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
     // brand-new vertices all carry touched = 1
     val e1 = Seq((1L, 2L), (2L, 3L), (3L, 4L), (20L, 21L), (30L, 31L))
     val e2 = Seq((8L, 9L), (4L, 20L), (9L, 1L), (100L, 101L))
-    val prior = ConnectedComponents.run(e1.toDF("a", "b"), "a", "b")
-    val folded = ConnectedComponents
-      .fold(prior, "id", "component", e2.toDF("a", "b"), "a", "b")
-      .as[(Long, Long, Int)].collect()
-    val scratch = ConnectedComponents
-      .run((e1 ++ e2).toDF("a", "b"), "a", "b")
-      .as[(Long, Long)].collect().toMap
+    val folded = bothPaths(ConnectedComponents.fold(
+        ConnectedComponents.run(e1.toDF("a", "b"), "a", "b"),
+        "id", "component", e2.toDF("a", "b"), "a", "b"))
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+    val scratch = components(e1 ++ e2)
     assert(folded.map(r => r._1 -> r._2).toMap === scratch)
     val touched = folded.map(r => r._1 -> r._3).toMap
     assert(touched(30L) === 0 && touched(31L) === 0) // pass-through
@@ -268,11 +412,11 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
     val e = Seq((1L, 2L), (2L, 3L), (3L, 4L),
       (20L, 21L), (21L, 22L), (20L, 22L), (30L, 31L), (40L, 41L))
     val retr = Seq(2L, 21L, 40L, 41L, 999L)
-    val labels = ConnectedComponents.run(e.toDF("a", "b"), "a", "b")
-    val out = ConnectedComponents
-      .unfold(labels, "id", "component", e.toDF("a", "b"), "a", "b",
-        retr.toDF("rid"), "rid")
-      .as[(Long, Long, Int)].collect()
+    val out = bothPaths(ConnectedComponents.unfold(
+        ConnectedComponents.run(e.toDF("a", "b"), "a", "b"),
+        "id", "component", e.toDF("a", "b"), "a", "b",
+        retr.toDF("rid"), "rid"))
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     val comp = out.map(x => x._1 -> x._2).toMap
     assert(comp === Map(1L -> 1L, 3L -> 3L, 4L -> 3L,
       20L -> 20L, 22L -> 20L, 30L -> 30L, 31L -> 30L))
