@@ -240,7 +240,7 @@ object ConnectedComponents {
     * Spark's own size estimate: under 5 MB at the bound, inside the 10 MB
     * Spark broadcasts by default.
     */
-  private[graft] val DriverEdges = 100000
+  private val DriverEdges = 100000
 
   private val starRoundsForced = new DynamicVariable(false)
 

@@ -351,9 +351,10 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
       val got = labels.as[(Long, Long)].collect()
       assert(got.length === expected.size, s"$path: one row per vertex")
       val wrong = got.filter { case (v, c) => !expected.get(v).contains(c) }
-      assert(wrong.isEmpty, s"$path mislabels ${wrong.length} vertices, " +
-        s"e.g. ${wrong.take(5).map { case (v, c) =>
-          s"$v -> $c (want ${expected.get(v)})" }.mkString(", ")}")
+      val eg = wrong.take(5).map { case (v, c) =>
+        s"$v -> $c (want ${expected.get(v)})" }.mkString(", ")
+      assert(wrong.length === 0,
+        s"$path mislabels ${wrong.length} vertices, e.g. $eg")
     }
     check("driver union-find", ConnectedComponents.run(edges, "a", "b"))
     check("star rounds", ConnectedComponents.forcingStarRounds(
