@@ -37,36 +37,38 @@ object RecommendationJob {
       .select(col("event.user").as("user_id"), col("event.subscription_channel"))
       .distinct()
 
-  /** Canonicalized pairs of subscribers who already messaged each other within a
-    * shared channel (project_step_3.py:36-96).
+  /** Canonical `(user_id, message_to)` = (greater, lesser) id of every pair
+    * that messaged, in either direction, over all message events with both
+    * ends non-null — the anti-join side of [[possibleSubscribersToCommunicate]].
+    *
+    * The reference (project_step_3.py:36-96) builds a narrower set: pairs
+    * of subscribers who messaged AND share a subscribed channel, via two
+    * subscriber semi-joins, two left joins of the subscription frame, a
+    * three-key (channel, sender, receiver) inner join, a union of both
+    * orientations and the `user_id > message_to` filter. Anti-joining
+    * against this wider set drops exactly the same candidates: every
+    * candidate `(u, m)` comes out of the channel self-join, in both pair
+    * tiers, so `u` and `m` already share a subscribed channel and are
+    * subscribers — for every row the anti-join sees, "messaged and share
+    * a channel" is "messaged". The reference quirks it keeps: the pair is
+    * oriented greater-first, the orientation the candidates carry (:80,
+    * :127); a message with a null end names no pair (the reference's inner
+    * joins drop null keys); a self-message gives `(u, u)`, which no
+    * candidate (`u > m`) can match. `RecommendationSpec` pins the two forms
+    * row-identical on seeded fixtures. The `distinct` stays: its map-side
+    * combine bounds the anti-join's build side on a real message lake.
     */
-  def communicatingSubscribers(events: DataFrame, subs: DataFrame): DataFrame = {
-    val subscriberIds = subs.select(col("user_id")).distinct()
-    val messagePairs = events
-      .filter(col("event_type") === lit("message"))
-      .select(col("event.message_from"), col("event.message_to"))
-      .join(subscriberIds.select(col("user_id").as("message_from")),
-        Seq("message_from"), "inner")
-      .join(subscriberIds.select(col("user_id").as("message_to")),
-        Seq("message_to"), "inner")
+  def messagedPairs(events: DataFrame): DataFrame =
+    events
+      .filter(col("event_type") === lit("message") &&
+        col("event.message_from").isNotNull &&
+        col("event.message_to").isNotNull)
+      .select(
+        greatest(col("event.message_from"), col("event.message_to"))
+          .as("user_id"),
+        least(col("event.message_from"), col("event.message_to"))
+          .as("message_to"))
       .distinct()
-    val senderSide = subs.join(
-      messagePairs.select(col("message_from").as("user_id"), col("message_to")),
-      Seq("user_id"), "left")
-    val receiverSide = subs.join(
-      messagePairs.select(col("message_to").as("user_id"), col("message_from")),
-      Seq("user_id"), "left")
-    val communicate = senderSide
-      .join(receiverSide.select(col("subscription_channel"),
-          col("user_id").as("message_to"), col("message_from").as("user_id")),
-        Seq("subscription_channel", "user_id", "message_to"), "inner")
-      .drop("subscription_channel")
-      .distinct()
-    communicate
-      .unionByName(communicate.select(
-        col("user_id").as("message_to"), col("message_to").as("user_id")))
-      .filter(col("user_id") > col("message_to"))
-  }
 
   /** Membership chunk for the balanced per-channel pair self-join tier:
     * a channel with m members splits into ⌈m/B⌉ chunks and its m² pair
@@ -98,6 +100,7 @@ object RecommendationJob {
 
   /** Candidate pairs for `date`: share a channel, never messaged, within
     * `maxDistanceKm` of each other's last position (project_step_3.py:98-141).
+    * `messaged` is the canonical anti-join side ([[messagedPairs]]).
     *
     * `emitPeerId = false` reproduces the reference quirk exactly (both
     * output columns carry the left user, project_step_3.py:134-135); with
@@ -119,7 +122,7 @@ object RecommendationJob {
     * equivalence.
     */
   def possibleSubscribersToCommunicate(subs: DataFrame,
-                                       communicating: DataFrame,
+                                       messaged: DataFrame,
                                        eventsAtDate: DataFrame,
                                        date: String,
                                        maxDistanceKm: Double,
@@ -193,7 +196,7 @@ object RecommendationJob {
       .filter(col("user_id") > col("message_to"))
       .drop("subscription_channel")
       .distinct()
-      .join(communicating, Seq("user_id", "message_to"), "left_anti")
+      .join(messaged, Seq("user_id", "message_to"), "left_anti")
       // coordinates re-attach AFTER the distinct + anti-join have deduped
       // and pruned the fan-out: two id-keyed equi-joins against the
       // |users|-sized position frame (AQE broadcasts it at daily-batch
@@ -338,10 +341,10 @@ object RecommendationJob {
   def transform(events: DataFrame, eventsAtDate: DataFrame, geo: DataFrame,
                 date: String, maxDistanceKm: Double,
                 processedAt: Column = current_timestamp()): DataFrame = {
-    val subs = subscribers(events).cache() // reused 2x (ref :32)
-    val communicating = communicatingSubscribers(events, subs)
+    // read twice: the pair-tier probe and the positioned subscribers
+    val subs = subscribers(events).cache()
     val candidates = possibleSubscribersToCommunicate(
-      subs, communicating, eventsAtDate, date, maxDistanceKm)
+      subs, messagedPairs(events), eventsAtDate, date, maxDistanceKm)
     if (chooseGridZone(events, geo)) withZoneGrid(geo, candidates, processedAt)
     else withZone(geo, candidates, processedAt)
   }

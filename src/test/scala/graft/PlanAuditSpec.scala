@@ -126,10 +126,13 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     val bounds = Map(
       "q54_dup_clusters" -> Instrument.Counts(17, 17),
       "q59_corpus_dedup" -> Instrument.Counts(18, 18),
-      // 3-thread mart submission jitter — see the q160 note below;
-      // +3 jobs round-17: the pair stream's coordinate re-attach joins
-      // (RecommendationJob payload narrowing, §2.3)
-      "q75_pipeline_sink" -> Instrument.Counts(88, 88),
+      // the recommendation mart anti-joins its candidates against the
+      // canonical messaged pairs (RecommendationJob.messagedPairs), one
+      // aggregate instead of the reference's semi-join/left-join/three-key
+      // join chain: q49 41 -> 19, q75 84 -> 62 measured; q75 carries the
+      // 3-thread mart submission jitter (see the q160 note below)
+      "q49_recommendations" -> Instrument.Counts(19, 19),
+      "q75_pipeline_sink" -> Instrument.Counts(65, 65),
       // q76: two CC calls (prior run + merge), both on the driver; the
       // broadcast-attach flutter that used to be padded per-entry is the
       // assert's uniform +2
@@ -174,9 +177,9 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
       "q145_vocab_coverage" -> Instrument.Counts(9, 9),
       "q146_ann_recall" -> Instrument.Counts(13, 13),
       "q147_pq_recall" -> Instrument.Counts(10, 10),
-      // +1 job round-17: the coordinate re-attach of the narrowed pair
-      // stream (RecommendationJob, §2.3)
-      "q148_recommendations_grid" -> Instrument.Counts(43, 43),
+      // q49's plan under another name: 43 -> 19 with the messaged-pair
+      // anti-join side (see q49 above)
+      "q148_recommendations_grid" -> Instrument.Counts(19, 19),
       "q149_exact_substr_spans" -> Instrument.Counts(5, 5),
       "q150_exact_substr_scrub" -> Instrument.Counts(11, 11),
       "q151_vocab_size_sweep" -> Instrument.Counts(13, 13),
@@ -210,12 +213,13 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
       "q159_clustering_coeff" -> Instrument.Counts(21, 21),
       // q160/q75 submit their three marts from a 3-thread pool (round-16
       // §2.6), so the job count jitters ±1-3 with the scheduling
-      // interleave on top of the uniform +2 AQE flutter — round-17
-      // measured 85 and 86 on back-to-back green runs of IDENTICAL code
-      // (83 when the interleave is quiet). Bound covers the measured
-      // jitter band; a real regression (re-materialized upstream) is
-      // +8-10 jobs and still fails loudly.
-      "q160_pipeline_grid" -> Instrument.Counts(88, 88),
+      // interleave on top of the uniform +2 AQE flutter (the old chain
+      // measured 83-86 on back-to-back runs of IDENTICAL code). With the
+      // messaged-pair anti-join side both measured 62 (parent 84/85);
+      // the bound keeps 3 jobs of that jitter band, and a real
+      // regression (re-materialized upstream) is +8-10 jobs and still
+      // fails loudly.
+      "q160_pipeline_grid" -> Instrument.Counts(65, 65),
       // q161: one pinned exact baseline + three sliced search/recall arms
       "q161_matryoshka_recall" -> Instrument.Counts(16, 16),
       // q162: q59's shingle/CC chain + pinned scored frame + argmax attach

@@ -43,11 +43,13 @@ class RecommendationSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("already-communicating pairs are anti-joined away") {
-    val communicating = RecommendationJob.communicatingSubscribers(
-      allEvents, RecommendationJob.subscribers(allEvents))
-    val pairs = communicating.select("user_id", "message_to")
-      .as[(Long, Long)].collect().toSet
-    assert(pairs === Set((2L, 1L))) // canonicalized: greater id first
+    // 1 -> 2 and 2 -> 1 are one canonical pair (greater id first); the
+    // at-date messages live in eventsAtDate only
+    val pairs = RecommendationJob.messagedPairs(allEvents)
+      .select("user_id", "message_to").as[(Long, Long)].collect().toSeq
+    assert(pairs === Seq((2L, 1L)))
+    // and transform drops it: (2,1) would surface as user_left = 2
+    assert(!mart.select("user_left").as[Long].collect().contains(2L))
   }
 
   test("pairs beyond the radius are filtered (Perth-Sydney > 100 km)") {
@@ -57,10 +59,10 @@ class RecommendationSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("emitPeerId=true carries the real peer instead of the quirk") {
-    val subs = RecommendationJob.subscribers(allEvents)
-    val communicating = RecommendationJob.communicatingSubscribers(allEvents, subs)
     val cands = RecommendationJob.possibleSubscribersToCommunicate(
-      subs, communicating, eventsAtDate, d, 100.0, emitPeerId = true)
+      RecommendationJob.subscribers(allEvents),
+      RecommendationJob.messagedPairs(allEvents), eventsAtDate, d, 100.0,
+      emitPeerId = true)
     val pairs = cands.select("user_left", "user_right")
       .as[(Long, Long)].collect().toSet
     assert(pairs === Set((3L, 1L), (3L, 2L)))
@@ -81,10 +83,9 @@ class RecommendationSpec extends AnyFunSuite with SparkTestBase {
       .as[(Long, Long, Long, String, String)].collect().sorted.toSeq
     def candidates(ev: org.apache.spark.sql.DataFrame,
                    atDate: org.apache.spark.sql.DataFrame) = {
-      val subs = RecommendationJob.subscribers(ev)
-      RecommendationJob.possibleSubscribersToCommunicate(subs,
-        RecommendationJob.communicatingSubscribers(ev, subs), atDate, d,
-        5000.0)
+      RecommendationJob.possibleSubscribersToCommunicate(
+        RecommendationJob.subscribers(ev), RecommendationJob.messagedPairs(ev),
+        atDate, d, 5000.0)
     }
     // tie input, UserMartSpec's symmetric pattern: two cities mirrored
     // across the equator at (±10, 20), and users 1 and 2 (one channel,
@@ -152,11 +153,11 @@ class RecommendationSpec extends AnyFunSuite with SparkTestBase {
   test("chunk pair tier is row-identical to the reference self-join shape") {
     val (ev, at) = hotChannelFixture(60)
     val subs = RecommendationJob.subscribers(ev)
-    val communicating = RecommendationJob.communicatingSubscribers(ev, subs)
+    val messaged = RecommendationJob.messagedPairs(ev)
     // the tier follows pairChunk: 60 members < 2·2048 keeps the reference
     // shape, 60 > 2·chunk takes the chunk cells
     def pairs(chunk: Long) = RecommendationJob
-      .possibleSubscribersToCommunicate(subs, communicating, at, d, 5000.0,
+      .possibleSubscribersToCommunicate(subs, messaged, at, d, 5000.0,
         emitPeerId = true, pairChunk = chunk)
       .select("user_left", "user_right")
       .as[(Long, Long)].collect().toSeq.sorted
@@ -198,7 +199,7 @@ class RecommendationSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     val (ev, at) = hotChannelFixture(120)
     val subs = RecommendationJob.subscribers(ev)
-    val communicating = RecommendationJob.communicatingSubscribers(ev, subs)
+    val messaged = RecommendationJob.messagedPairs(ev)
     class WriteListener extends SparkListener {
       val writes = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
@@ -219,7 +220,7 @@ class RecommendationSpec extends AnyFunSuite with SparkTestBase {
         spark.sparkContext.addSparkListener(l)
         try {
           RecommendationJob.possibleSubscribersToCommunicate(subs,
-            communicating, at, d, 5000.0, pairChunk = pairChunk)
+            messaged, at, d, 5000.0, pairChunk = pairChunk)
             .count()
           // the listener bus is async: wait until events stop arriving
           val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
@@ -259,5 +260,133 @@ class RecommendationSpec extends AnyFunSuite with SparkTestBase {
     assert(lt === Seq("2022-06-15 12:00:00")) // UTC+10 (AEST, June = winter)
     // default path still produces a non-null wall-clock local_time
     assert(mart.filter(col("local_time").isNull).count() === 0)
+  }
+
+  // ---- reference form of the anti-join side (project_step_3.py:36-96) -----
+
+  /** The reference's "communicating" set: subscribers who messaged, in
+    * either direction, AND share a subscribed channel, oriented
+    * `user_id > message_to` — the construction [[RecommendationJob
+    * .messagedPairs]] replaces, kept here as the property's oracle. */
+  private def referenceCommunicating(events: org.apache.spark.sql.DataFrame,
+      subs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions._
+    val subscriberIds = subs.select(col("user_id")).distinct()
+    val messagePairs = events
+      .filter(col("event_type") === lit("message"))
+      .select(col("event.message_from"), col("event.message_to"))
+      .join(subscriberIds.select(col("user_id").as("message_from")),
+        Seq("message_from"), "inner")
+      .join(subscriberIds.select(col("user_id").as("message_to")),
+        Seq("message_to"), "inner")
+      .distinct()
+    val senderSide = subs.join(
+      messagePairs.select(col("message_from").as("user_id"), col("message_to")),
+      Seq("user_id"), "left")
+    val receiverSide = subs.join(
+      messagePairs.select(col("message_to").as("user_id"), col("message_from")),
+      Seq("user_id"), "left")
+    val communicate = senderSide
+      .join(receiverSide.select(col("subscription_channel"),
+          col("user_id").as("message_to"), col("message_from").as("user_id")),
+        Seq("subscription_channel", "user_id", "message_to"), "inner")
+      .drop("subscription_channel")
+      .distinct()
+    communicate
+      .unionByName(communicate.select(
+        col("user_id").as("message_to"), col("message_to").as("user_id")))
+      .filter(col("user_id") > col("message_to"))
+  }
+
+  /** One seeded fixture in its own id range (`base` + 1..12) and its own
+    * channels: 2–8 users over 1–3 channels (a user may sit in several or
+    * in none), a non-subscriber or two, messages in both directions, to
+    * non-subscribers, to oneself and with a null end, and at most one
+    * position per user on `d` (some users have none). Returns (history,
+    * at-date) rows; the history holds the at-date rows too, as a lake does.
+    */
+  private def recFixture(r: scala.util.Random, k: Int): (Seq[EvRow], Seq[EvRow]) = {
+    val base = k * 100L
+    val users = (1 to 2 + r.nextInt(7)).map(base + _)
+    val outsiders = Seq(base + 50, base + 51)
+    val channels = (0 to r.nextInt(3)).map(c => s"f$k-c$c")
+    val subs = for {
+      u <- users; c <- channels if r.nextInt(3) > 0
+    } yield subscription(u, c, "2022-06-01 10:00:00")
+    val ids = users ++ outsiders
+    def pick = ids(r.nextInt(ids.size))
+    val msgs = (0 until r.nextInt(10)).map { i =>
+      val from = pick
+      val row = msg(from, "2022-06-02 10:00:00", syLat, syLon,
+        id = base + i, to = if (r.nextInt(4) == 0) from else pick)
+      r.nextInt(12) match {
+        case 0 => row.copy(message_to = None)
+        case 1 => row.copy(message_from = None)
+        case _ => row
+      }
+    }
+    val at = users.filter(_ => r.nextInt(5) > 0).map { u =>
+      msg(u, s"$d ${10 + r.nextInt(12)}:00:00",
+        syLat + r.nextDouble() * 0.4 - 0.2, syLon + r.nextDouble() * 0.4 - 0.2,
+        id = base + 80 + (u - base), to = if (r.nextBoolean()) pick else -1)
+    }
+    (subs ++ msgs ++ at, at)
+  }
+
+  test("messagedPairs anti-join equals the reference communicating set on " +
+      "240 seeded fixtures") {
+    import org.apache.spark.sql.functions._
+    val r = new scala.util.Random(20261020L)
+    val fixtures = (1 to 240).map(recFixture(r, _))
+    val ev = eventsDf(spark, fixtures.flatMap(_._1)).cache()
+    val at = eventsDf(spark, fixtures.flatMap(_._2)).cache()
+    val subs = RecommendationJob.subscribers(ev).cache()
+    try {
+      val reference = referenceCommunicating(ev, subs)
+      val messaged = RecommendationJob.messagedPairs(ev)
+      def pairSet(df: org.apache.spark.sql.DataFrame) =
+        df.select("user_id", "message_to").as[(Long, Long)].collect().toSet
+      // the sets differ (pairs with an outsider, pairs sharing no channel)
+      // and the reference set is inside the canonical one
+      val refSet = pairSet(reference)
+      val newSet = pairSet(messaged)
+      assert(refSet.nonEmpty && refSet.subsetOf(newSet) && newSet != refSet)
+      val maxKm = 30.0
+      def rows(df: org.apache.spark.sql.DataFrame) = df
+        .select(col("user_left"), col("user_right"), col("lat_avg"),
+          col("lon_avg"), col("processed_dttm"))
+        .as[(Long, Long, Double, Double, String)].collect().sorted.toSeq
+      def cands(side: org.apache.spark.sql.DataFrame, peer: Boolean,
+                chunk: Long) =
+        RecommendationJob.possibleSubscribersToCommunicate(subs, side, at, d,
+          maxKm, emitPeerId = peer, pairChunk = chunk)
+      // both pair tiers (2048: reference self-join; 2: chunk cells, since
+      // the fullest channel has more than 4 members) and both peer columns
+      assert(!RecommendationJob.chooseChunkedPairs(subs))
+      assert(RecommendationJob.chooseChunkedPairs(subs, 2L))
+      for (chunk <- Seq(RecommendationJob.PairChunk, 2L);
+           peer <- Seq(false, true)) {
+        val want = rows(cands(reference, peer, chunk))
+        assert(rows(cands(messaged, peer, chunk)) === want,
+          s"pairChunk=$chunk emitPeerId=$peer")
+        if (chunk == 2L && peer) {
+          // not vacuous: the anti-join removes candidates
+          val unfiltered = rows(cands(reference.limit(0), peer, chunk))
+          assert(want.nonEmpty && unfiltered.size > want.size)
+        }
+      }
+      // and transform itself against the reference-form mart
+      val pinned = to_timestamp(lit("2022-06-15 02:00:00"))
+      assert(!RecommendationJob.chooseGridZone(ev, geoDf(spark)))
+      def mart(df: org.apache.spark.sql.DataFrame) = df
+        .select(col("user_left"), col("user_right"), col("zone_id"),
+          col("processed_dttm"),
+          date_format(col("local_time"), "yyyy-MM-dd HH:mm:ss"))
+        .as[(Long, Long, Long, String, String)].collect().sorted.toSeq
+      assert(mart(RecommendationJob.transform(ev, at, geoDf(spark), d, maxKm,
+        processedAt = pinned)) === mart(RecommendationJob.withZone(
+        geoDf(spark), cands(reference, false, RecommendationJob.PairChunk),
+        pinned)))
+    } finally Seq(subs, at, ev).foreach(_.unpersist())
   }
 }
