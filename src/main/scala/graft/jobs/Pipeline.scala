@@ -31,12 +31,14 @@ object Pipeline {
     * inputs and writes its own path), so they are submitted concurrently
     * from a small thread pool instead of back-to-back (round-16; guide
     * §2.6 "overlap independent jobs"): each mart's plan is a chain of
-    * dozens of small stages whose tails leave most executor slots idle,
-    * and Spark's FIFO scheduler back-fills those slots with the next
-    * mart's tasks. Measured at sf0.1 local[32]: 19.4 s → ~11 s for the
-    * q75 storage round-trip, identical outputs and per-mart plans (the
-    * DAG edges the reference's Airflow graph declares are preserved —
-    * it, too, runs step 1 and step 2 with no ordering edge between them).
+    * small single-stage jobs (at sf0.01: 8 for the user mart, 13 for the
+    * zone mart, 16 for the recommendations) whose tails leave most
+    * executor slots idle, and Spark's FIFO scheduler back-fills those
+    * slots with the other marts' tasks. Measured at sf0.1 local[32]:
+    * 19.4 s → ~11 s for the q75 storage round-trip, identical outputs and
+    * per-mart plans (the DAG edges the reference's Airflow graph declares
+    * are preserved — it, too, runs step 1 and step 2 with no ordering edge
+    * between them).
     * On a real cluster the same overlap fills the tail of every stage
     * with another job's tasks; job descriptions stay correct because
     * Spark's are thread-local.

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.jobs.RecommendationJob
@@ -268,8 +269,8 @@ class RecommendationSpec extends AnyFunSuite with SparkTestBase {
     * either direction, AND share a subscribed channel, oriented
     * `user_id > message_to` — the construction [[RecommendationJob
     * .messagedPairs]] replaces, kept here as the property's oracle. */
-  private def referenceCommunicating(events: org.apache.spark.sql.DataFrame,
-      subs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  private def referenceCommunicating(events: DataFrame,
+      subs: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     val subscriberIds = subs.select(col("user_id")).distinct()
     val messagePairs = events
@@ -298,11 +299,11 @@ class RecommendationSpec extends AnyFunSuite with SparkTestBase {
       .filter(col("user_id") > col("message_to"))
   }
 
-  /** One seeded fixture in its own id range (`base` + 1..12) and its own
+  /** One seeded fixture in its own id range (`base` + 1..99) and its own
     * channels: 2–8 users over 1–3 channels (a user may sit in several or
-    * in none), a non-subscriber or two, messages in both directions, to
-    * non-subscribers, to oneself and with a null end, and at most one
-    * position per user on `d` (some users have none). Returns (history,
+    * in none), two outsiders who subscribe to nothing, messages in both
+    * directions, to outsiders, to oneself and with a null end, and at most
+    * one position per user on `d` (some users have none). Returns (history,
     * at-date) rows; the history holds the at-date rows too, as a lake does.
     */
   private def recFixture(r: scala.util.Random, k: Int): (Seq[EvRow], Seq[EvRow]) = {
@@ -344,7 +345,7 @@ class RecommendationSpec extends AnyFunSuite with SparkTestBase {
     try {
       val reference = referenceCommunicating(ev, subs)
       val messaged = RecommendationJob.messagedPairs(ev)
-      def pairSet(df: org.apache.spark.sql.DataFrame) =
+      def pairSet(df: DataFrame) =
         df.select("user_id", "message_to").as[(Long, Long)].collect().toSet
       // the sets differ (pairs with an outsider, pairs sharing no channel)
       // and the reference set is inside the canonical one
@@ -352,12 +353,11 @@ class RecommendationSpec extends AnyFunSuite with SparkTestBase {
       val newSet = pairSet(messaged)
       assert(refSet.nonEmpty && refSet.subsetOf(newSet) && newSet != refSet)
       val maxKm = 30.0
-      def rows(df: org.apache.spark.sql.DataFrame) = df
+      def rows(df: DataFrame) = df
         .select(col("user_left"), col("user_right"), col("lat_avg"),
           col("lon_avg"), col("processed_dttm"))
         .as[(Long, Long, Double, Double, String)].collect().sorted.toSeq
-      def cands(side: org.apache.spark.sql.DataFrame, peer: Boolean,
-                chunk: Long) =
+      def cands(side: DataFrame, peer: Boolean, chunk: Long) =
         RecommendationJob.possibleSubscribersToCommunicate(subs, side, at, d,
           maxKm, emitPeerId = peer, pairChunk = chunk)
       // both pair tiers (2048: reference self-join; 2: chunk cells, since
@@ -378,7 +378,7 @@ class RecommendationSpec extends AnyFunSuite with SparkTestBase {
       // and transform itself against the reference-form mart
       val pinned = to_timestamp(lit("2022-06-15 02:00:00"))
       assert(!RecommendationJob.chooseGridZone(ev, geoDf(spark)))
-      def mart(df: org.apache.spark.sql.DataFrame) = df
+      def mart(df: DataFrame) = df
         .select(col("user_left"), col("user_right"), col("zone_id"),
           col("processed_dttm"),
           date_format(col("local_time"), "yyyy-MM-dd HH:mm:ss"))
